@@ -434,13 +434,22 @@ _COS = (
 )
 
 
+# rows with a finite, positive norm: the rows operators/ann._normalized
+# keeps (it leaves v NULL for NULL, zero, NaN and inf norms). Without the
+# filter x/0 and NaN norms put NULL/NaN list elements into list_dot_product,
+# which errors on NULLs where Spark drops the row.
+_NORM_OK = """embedding IS NOT NULL
+         AND isfinite(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))
+         AND list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) > 0"""
+
 # normalized-rows CTE mirroring operators/ann._normalized op-for-op
-_NORM_E = """
+_NORM_E = f"""
 e AS (SELECT vec_id,
              list_transform(embedding::DOUBLE[],
                x -> x / sqrt(list_dot_product(embedding::DOUBLE[],
                                               embedding::DOUBLE[]))) AS v
-      FROM embeddings)"""
+      FROM embeddings
+      WHERE {_NORM_OK})"""
 
 
 def embedding_near_dup_sql(threshold: float = 0.4) -> str:
@@ -476,9 +485,9 @@ def embedding_near_dup_lsh_sql(
     distinct (band_idx, band_val) equi-join; verification reuses the
     exact normalized cosine of embedding_near_dup_sql (already
     bit-stable vs Spark's sequential fold). NaN-bearing embeddings are
-    excluded explicitly with isnan(): DuckDB orders NaN above every
-    value (NaN > 0 and NaN >= t are TRUE), while Spark's _normalized
-    drops NaN-norm rows — without the guard the oracle would emit
+    excluded explicitly (_NORM_OK, in both nz and e): DuckDB orders NaN
+    above every value (NaN > 0 and NaN >= t are TRUE), while Spark's
+    _normalized drops NaN-norm rows — without the guard the oracle would emit
     phantom all-bits-set signatures and NaN-cosine pairs (a
     CLAUDE.md-class parity trap, latent because the testdata has no NaN
     embeddings)."""
@@ -494,10 +503,7 @@ WITH {_NORM_E},
 wl(p, pw) AS (VALUES
 {rows}),
 nz AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-       WHERE embedding IS NOT NULL
-         AND NOT isnan(list_dot_product(embedding::DOUBLE[],
-                                        embedding::DOUBLE[]))
-         AND list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) > 0),
+       WHERE {_NORM_OK}),
 sigs AS (
     SELECT vec_id, p // {band_bits} AS band_idx,
            SUM(CASE WHEN list_dot_product(nz.v, wl.pw) >= 0

@@ -58,7 +58,10 @@ def _normalized(
     """Pre-normalize rows in STAGED projections (norm as its own column;
     see pairs._preprocess_features for why nesting the aggregate inside
     the transform lambda explodes codegen). Cosine then becomes one dot
-    per pair — a third of the inline-norms work."""
+    per pair — a third of the inline-norms work. v is NULL unless the
+    norm is finite and positive: Spark orders NaN above +inf, so the
+    upper bound also drops NaN norms, whose all-NaN rows would otherwise
+    pass every `cosine >= t` filter."""
     return (
         df.select(F.col(id_col).alias(id_out), _as_double(vec_col).alias(v_out))
         .withColumn(
@@ -68,7 +71,7 @@ def _normalized(
         .withColumn(
             v_out,
             F.when(
-                F.col("_nrm") > 0,
+                (F.col("_nrm") > 0) & (F.col("_nrm") < float("inf")),
                 F.transform(v_out, lambda x: x / F.col("_nrm")),
             ),
         )
@@ -109,7 +112,9 @@ def ann_topk_bruteforce(
 
     `queries` is small (it is broadcast); the big side streams through a
     broadcast-nested-loop with the dot product in codegen. Deterministic
-    tie-break: (cosine desc, vec_id asc).
+    tie-break: (cosine desc, vec_id asc). Rows whose vector has no
+    finite, positive norm (see `_normalized`) are neither queries nor
+    candidates.
 
     `max_pairs` bounds |emb|·|queries| (one count per side at call time,
     negligible vs the scan it authorizes); None skips the check.
@@ -129,6 +134,7 @@ def ann_topk_bruteforce(
         e.crossJoin(F.broadcast(q))
         .filter(F.col("qid") != F.col("vec_id"))
         .select("qid", "vec_id", dot("qv", "v").alias("cosine"))
+        .filter(F.col("cosine").isNotNull())
     )
     w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("vec_id"))
     return (

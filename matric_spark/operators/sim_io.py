@@ -130,10 +130,12 @@ def sim_write(sf: SimFrame, path: str, file_format: str = "parquet") -> None:
     """Persist all three components (R/sim_read-write.R:42-76):
     parquet = pairs/ + metadata/ + params.json; csv = the reference's
     3-component sidecar layout; iceberg = two real catalog tables
-    (<base>_pairs, <base>_metadata) written with the atomic
-    DataFrameWriterV2 (`writeTo(...).createOrReplace()` — the Iceberg
-    swap is a single metadata commit, so readers never observe a torn
-    SimFrame, unlike parquet's delete-then-write overwrite) with
+    (<base>_pairs, <base>_metadata) written with DataFrameWriterV2
+    (`writeTo(...).createOrReplace()` — each table's swap is a single
+    metadata commit, so a reader never sees a half-written table, unlike
+    parquet's delete-then-write overwrite; the two tables commit
+    separately, so a sim_read between the commits can pair new pairs
+    with old metadata) with
     metric_metadata in the pairs table's properties instead of a
     params.json sidecar. Requires the `graft` catalog registered by
     session.get_spark (iceberg-spark-runtime jar on the classpath)."""

@@ -13,7 +13,7 @@ from matric_spark.session import get_spark  # noqa: E402
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="matric_spark_tests", cpus=8, shuffle_partitions=8)
+    s = get_spark(app_name="matric_spark_tests", cpus=None, shuffle_partitions=8)
     yield s
 
 

@@ -1098,3 +1098,51 @@ def test_funnel_empty_input_returns_zero_counts(spark):
     )
     out = {r.step_idx: r.n_users for r in funnel(df, ["A", "B"]).collect()}
     assert out == {1: 0, 2: 0}
+
+
+def test_exact_embedding_ops_degenerate_norms_match_oracle(spark, tmp_path):
+    """A zero-norm and a NaN embedding are dropped by both engines, in
+    the exact near-dup join and the brute-force top-k: the DuckDB oracle
+    neither errors on x/0 nor emits NaN-cosine pairs, and Spark drops the
+    NaN row instead of matching it."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from matric_spark.duck_oracle import ann_topk_sql, embedding_near_dup_sql
+    from matric_spark.operators.ann import ann_topk_bruteforce, embedding_near_dup
+
+    rows = [
+        (0, [1.0, 0.0, 0.0, 0.0]),
+        (1, [0.999, 0.001, 0.0, 0.0]),
+        (2, [0.0, 1.0, 0.0, 0.0]),
+        (3, [0.0, 0.999, 0.001, 0.0]),
+        (4, [0.0, 0.0, 0.0, 0.0]),            # zero norm
+        (5, [float("nan"), 1.0, 0.0, 0.0]),   # NaN norm
+    ]
+    path = str(tmp_path / "embeddings.parquet")
+    pq.write_table(
+        pa.table({
+            "vec_id": pa.array([r[0] for r in rows], pa.int64()),
+            "embedding": pa.array([r[1] for r in rows], pa.list_(pa.float32())),
+        }),
+        path,
+    )
+    emb = spark.read.parquet(path)
+    sp = {
+        (r.id1, r.id2, round(r.cosine, 6))
+        for r in embedding_near_dup(emb, 0.4).collect()
+    }
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{path}'")
+    duck = set(con.execute(embedding_near_dup_sql(0.4)).fetchall())
+    assert sp == duck
+    assert {(a, b) for a, b, _ in sp} == {(0, 1), (2, 3)}
+
+    sp_topk = {
+        (r.qid, r.vec_id, round(r.cosine, 6), r.rank)
+        for r in ann_topk_bruteforce(emb, emb, k=5).collect()
+    }
+    duck_topk = set(con.execute(ann_topk_sql(5, len(rows))).fetchall())
+    assert sp_topk == duck_topk
+    assert {q for q, *_ in sp_topk} == {0, 1, 2, 3}

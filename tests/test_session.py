@@ -1,0 +1,34 @@
+"""Session-factory policy: the driver JVM's JIT compiler budget."""
+
+from __future__ import annotations
+
+from matric_spark.session import JIT_CAP, _driver_default_java_options
+
+
+def test_driver_jvm_runs_with_jit_cap(spark):
+    """The fixture's driver JVM was launched by get_spark with the cap."""
+    args = (
+        spark.sparkContext._jvm.java.lang.management.ManagementFactory
+        .getRuntimeMXBean().getInputArguments()
+    )
+    assert "-XX:CICompilerCount=2" in list(args)
+
+
+def test_jit_cap_appended_to_spark_defaults(tmp_path, monkeypatch):
+    monkeypatch.setenv("SPARK_CONF_DIR", str(tmp_path))
+    assert _driver_default_java_options() == JIT_CAP
+
+    conf = tmp_path / "spark-defaults.conf"
+    conf.write_text(
+        "# site defaults\n"
+        "spark.driver.memory 4g\n"
+        "spark.driver.defaultJavaOptions   -Dfoo=1 -XX:+UseG1GC\n"
+    )
+    assert _driver_default_java_options() == f"-Dfoo=1 -XX:+UseG1GC {JIT_CAP}"
+
+    conf.write_text("spark.driver.defaultJavaOptions=-Dfoo=2\n")
+    assert _driver_default_java_options() == f"-Dfoo=2 {JIT_CAP}"
+
+    # a site that already chose its own compiler count keeps it
+    conf.write_text("spark.driver.defaultJavaOptions -XX:CICompilerCount=3\n")
+    assert _driver_default_java_options() == "-XX:CICompilerCount=3"

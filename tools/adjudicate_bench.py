@@ -50,6 +50,14 @@ def main() -> None:
     ap.add_argument("--wait-clean", type=float, default=0.85)
     ap.add_argument("--wait-timeout", type=float, default=5400.0)
     args = ap.parse_args()
+    # R03 holds sf0.1 seconds: any other scale makes every vs_r03 ratio
+    # and regression verdict meaningless
+    if os.path.basename(os.path.normpath(args.sf_dir)) != "sf0.1":
+        ap.error(
+            f"--sf-dir {args.sf_dir!r} is not an sf0.1 directory; the "
+            "BENCH_r03 baseline seconds in R03 were measured at sf0.1 "
+            "(local[32]), so ratios against any other scale are meaningless"
+        )
 
     if args.wait_clean > 0:
         pre = wait_clean(2, 8, args.wait_clean, args.wait_timeout)

@@ -192,7 +192,7 @@ def main() -> int:
     import __spark_entry__ as e
     from matric_spark.session import get_spark
 
-    spark = get_spark(cpus=8)
+    spark = get_spark(cpus=None, shuffle_partitions=8)
     con = duckdb.connect()
     for t in ["region", "nation", "customer", "supplier", "part", "orders",
               "lineitem", "events", "documents", "embeddings"]:
