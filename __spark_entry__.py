@@ -1341,8 +1341,10 @@ def q_colstats_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_sketch_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # approximate by design → no exact oracle (rows-only); accuracy and
-    # merge-invariance are bounded in tests/test_sketches.py.
+    # approximate by design → no exact oracle (rows-only): q50/q95 from
+    # `percentile_approx`, distinct counts from a DataSketches HLL. The
+    # bounds oracle (check_oracle.check_sketch_bounds, run in
+    # tests/test_gate.py) and tests/test_sketches.py bound their error.
     from matric_spark.operators.sketches import hll_distinct, tdigest_quantiles
 
     t = transcript_df(spark, sf_dir)
@@ -1359,9 +1361,10 @@ def q_sketch_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_sketch_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Accuracy gate for the mergeable sketches, in the driver's hard
-    signal: per partition, t-digest q50/q95 must land within 5% of the
-    value SPREAD of the exact percentile and HLL distinct within 5%
+    """Accuracy gate for the sketches, in the driver's hard signal: per
+    partition, the `percentile_approx`-based q50/q95 must land within 5%
+    of the value SPREAD of the exact percentile and the DataSketches HLL
+    distinct within 5%
     relative of the exact distinct — the same envelopes
     tests/test_sketches.py and check_oracle.py's bounds oracle pin.
     Violation rows must be empty (oracle: empty set). Transitivity: the

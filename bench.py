@@ -28,11 +28,10 @@ def run_once(fn, spark, sf_dir) -> float:
 
 def setup_transcripts(spark, sf_dir: str) -> str:
     """Materialize the derived transcript table to partitioned parquet
-    once and point SPARK_GRAFT_TRANSCRIPTS_PARQUET at it — the shared
-    prelude for every measurement harness (bench.py,
-    tools/adjudicate_bench.py), kept in ONE place so the materialization
-    contract (partition column, env var) cannot drift between them. In
-    production this table EXISTS as Iceberg storage; locally it derives
+    once and point SPARK_GRAFT_TRANSCRIPTS_PARQUET at it, kept in ONE
+    place so the materialization contract (partition column, env var)
+    cannot drift. In production this table EXISTS as Iceberg storage;
+    locally it derives
     from lineitem⋈orders, and without materializing every query would
     re-run that derivation join. Parquet (vs .cache()) keeps column
     pruning, predicate pushdown, and AQE on the read side — the plan

@@ -11,15 +11,19 @@ Layout
 ------
 - ``session``     SparkSession factory (AQE, Arrow, UTC, skew-join configs)
 - ``schema``      transcript schema + annotation/feature split helpers
-- ``datagen``     deterministic synthetic transcript generator (seeded)
 - ``checks``      the validation suite: column stats, uniqueness,
                   referential integrity, sequence invariants, drift
 - ``operators``   matric parity: sim_calculate / sim_filter / sim_collate /
-                  sim_metrics / sim_metrics_signif / sparse pairwise
-- ``functions``   reusable column expressions (BH adjust, ranks, KS, PSI,
-                  sketches)
-- ``sources``     table IO layer (Iceberg when jars present, partitioned
-                  Parquet fallback) + state table for checkpoint/resume
+                  sim_metrics / sim_metrics_signif / sparse pairwise (BH
+                  adjust, ranks), plus dedup, ANN and sketches
+- ``functions``   reusable column expressions (hashing, text statistics,
+                  vector math) and the Arrow pandas UDFs
+- ``sources``     testdata loaders, the transcript view and the table IO
+                  layer (Iceberg when jars present, partitioned Parquet
+                  fallback)
+- ``state``       state table for checkpoint/resume
+- ``streaming``   Structured Streaming validation, sessionizer and dedup
+- ``duck_oracle`` DuckDB twins of the operators for the correctness gate
 """
 
 __version__ = "0.1.0"

@@ -146,8 +146,8 @@ def robust_outliers(
     `quantile_cont`, the colstats_quantiles parity recipe) + broadcast
     joins of the tiny per-partition stats back onto the scan. Exact
     percentile buffers each group's values, so at full corpus scale
-    substitute the mergeable t-digest (operators/sketches.py) for the
-    two median passes — the detector's join/filter shape is unchanged.
+    substitute the approximate `tdigest_quantiles` (operators/sketches.py)
+    for the two median passes — the detector's join/filter shape is unchanged.
     Partitions whose MAD is 0 (over half the rows share one value) are
     skipped — an integer-free but exact-equality guard that both
     engines evaluate identically.

@@ -1,204 +1,71 @@
-"""Mergeable sketches: t-digest quantiles and HyperLogLog distinct.
+"""Per-group sketches: approximate quantiles, distinct counts and a
+count-min sketch.
 
-Why custom sketches when `percentile_approx` / `approx_count_distinct`
-exist: the suite checkpoints per-partition METRIC STATE to the state
-table and must merge it across runs/partitions without re-reading data
-(SURVEY §7.3c — "sketch mergeability = the distributed substitute for
-matric's driver-global aggregations"). Spark's built-ins don't expose
-their partials; these do, as plain array/binary columns any later job
-can fold. Built-ins remain the cross-check (tests/test_sketches.py).
+`tdigest_quantiles` and `hll_distinct` keep their historical names but
+are each one grouped native aggregate: a map-side partial phase, one
+shuffle of sketch-sized partials, no Python worker. Nothing persists
+their partials (the state table keeps only exact drift counts), so the
+old reason for hand-rolling mergeable sketches no longer applies.
 
-Execution shape — the classic two-phase combine:
-  phase 1: one partial sketch per (group, input-split)  [applyInPandas,
-           vectorized numpy; the split id is the salt, so a hot group
-           fans out across reducers]
-  phase 2: fold partials per group                      [applyInPandas]
-Both phases shuffle only sketch-sized rows (KBs), never raw values.
-
-t-digest follows Dunning's merging-digest: centroid size bound
-4·n·q·(1−q)/δ; HLL is standard (p-bit registers, harmonic estimate,
-linear-counting small-range correction). Hashing uses
-pd.util.hash_pandas_object — vectorized, deterministic, 64-bit.
+- Quantiles use `percentile_approx` (accuracy 10000), not the
+  `kll_sketch_*` functions: KLL compaction is randomised, so the same
+  input gives different answers from run to run, while
+  `percentile_approx` repeats exactly for an identical partition layout.
+  On its own it returns an input value (nearest rank), which on groups
+  of ~75 rows misses the interpolated q95 by more than 5 % of the
+  spread. So it is read at _KNOTS + 1 evenly spaced probabilities and
+  interpolated linearly at rank p·(n-1): the answer equals `np.quantile`
+  for groups of up to _KNOTS values, and for larger groups stays between
+  the two knots around that rank. NaN is ignored, like NULL.
+- Distinct counts use DataSketches HLL (`hll_sketch_agg`, lg K = 12),
+  not `approx_count_distinct`: it is exact below ~384 distinct values
+  per group, where HLL++ already errs by a few percent. Above that, a
+  single-partition input can estimate slightly differently from a
+  merged one (n = 5000: 5001 on 1 partition, 5033 on 4 or 13).
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-TD_DELTA = 100  # t-digest compression (≈ #centroids)
-HLL_P = 12      # 4096 registers, ~1.6% standard error
-
-
-# ------------------------------------------------------------- t-digest
-
-
-def _td_compress(means: np.ndarray, weights: np.ndarray, delta: int):
-    """Merge sorted (mean, weight) centroids under the size bound."""
-    order = np.argsort(means, kind="stable")
-    means, weights = means[order], weights[order]
-    n = weights.sum()
-    out_m: list[float] = []
-    out_w: list[float] = []
-    cur_m, cur_w, cum = float(means[0]), float(weights[0]), 0.0
-    for m, w in zip(means[1:], weights[1:]):
-        q = (cum + cur_w / 2) / n
-        limit = 4 * n * q * (1 - q) / delta
-        if cur_w + w <= max(limit, 1.0):
-            cur_m = (cur_m * cur_w + m * w) / (cur_w + w)
-            cur_w += w
-        else:
-            out_m.append(cur_m)
-            out_w.append(cur_w)
-            cum += cur_w
-            cur_m, cur_w = float(m), float(w)
-    out_m.append(cur_m)
-    out_w.append(cur_w)
-    return np.array(out_m), np.array(out_w)
-
-
-def _td_quantile(means: np.ndarray, weights: np.ndarray, q: float) -> float:
-    """Interpolated quantile from centroid cumulative weights.
-
-    Rank convention: centroid i sits at the MEAN 0-indexed order-statistic
-    rank of its members, cum_i - (w_i + 1)/2, and the target is q·(n-1) —
-    the same linear-interpolation definition as SQL quantile_cont /
-    np.quantile. With singleton centroids (which the size bound forces at
-    the tails) this is exact, so digest and exact quantiles agree where
-    it matters most; the previous midpoint convention (cum - w/2 vs q·n)
-    was offset by ~1 rank, which a tail jump in the data amplifies."""
-    n = weights.sum()
-    if len(means) == 1:
-        return float(means[0])
-    cum = np.cumsum(weights) - (weights + 1) / 2
-    target = q * (n - 1)
-    return float(np.interp(target, cum, means))
+_KNOTS = 1000
 
 
 def tdigest_quantiles(
-    df: DataFrame,
-    group_cols: list[str],
-    value_col: str,
-    probs: list[float],
-    delta: int = TD_DELTA,
+    df: DataFrame, group_cols: list[str], value_col: str, probs: list[float]
 ) -> DataFrame:
-    """DataFrame[*group_cols, q_<p>...] via two-phase t-digest."""
-    gc = list(group_cols)
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        v = pdf["_v"].to_numpy(dtype=np.float64)
-        v = v[~np.isnan(v)]
-        keys = {c: [pdf[c].iloc[0]] for c in gc}
-        if len(v) == 0:
-            return pd.DataFrame({**keys, "means": [[]], "weights": [[]]})
-        m, w = _td_compress(v, np.ones_like(v), delta)
-        return pd.DataFrame(
-            {**keys, "means": [m.tolist()], "weights": [w.tolist()]}
-        )
-
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        m = np.concatenate([np.asarray(x, dtype=np.float64) for x in pdf["means"]])
-        w = np.concatenate([np.asarray(x, dtype=np.float64) for x in pdf["weights"]])
-        keys = {c: [pdf[c].iloc[0]] for c in gc}
-        if len(m) == 0:
-            return pd.DataFrame({**keys, **{f"q_{int(p*100)}": [None] for p in probs}})
-        m, w = _td_compress(m, w, delta)
-        return pd.DataFrame(
-            {**keys, **{f"q_{int(p*100)}": [_td_quantile(m, w, p)] for p in probs}}
-        )
-
-    key_schema = ", ".join(f"{c} {t}" for c, t in df.select(gc).dtypes)
-    src = df.select(*gc, F.col(value_col).cast("double").alias("_v")).withColumn(
-        "_split", F.spark_partition_id()
+    """DataFrame[*group_cols, q_<p>...]; NULL where a group has no value."""
+    v = F.col(value_col).cast("double")
+    v = F.when(~F.isnan(v), v)
+    knots = [j / _KNOTS for j in range(_KNOTS + 1)]
+    agg = df.groupBy(*group_cols).agg(
+        F.percentile_approx(v, knots, 10000).alias("_x"), F.count(v).alias("_n")
     )
-    partials = src.groupBy(*gc, "_split").applyInPandas(
-        build, f"{key_schema}, means array<double>, weights array<double>"
+    x, n, r = F.col("_x"), F.col("_n"), F.col("_r")
+    # 0-based rank of the value percentile_approx returns at each knot
+    ranks = F.transform(
+        F.sequence(F.lit(0), F.lit(_KNOTS)),
+        lambda j: F.greatest(F.ceil(j / _KNOTS * n) - 1, F.lit(0)),
     )
-    out_schema = ", ".join(f"q_{int(p*100)} double" for p in probs)
-    return partials.groupBy(*gc).applyInPandas(
-        fold, f"{key_schema}, {out_schema}"
+
+    def quantile(p: float):
+        h = (n - 1) * p
+        # the last knot at or below rank h, stopping short of the top knot
+        j = F.size(F.filter(F.slice(r, 2, _KNOTS - 1), lambda rank: rank <= h))
+        frac = (h - r[j]) / (r[j + 1] - r[j])
+        return F.when(h > r[j], x[j] + (x[j + 1] - x[j]) * frac).otherwise(x[j])
+
+    return agg.withColumn("_r", ranks).select(
+        *group_cols, *[quantile(p).alias(f"q_{int(p*100)}") for p in probs]
     )
 
 
-# ------------------------------------------------------------------ HLL
-
-
-def _leading_zeros64(x: np.ndarray) -> np.ndarray:
-    """Exact vectorized count-leading-zeros for uint64 (binary-search
-    shifts — pure integer ops). float64 log2 loses precision above 2^53,
-    which skewed ranks at power-of-two boundaries and, since the
-    registers are persisted resume state, baked the error in."""
-    bl = np.zeros(len(x), dtype=np.int64)  # bit length
-    v = x.copy()
-    for s in (32, 16, 8, 4, 2, 1):
-        m = (v >> np.uint64(s)) != 0
-        bl[m] += s
-        v[m] >>= np.uint64(s)
-    bl += (v != 0).astype(np.int64)
-    return 64 - bl
-
-
-def _hll_registers(values: pd.Series, p: int) -> np.ndarray:
-    h = pd.util.hash_pandas_object(values, index=False).to_numpy(np.uint64)
-    idx = (h >> np.uint64(64 - p)).astype(np.int64)
-    rest = h << np.uint64(p)
-    # rank = leading zeros of the remaining 64-p bits, +1 (cap at 64-p+1)
-    rank = np.minimum(_leading_zeros64(rest), 64 - p) + 1
-    regs = np.zeros(1 << p, dtype=np.int64)
-    np.maximum.at(regs, idx, rank)
-    return regs
-
-
-def _hll_estimate(regs: np.ndarray, p: int) -> float:
-    m = 1 << p
-    alpha = 0.7213 / (1 + 1.079 / m)
-    est = alpha * m * m / np.sum(np.exp2(-regs.astype(np.float64)))
-    zeros = int((regs == 0).sum())
-    if est <= 2.5 * m and zeros > 0:
-        est = m * np.log(m / zeros)  # linear counting
-    return float(est)
-
-
-def hll_distinct(
-    df: DataFrame,
-    group_cols: list[str],
-    value_col: str,
-    p: int = HLL_P,
-) -> DataFrame:
-    """DataFrame[*group_cols, approx_distinct long] via two-phase HLL.
-    Register arrays are the mergeable partials (np.maximum fold)."""
-    gc = list(group_cols)
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        keys = {c: [pdf[c].iloc[0]] for c in gc}
-        vals = pdf["_v"].dropna()
-        regs = (
-            _hll_registers(vals, p)
-            if len(vals)
-            else np.zeros(1 << p, dtype=np.int64)
-        )
-        return pd.DataFrame({**keys, "regs": [regs.tolist()]})
-
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        keys = {c: [pdf[c].iloc[0]] for c in gc}
-        regs = np.zeros(1 << p, dtype=np.int64)
-        for r in pdf["regs"]:
-            regs = np.maximum(regs, np.asarray(r, dtype=np.int64))
-        return pd.DataFrame(
-            {**keys, "approx_distinct": [int(round(_hll_estimate(regs, p)))]}
-        )
-
-    key_schema = ", ".join(f"{c} {t}" for c, t in df.select(gc).dtypes)
-    src = df.select(
-        *gc, F.col(value_col).cast("string").alias("_v")
-    ).withColumn("_split", F.spark_partition_id())
-    partials = src.groupBy(*gc, "_split").applyInPandas(
-        build, f"{key_schema}, regs array<long>"
-    )
-    return partials.groupBy(*gc).applyInPandas(
-        fold, f"{key_schema}, approx_distinct long"
+def hll_distinct(df: DataFrame, group_cols: list[str], value_col: str) -> DataFrame:
+    """DataFrame[*group_cols, approx_distinct long]; 0 for an all-NULL group."""
+    sketch = F.hll_sketch_agg(F.col(value_col).cast("string"), 12)
+    return df.groupBy(*group_cols).agg(
+        F.hll_sketch_estimate(sketch).alias("approx_distinct")
     )
 
 

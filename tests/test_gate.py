@@ -115,3 +115,22 @@ def test_manifest_prefix_covers_every_family():
     all_fams = {m["family"] for m in man.values()}
     prefix_fams = {man[n]["family"] for n in names[:50]}
     assert all_fams == prefix_fams, all_fams - prefix_fams
+
+
+def test_sketch_bounds_oracle(spark):
+    """check_oracle.py's bounds oracle for the approximate sketches, run
+    inside pytest: every `sketch_stats` partition lands within the
+    envelopes around DuckDB's exact values, and the `sketch_bounds`
+    violation set is empty."""
+    sys.path.insert(0, _REPO)
+    import __spark_entry__ as e
+    from check_oracle import check_sketch_bounds, duck_views
+
+    sf_dir = "/root/testdata/sf0.001"
+    qs = e.queries()
+    con = duck_views(sf_dir)
+    try:
+        assert check_sketch_bounds(qs["sketch_stats"](spark, sf_dir).toPandas(), con)
+    finally:
+        con.close()
+    assert qs["sketch_bounds"](spark, sf_dir).count() == 0

@@ -601,3 +601,23 @@ def test_embedding_drift_shuffle_is_per_dim_partials(spark):
     assert len(ex) == 1 and "hashpartitioning(dim" in ex[0]
     im = re.search(r"Input \[\d+\]: \[(.*?)\]", ex[0])
     assert im and "embedding#" not in im.group(1), im.group(1)
+
+
+@pytest.mark.parametrize("sketch", ["quantiles", "distinct"])
+def test_sketch_is_one_native_partial_aggregate(spark, transcripts_parquet, sketch):
+    """Each sketch call is one native aggregate: a partial phase, ONE
+    exchange of its partials and a final phase, with no Python-worker
+    operator anywhere in the plan."""
+    from matric_spark.operators.sketches import hll_distinct, tdigest_quantiles
+
+    t = spark.read.parquet(transcripts_parquet)
+    if sketch == "quantiles":
+        df = tdigest_quantiles(
+            t.withColumn("_len", F.length("text")), ["part_month"], "_len", [0.5, 0.95]
+        )
+    else:
+        df = hll_distinct(t, ["part_month"], "conv_id")
+    p = plan(df)
+    assert "Python" not in p and "InPandas" not in p
+    assert p.count("Exchange (") == 1  # tree node
+    assert p.count("HashAggregate (") == 2 and "partial_" in p  # partial + final

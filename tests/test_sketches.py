@@ -1,6 +1,6 @@
 """Sketch accuracy + mergeability tests. Cross-checks follow SURVEY §7
-(M3): built-ins `percentile_approx`/`approx_count_distinct` and exact
-aggregates bound the custom mergeable sketches."""
+(M3): exact aggregates and `approx_count_distinct` bound the native
+`percentile_approx` / DataSketches HLL aggregates."""
 
 from __future__ import annotations
 
@@ -51,6 +51,31 @@ def test_tdigest_merge_invariance(spark, skewed):
         assert m[g] == pytest.approx(o[g], rel=0.05)
 
 
+def test_quantiles_repeat_for_same_layout(spark, skewed):
+    """Two runs over the same input and layout give identical quantiles
+    (a randomised sketch such as KLL would not)."""
+    from matric_spark.operators.sketches import tdigest_quantiles
+
+    def run():
+        return sorted(tdigest_quantiles(skewed, ["g"], "v", [0.25, 0.5, 0.95]).collect())
+
+    assert run() == run()
+
+
+def test_sketches_skip_null_and_nan(spark):
+    """An all-NULL group has no quantile and zero distinct values; NaN
+    is ignored by the quantiles."""
+    from matric_spark.operators.sketches import hll_distinct, tdigest_quantiles
+
+    rows = [("nul", None), ("nul", None), ("nan", float("nan")), ("nan", 1.0), ("nan", 3.0)]
+    df = spark.createDataFrame(rows, "g string, v double")
+    q = {r.g: r for r in tdigest_quantiles(df, ["g"], "v", [0.5, 0.95]).collect()}
+    assert q["nul"].q_50 is None and q["nul"].q_95 is None
+    assert q["nan"].q_50 == pytest.approx(2.0) and q["nan"].q_95 == pytest.approx(2.9)
+    d = {r.g: r.approx_distinct for r in hll_distinct(df, ["g"], "v").collect()}
+    assert d["nul"] == 0
+
+
 def test_hll_vs_exact_and_builtin(spark):
     from matric_spark.operators.sketches import hll_distinct
 
@@ -76,7 +101,19 @@ def test_hll_deterministic(spark):
     df = spark.createDataFrame(rows, "g string, u string")
     a = hll_distinct(df.repartition(4), ["g"], "u").collect()[0].approx_distinct
     b = hll_distinct(df.repartition(13), ["g"], "u").collect()[0].approx_distinct
-    assert a == b  # register folds are layout-independent
+    assert a == b  # 4 and 13 partitions agree
+
+
+def test_hll_exact_for_small_groups(spark):
+    """200 distinct strings per group is well inside the sketch's exact
+    range: every group counts exactly 200."""
+    from matric_spark.operators.sketches import hll_distinct
+
+    rows = [(f"g{g}", f"conv-{g}-{i}") for g in range(24) for i in range(200)]
+    df = spark.createDataFrame(rows, "g string, u string").repartition(8)
+    got = {r.g: r.approx_distinct for r in hll_distinct(df, ["g"], "u").collect()}
+    assert len(got) == 24
+    assert {g: n for g, n in got.items() if n != 200} == {}
 
 
 # ------------------------------------------------------- count-min sketch

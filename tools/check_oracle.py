@@ -8,6 +8,7 @@ Usage: python tools/check_oracle.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 
 import duckdb
@@ -109,7 +110,8 @@ def compare(name: str, sp: pd.DataFrame, dk: pd.DataFrame) -> bool:
 def check_sketch_bounds(sp: pd.DataFrame, con) -> bool:
     """Approximate sketches get a BOUNDS oracle instead of a value hash:
     DuckDB computes exact per-partition quantiles / distinct counts and
-    the t-digest (delta=100) / HLL (p=12) results must land within the
+    the `percentile_approx` quantiles / DataSketches HLL (lg K = 12)
+    distinct counts of operators/sketches.py must land within the
     documented envelopes (5% of the value spread for quantiles, 5%
     relative for distinct — the same bounds tests/test_sketches.py pins
     on synthetic data, here enforced against the real table inside the
@@ -184,19 +186,25 @@ FROM q CROSS JOIN e WHERE q.qid <> e.vec_id"""
     return ok
 
 
-def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
-
-    sys.path.insert(0, "/root/repo")
-    import __spark_entry__ as e
-    from matric_spark.session import get_spark
-
-    spark = get_spark(cpus=None, shuffle_partitions=8)
+def duck_views(sf_dir: str):
+    """A DuckDB connection with one view per parquet table in sf_dir."""
     con = duckdb.connect()
     for t in ["region", "nation", "customer", "supplier", "part", "orders",
               "lineitem", "events", "documents", "embeddings"]:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
+
+def main() -> int:
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    only = set(sys.argv[2:])
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    import __spark_entry__ as e
+    from matric_spark.session import get_spark
+
+    spark = get_spark(cpus=None, shuffle_partitions=8)
+    con = duck_views(sf_dir)
 
     qs, oq = e.queries(), e.oracle_sql()
     failures = []

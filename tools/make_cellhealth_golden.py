@@ -95,7 +95,7 @@ def main() -> None:
     from matric_spark.session import get_spark
 
     os.makedirs(GOLDEN_DIR, exist_ok=True)
-    spark = get_spark(cpus=8)
+    spark = get_spark(cpus=int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()))
     for name, df in cellhealth_metrics(spark).items():
         pdf = df.toPandas().sort_values(_SORT[name]).reset_index(drop=True)
         path = os.path.join(GOLDEN_DIR, f"cellhealth_{name}.parquet")
