@@ -45,27 +45,6 @@ def setup_transcripts(spark, sf_dir: str) -> str:
     return mat
 
 
-def _bus_ceiling() -> tuple[float | None, float | None]:
-    """Concurrent memory-bus grant stamp (tools/scaling_bench's
-    calibration probe): (ceiling ratio, absolute 2-way stream seconds).
-    This VM sees bursty external contention (BASELINE.md: 1.4-2x
-    inflation windows); bracketing the suite with two stamps makes a
-    snapshot self-adjudicating. BOTH numbers are needed: the ratio
-    bounds what any scaling comparison can read, while the ABSOLUTE
-    stream time exposes a uniform grant collapse the ratio cannot see —
-    measured on 2026-08-21: ratio 0.98 while the loop ran 25-40 s
-    against its 2-4 s clean-host band, i.e. every wall time in that
-    snapshot was ~10x-bus-starved despite a 'clean' ratio."""
-    try:
-        sys.path.insert(0, os.path.join(os.path.dirname(__file__), "tools"))
-        from scaling_bench import _stream_ceiling
-
-        r = _stream_ceiling(2, 8)
-        return r["ceiling"], r["stream_sec_low"]
-    except Exception:
-        return None, None
-
-
 def compact_line(out: dict, budget: int = 1800) -> str:
     """Serialize `out` to ONE JSON line no longer than `budget` chars.
 
@@ -108,7 +87,6 @@ def main() -> None:
     from matric_spark.session import get_spark
     from matric_spark.sources.transcripts_view import transcript_df
 
-    ceiling_pre, stream_pre = _bus_ceiling()
     spark = get_spark(app_name="matric_spark_bench")
 
     setup_transcripts(spark, sf_dir)
@@ -137,7 +115,6 @@ def main() -> None:
     warm = min(
         run_once(qs["verdicts"], spark, sf_dir) for _ in range(2)
     ) if "verdicts" in qs else None
-    ceiling_post, stream_post = _bus_ceiling()
 
     out = {
         "metric": "full_constraint_suite_sec",
@@ -153,12 +130,6 @@ def main() -> None:
         ),
         "total_sec": total,
         "cpus": os.environ.get("SPARK_GRAFT_CPUS", "*"),
-        "bus_ceiling_pre": ceiling_pre,
-        "bus_ceiling_post": ceiling_post,
-        # clean-host band ~2-4 s; >>4 s means a uniform bus-grant
-        # collapse is inflating every wall time above, ratio regardless
-        "bus_stream_sec_pre": stream_pre,
-        "bus_stream_sec_post": stream_post,
     }
     # Full per-query detail goes to a sidecar for the judge; stdout gets
     # one budget-capped line the driver's 2000-char tail can always parse.

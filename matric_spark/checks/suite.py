@@ -57,7 +57,6 @@ class SuiteConfig:
     tool_domain: list[str] = field(default_factory=lambda: list(DEFAULT_TOOL_DOMAIN))
     ks_threshold: float = 0.15
     psi_threshold: float = 0.25
-    uniqueness_strategy: str = "hash"
 
 
 def scalar_check_metrics(df: DataFrame, cfg: SuiteConfig) -> DataFrame:
@@ -322,7 +321,7 @@ def run_violations(df: DataFrame, cfg: SuiteConfig | None = None) -> dict[str, D
     R/sim_construct-validate.R:69-78)."""
     cfg = cfg or SuiteConfig()
     return {
-        "uniqueness": uniqueness_violations(df, cfg.key, strategy=cfg.uniqueness_strategy),
+        "uniqueness": uniqueness_violations(df, cfg.key),
         "ref_role": domain_violations(df, "role", cfg.role_domain, nulls_ok=False),
         "ref_tool": domain_violations(df, "tool", cfg.tool_domain, nulls_ok=True),
         "null_text": df.filter(F.col("text").isNull()),

@@ -2,7 +2,9 @@
 strict as the driver's byte-level value hash. Round 2 shipped a red
 driver row (sim_spearman_strata) because the local gate compared with
 pandas `==`, which treats -0.0 == +0.0; these tests pin the byte-strict
-contract so that class of divergence can never pass locally again."""
+contract so that class of divergence can never pass locally again, and
+`test_oracle_gate` runs the gate itself on every queries() entry at
+sf0.001."""
 
 import os
 import sys
@@ -12,7 +14,10 @@ import pytest
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, os.path.join(_REPO, "tools"))
-from check_oracle import canon, compare, frame_hash  # noqa: E402
+from check_oracle import canon, check_one, compare, duck_views, frame_hash  # noqa: E402
+
+sys.path.insert(0, _REPO)
+import __spark_entry__ as e  # noqa: E402
 
 
 def test_signed_zero_changes_hash():
@@ -52,8 +57,6 @@ def test_value_divergence_beyond_6dp_fails():
 @pytest.mark.parametrize("kernel_zero", [-0.0])
 def test_round6_normalizes_signed_zero(spark, kernel_zero):
     """__spark_entry__._round6 maps -0.0 to +0.0 (the `+ 0.0` clause)."""
-    import __spark_entry__ as e
-
     df = spark.createDataFrame([(1, kernel_zero)], "id int, sim double")
     out = e._round6(df, ["sim"]).toPandas()
     import numpy as np
@@ -102,35 +105,56 @@ def test_manifest_prefix_covers_every_family():
     exactly that) must touch every operator family: the first 50
     queries() entries must collectively carry every family that appears
     anywhere in the manifest, and every entry must resolve to a real
-    family (no 'other' fallbacks from an unmapped name prefix)."""
-    sys.path.insert(0, _REPO)
-    import __spark_entry__ as e
-
+    family (no 'other' placeholder) and a known cost tier."""
     man = e.queries_manifest()
     names = list(e.queries())
     assert len(names) == len(man)
     assert all(m["family"] != "other" for m in man.values()), [
         n for n, m in man.items() if m["family"] == "other"
     ]
+    assert {m["tier"] for m in man.values()} <= {"cheap", "medium", "expensive"}
     all_fams = {m["family"] for m in man.values()}
     prefix_fams = {man[n]["family"] for n in names[:50]}
     assert all_fams == prefix_fams, all_fams - prefix_fams
 
 
-def test_sketch_bounds_oracle(spark):
-    """check_oracle.py's bounds oracle for the approximate sketches, run
-    inside pytest: every `sketch_stats` partition lands within the
-    envelopes around DuckDB's exact values, and the `sketch_bounds`
-    violation set is empty."""
-    sys.path.insert(0, _REPO)
-    import __spark_entry__ as e
-    from check_oracle import check_sketch_bounds, duck_views
+# Each queries() entry without an oracle_sql() twin, and why it has none.
+_ROWS_ONLY = {
+    "emb_near_dup_ivf": "IVF blocking misses pairs at cell boundaries by "
+    "design; soundness gated by emb_ivf_soundness",
+    "ann_topk_ivf": "probe set depends on the k-means centroids; "
+    "containment oracle check_oracle.check_ivf_containment",
+    "sim_signif": "permutation nulls come from numpy's PCG64 stream, which "
+    "DuckDB cannot replay; values gated by signif_monotonic",
+    "sketch_stats": "approximate by design; bounds oracle "
+    "check_oracle.check_sketch_bounds, plus sketch_bounds",
+}
 
-    sf_dir = "/root/testdata/sf0.001"
-    qs = e.queries()
-    con = duck_views(sf_dir)
-    try:
-        assert check_sketch_bounds(qs["sketch_stats"](spark, sf_dir).toPandas(), con)
-    finally:
-        con.close()
-    assert qs["sketch_bounds"](spark, sf_dir).count() == 0
+
+def test_rows_only_set_is_pinned():
+    """Every omission from oracle_sql() is deliberate: a new query
+    without an oracle fails here instead of silently becoming
+    'rows_only' in the manifest, and no oracle is orphaned."""
+    assert set(e.queries()) - set(e.oracle_sql()) == set(_ROWS_ONLY)
+    assert set(e.oracle_sql()) <= set(e.queries())
+
+
+_SF_DIR = "/root/testdata/sf0.001"
+
+
+@pytest.fixture(scope="module")
+def duck():
+    con = duck_views(_SF_DIR)
+    yield con
+    con.close()
+
+
+@pytest.mark.parametrize("name", list(e.queries()))
+def test_oracle_gate(spark, duck, name):
+    """tools/check_oracle.py's gate, one case per queries() entry: the
+    Spark result must match its DuckDB twin byte for byte, pass its
+    special oracle (sketch bounds, IVF containment), or — rows-only —
+    at least execute."""
+    assert check_one(
+        name, e.queries()[name], spark, duck, _SF_DIR, e.oracle_sql().get(name)
+    )

@@ -10,6 +10,7 @@ from __future__ import annotations
 import hashlib
 import os
 import sys
+import time
 
 import duckdb
 import numpy as np
@@ -195,6 +196,41 @@ def duck_views(sf_dir: str):
     return con
 
 
+# Entries checked by a dedicated oracle instead of a value hash: the
+# approximate sketches against DuckDB's exact values, the IVF top-k by
+# containment in DuckDB's exact cosines.
+SPECIAL = {
+    "sketch_stats": ("bounds oracle", check_sketch_bounds),
+    "ann_topk_ivf": ("containment oracle", check_ivf_containment),
+}
+
+
+def check_one(name: str, fn, spark, con, sf_dir: str, oracle: str | None) -> bool:
+    """Run one queries() entry on Spark and check it: with its SPECIAL
+    oracle if it has one, else against `oracle` (its oracle_sql() twin)
+    on DuckDB; a rows-only entry (oracle None) only has to execute.
+    Prints one report line; returns False on a failed check."""
+    t0 = time.time()
+    sp = fn(spark, sf_dir).toPandas()
+    spark.catalog.clearCache()  # release per-query persist()s
+    t1 = time.time()
+    if name in SPECIAL:
+        kind, fn_check = SPECIAL[name]
+        good = fn_check(sp, con)
+        print(
+            f"{'PASS' if good else 'FAIL'} {name} ({kind}): "
+            f"{len(sp)} rows, {t1-t0:.1f}s"
+        )
+        return good
+    if oracle is None:
+        print(f"  [{name}] no oracle (rows-only): {len(sp)} rows, {t1-t0:.1f}s")
+        return True
+    dk = con.execute(oracle).fetch_df()
+    good = compare(name, sp, dk)
+    print(f"{'PASS' if good else 'FAIL'} {name}: {len(sp)} rows  spark={t1-t0:.1f}s duck={time.time()-t1:.1f}s")
+    return good
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -206,41 +242,12 @@ def main() -> int:
     spark = get_spark(cpus=None, shuffle_partitions=8)
     con = duck_views(sf_dir)
 
-    qs, oq = e.queries(), e.oracle_sql()
+    oq = e.oracle_sql()
     failures = []
-    for name, fn in qs.items():
+    for name, fn in e.queries().items():
         if only and name not in only:
             continue
-        import time
-
-        t0 = time.time()
-        sp = fn(spark, sf_dir).toPandas()
-        spark.catalog.clearCache()  # release per-query persist()s
-        t1 = time.time()
-        # emb_near_dup_lsh graduated to a FULL value-hash oracle_sql
-        # (deterministic plane replay) in round 5, so it goes through
-        # the standard compare path below, not a special-case check
-        special = {
-            "sketch_stats": ("bounds oracle", check_sketch_bounds),
-            "ann_topk_ivf": ("containment oracle", check_ivf_containment),
-        }
-        if name in special:
-            kind, fn_check = special[name]
-            good = fn_check(sp, con)
-            print(
-                f"{'PASS' if good else 'FAIL'} {name} ({kind}): "
-                f"{len(sp)} rows, {t1-t0:.1f}s"
-            )
-            if not good:
-                failures.append(name)
-            continue
-        if name not in oq:
-            print(f"  [{name}] no oracle (rows-only): {len(sp)} rows, {t1-t0:.1f}s")
-            continue
-        dk = con.execute(oq[name]).fetch_df()
-        good = compare(name, sp, dk)
-        print(f"{'PASS' if good else 'FAIL'} {name}: {len(sp)} rows  spark={t1-t0:.1f}s duck={time.time()-t1:.1f}s")
-        if not good:
+        if not check_one(name, fn, spark, con, sf_dir, oq.get(name)):
             failures.append(name)
     print("FAILURES:", failures or "none")
     return 1 if failures else 0
