@@ -914,7 +914,7 @@ def q_streaming_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batching — streaming/validate.py docstring), consumed as a
     file-source stream one file per micro-batch (Trigger.AvailableNow),
     state-appended per batch through the shared StateStore layout, and
-    assembled with the cross-batch folds of `stream_verdicts` — the
+    assembled by `stream_verdicts` under the state commit rule — the
     result must reproduce the one-shot batch verdict table
     byte-identically. This gates the streaming path against DuckDB
     end-to-end, upgrading the pytest differential (streaming ≡ batch,

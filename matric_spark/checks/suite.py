@@ -141,10 +141,12 @@ def run_verdicts(df: DataFrame, cfg: SuiteConfig | None = None) -> DataFrame:
     cfg = cfg or SuiteConfig()
     p = cfg.partition_col
 
-    scalar = scalar_check_metrics(df, cfg)
-
     # sequence + uniqueness: one conv-keyed exchange (module docstring)
-    convm = conv_keyed_metrics(df, cfg)
+    local = (
+        scalar_check_metrics(df, cfg)
+        .join(conv_keyed_metrics(df, cfg), "part", "left")
+        .fillna(0, subset=["uniqueness", "seq_order"])
+    )
 
     # drift: ONE persisted counts sketch feeds both KS and PSI — the
     # persist is load-bearing: the ECDF/re-bucket consumers otherwise
@@ -155,37 +157,56 @@ def run_verdicts(df: DataFrame, cfg: SuiteConfig | None = None) -> DataFrame:
     counts = _counts(df, p, F.length("text")).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    ks = ks_by_partition(df, p, F.length("text"), precomputed=counts).select(
-        F.col(p).alias("part"), "ks_d"
-    )
-    psi = psi_by_partition(df, p, F.length("text"), precomputed=counts).select(
-        F.col(p).alias("part"), "psi"
-    )
+    return core_rows(local, counts, cfg)
 
-    wide = (
-        scalar.join(convm, "part", "left")
-        .join(ks, "part", "left")
-        .join(psi, "part", "left")
-        .fillna(0, subset=["uniqueness", "seq_order"])
-    )
 
-    # Unpivot wide -> long with ONE projection. A per-check
-    # union-of-selects would re-evaluate the whole `wide` subplan once per
-    # branch (8 full suite computations); unpivot evaluates it exactly once.
-    def entry(metric: Column, fail_when: Column) -> Column:
-        status = F.when(fail_when, F.lit("fail")).otherwise(F.lit("pass"))
-        return F.struct(metric.cast("double").alias("m"), status.alias("s"))
+def _entry(metric: Column, fail_when: Column) -> Column:
+    """One verdict cell: the metric as a double and its pass/fail status
+    (a NULL ``fail_when`` passes)."""
+    status = F.when(fail_when, F.lit("fail")).otherwise(F.lit("pass"))
+    return F.struct(metric.cast("double").alias("m"), status.alias("s"))
 
-    structs: dict[str, Column] = {}
-    for chk in ["ref_role", "ref_tool", "null_text", "null_ts", "uniqueness", "seq_order"]:
-        structs[chk] = entry(F.col(chk), F.col(chk) > 0)
-    structs["drift_ks"] = entry(F.col("ks_d"), F.col("ks_d") > cfg.ks_threshold)
-    structs["drift_psi"] = entry(F.col("psi"), F.col("psi") > cfg.psi_threshold)
 
-    packed = wide.select("part", *[c.alias(name) for name, c in structs.items()])
+def _unpivot(wide: DataFrame, cells: dict[str, Column]) -> DataFrame:
+    """Wide per-partition cells -> verdict rows (VERDICT_COLUMNS), with ONE
+    projection. A per-check union-of-selects would re-evaluate the whole
+    `wide` subplan once per branch; unpivot evaluates it exactly once."""
+    packed = wide.select("part", *[c.alias(n) for n, c in cells.items()])
     return packed.unpivot(
-        ids=["part"], values=list(structs), variableColumnName="check_id", valueColumnName="ms"
-    ).select("part", "check_id", F.col("ms.m").alias("metric"), F.col("ms.s").alias("status"))
+        ids=["part"],
+        values=list(cells),
+        variableColumnName="check_id",
+        valueColumnName="ms",
+    ).select(
+        "part",
+        "check_id",
+        F.col("ms.m").alias("metric"),
+        F.col("ms.s").alias("status"),
+    )
+
+
+def core_rows(local: DataFrame, sketch: DataFrame, cfg: SuiteConfig) -> DataFrame:
+    """The eight core verdicts per partition from two small relations —
+    SHARED by the batch suite (run_verdicts) and the state assembly
+    (state.assemble_verdicts), so the two emissions cannot diverge in
+    check ids, thresholds or status logic.
+
+    ``local``: (part, ref_role, ref_tool, null_text, null_ts,
+    uniqueness, seq_order), one row per partition. ``sketch``: the
+    (p, v, c) text-length counts; KS and PSI of every partition against
+    its complement are derived from it here."""
+    ks = ks_by_partition(None, "part", None, precomputed=sketch)
+    psi = psi_by_partition(None, "part", None, precomputed=sketch)
+    wide = local.join(ks.select("part", "ks_d"), "part", "left").join(
+        psi.select("part", "psi"), "part", "left"
+    )
+    cells = {
+        c: _entry(F.col(c), F.col(c) > 0)
+        for c in ["ref_role", "ref_tool", "null_text", "null_ts", "uniqueness", "seq_order"]
+    }
+    cells["drift_ks"] = _entry(F.col("ks_d"), F.col("ks_d") > cfg.ks_threshold)
+    cells["drift_psi"] = _entry(F.col("psi"), F.col("psi") > cfg.psi_threshold)
+    return _unpivot(wide, cells)
 
 
 def run_verdicts_extended(
@@ -279,41 +300,16 @@ def _extended_rows(
     the batch path (run_verdicts_extended) and the resumable path
     (state.assemble_verdicts_extended) so the two emissions can never
     diverge in check ids, thresholds, or status logic."""
-    structs: dict[str, Column] = {}
-    for r in rules:
-        c = F.col(f"rule_{r.name}")
-        structs[f"rule_{r.name}"] = F.struct(
-            c.cast("double").alias("m"),
-            F.when(c > 0, F.lit("fail")).otherwise(F.lit("pass")).alias("s"),
-        )
-    structs["fd_conflict"] = F.struct(
-        F.col("fd_conflict").cast("double").alias("m"),
-        F.when(F.col("fd_conflict") > 0, F.lit("fail"))
-        .otherwise(F.lit("pass"))
-        .alias("s"),
+    cells = {
+        f"rule_{r.name}": _entry(F.col(f"rule_{r.name}"), F.col(f"rule_{r.name}") > 0)
+        for r in rules
+    }
+    cells["fd_conflict"] = _entry(F.col("fd_conflict"), F.col("fd_conflict") > 0)
+    cells["volume_delta"] = _entry(
+        F.col("delta_pct"),
+        (F.abs(F.col("delta_pct")) > volume_abs_delta) | (F.col("gap_months") > 0),
     )
-    structs["volume_delta"] = F.struct(
-        F.col("delta_pct").cast("double").alias("m"),
-        F.when(
-            (F.abs(F.col("delta_pct")) > volume_abs_delta)
-            | (F.col("gap_months") > 0),
-            F.lit("fail"),
-        )
-        .otherwise(F.lit("pass"))
-        .alias("s"),
-    )
-    packed = wide.select("part", *[c.alias(n) for n, c in structs.items()])
-    return packed.unpivot(
-        ids=["part"],
-        values=list(structs),
-        variableColumnName="check_id",
-        valueColumnName="ms",
-    ).select(
-        "part",
-        "check_id",
-        F.col("ms.m").alias("metric"),
-        F.col("ms.s").alias("status"),
-    )
+    return _unpivot(wide, cells)
 
 
 def run_violations(df: DataFrame, cfg: SuiteConfig | None = None) -> dict[str, DataFrame]:

@@ -105,20 +105,20 @@ def get_spark(
 
     Under ``spark-submit`` (detected via ``PYSPARK_GATEWAY_PORT``) the
     submitted ``--master`` always wins and ``cpus`` only sizes shuffle
-    partitions. Corollary: a spark-submit run that OMITS ``--master``
-    falls to spark-submit's own ``local[*]`` default, i.e. every core of
-    the host. On a 4-core host that is 4 task threads sharing the cores
-    with the driver's JIT compiler and GC threads, so pass ``--master
-    local[N]`` explicitly when parallelism must be bounded;
-    ``SPARK_GRAFT_CPUS`` alone cannot bound it in that path.
+    partitions. A spark-submit run that OMITS ``--master`` falls to
+    spark-submit's own ``local[*]`` default, i.e. every core of the
+    host, which ``SPARK_GRAFT_CPUS`` cannot bound from here; so when that
+    env var is set and the master is ``local[*]``, the session is stopped
+    and a ``ValueError`` asks for ``--master local[N]`` instead of
+    silently running on every core.
 
     The driver JIT cap (``JIT_CAP``) only applies when this call
     launches the JVM; under ``spark-submit`` put
     ``--conf spark.driver.defaultJavaOptions=-XX:CICompilerCount=2`` on
     the submit command line (see ``main.py``).
     """
+    env = os.environ.get("SPARK_GRAFT_CPUS")
     if cpus is None:
-        env = os.environ.get("SPARK_GRAFT_CPUS")
         cpus = int(env) if env else None
     n_shuffle = shuffle_partitions or (cpus or os.cpu_count() or 8)
 
@@ -187,5 +187,12 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()
+    if under_spark_submit and env and spark.sparkContext.master == "local[*]":
+        spark.stop()
+        raise ValueError(
+            f"SPARK_GRAFT_CPUS={env} cannot bound parallelism under "
+            "spark-submit, whose master here is local[*] (every core): "
+            f"pass --master local[{env}] to spark-submit"
+        )
     spark.sparkContext.setLogLevel("WARN")
     return spark

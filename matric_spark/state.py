@@ -14,12 +14,21 @@ as the fingerprint):
                       of this index, never a re-scan. On a cluster this
                       table is bucketed by key so the merge is
                       shuffle-free.
-    state/sketch/     (part, v, c) value-counts sketch — KS and PSI for
+    state/sketch/     (p, v, c) value-counts sketch — KS and PSI for
                       EVERY partition are recomputed from the merged
                       sketch each run (sketch-sized work), because each
                       partition's drift baseline is the complement of
                       the whole table and so changes as partitions land.
-    state/log/        (part, fingerprint, run_id, n_rows) completion log
+    state/local_ext/  per-partition rule/FD metrics (extended runs only)
+    state/log/        (part, run_id, n_rows) completion log
+
+Every row also carries `fingerprint` and the `run_id` of the append
+that wrote it (`stream-<batchId>` for micro-batches).
+
+ONE builder writes the state: `partition_state` turns the partitions in
+hand into the appends above, log last; `run_incremental` (remaining
+partitions) and `streaming.validate.validated_stream` (each
+micro-batch) both call it.
 
 Check taxonomy that makes resume correct:
 - row-local checks → attributable to a partition outright.
@@ -34,8 +43,18 @@ A partition is COMPLETE for an input `fingerprint` iff a log row exists;
 completed partitions are pruned from the scan by a partition-column
 predicate (partition pruning on Iceberg). If the input changes, the
 fingerprint changes and everything re-validates (SURVEY §7.3e).
-Differential guarantee (tests/test_state.py): crash-resume ≡ fresh ≡
-the one-shot batch suite.
+
+ONE commit rule reads it (`StateStore.committed`): a state row counts
+only if the log committed its (part, run_id); replays of one append
+collapse on (run_id, key); the rest is summed across run_ids. That
+covers a crash between the state appends and the log append (the rows
+are never committed; the resume rewrites them under its own run_id), a
+retried foreachBatch (same batch id, collapsed) and a stream that
+splits one partition or repeats one key across batches (summed); a
+batch run commits each partition under one run_id, so its sum is the
+identity. Differential guarantee (tests/test_state.py,
+tests/test_streaming.py): crash-resume ≡ fresh ≡ streamed ≡ the
+one-shot batch suite.
 """
 
 from __future__ import annotations
@@ -46,9 +65,15 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from matric_spark.checks.drift import ks_by_partition, psi_by_partition, _counts
+from matric_spark.checks.constraints import default_transcript_rules
+from matric_spark.checks.drift import _counts
 from matric_spark.checks.sequence import out_of_order_turns
-from matric_spark.checks.suite import SuiteConfig, scalar_check_metrics
+from matric_spark.checks.suite import (
+    SuiteConfig,
+    core_rows,
+    extended_partition_metrics,
+    scalar_check_metrics,
+)
 
 _LOG_SCHEMA = "part int, run_id string, n_rows long, fingerprint string"
 
@@ -146,37 +171,53 @@ class StateStore:
             return
         out.write.mode("append").parquet(self._path(name))
 
-    def _for(self, name: str, fingerprint: str, schema: str | None = None) -> DataFrame | None:
-        df = self._read(name, schema)
+    def _for(self, name: str, fingerprint: str) -> DataFrame | None:
+        df = self._read(name, _LOG_SCHEMA if name == "log" else None)
         if df is None:
             return None
         return df.filter(F.col("fingerprint") == fingerprint).drop("fingerprint")
 
     def completed_partitions(self, fingerprint: str) -> list[int]:
-        log = self._for("log", fingerprint, _LOG_SCHEMA)
+        log = self._for("log", fingerprint)
         if log is None:
             return []
         return [r.part for r in log.select("part").distinct().collect()]
 
-    @staticmethod
-    def _no_run_id(df: DataFrame) -> DataFrame:
-        return df.drop("run_id") if "run_id" in df.columns else df
+    def committed(
+        self, name: str, fingerprint: str, keys: list[str], commits: DataFrame
+    ) -> DataFrame | None:
+        """The rows of relation `name` that count, folded per `keys`
+        (keys[0] names the relation's partition column) — None if the
+        relation was never written. THE one read rule for every state
+        relation, batch, resume and stream alike:
 
-    def key_index_for(self, fingerprint: str, cfg) -> DataFrame:
-        """Merged key index with batch/resume dedup semantics: appends
-        are whole partitions, so duplicate (key, part) rows across
-        run_ids are replays of identical data — keep one."""
-        return self._no_run_id(
-            self._for("key_index", fingerprint).dropDuplicates(
-                [*cfg.key, "part"]
-            )
+        - a row counts only if the log committed its (part, run_id) —
+          `commits` is this fingerprint's log, semi-joined as a broadcast
+          on an expression condition, so every relation of one assembly
+          reuses one broadcast exchange (a distinct() or aliased log
+          would give each relation its own);
+        - replays of one append (a retried foreachBatch reuses its batch
+          id; a crash between a state append and its log append leaves
+          rows no log row commits) collapse on (run_id, keys);
+        - the rest is summed per key across run_ids: a stream may split
+          one partition, or repeat one key, across batches.
+
+        One repartition by `keys` serves both the dedup and the sum."""
+        df = self._for(name, fingerprint)
+        if df is None:
+            return None
+        log = F.broadcast(commits)
+        ok = df.join(
+            log,
+            (df[keys[0]] == log["part"]) & (df["run_id"] == log["run_id"]),
+            "left_semi",
         )
-
-    def sketch_for(self, fingerprint: str) -> DataFrame:
-        """Merged drift sketch, whole-partition replay dedup (see
-        key_index_for)."""
-        return self._no_run_id(
-            self._for("sketch", fingerprint).dropDuplicates(["p", "v"])
+        values = [c for c in df.columns if c not in (*keys, "run_id")]
+        return (
+            ok.repartition(*keys)
+            .dropDuplicates([*keys, "run_id"])
+            .groupBy(*keys)
+            .agg(*[F.sum(c).alias(c) for c in values])
         )
 
     # ------------------------------------------------- schema evolution
@@ -256,6 +297,64 @@ def schema_drift_vs_recorded(
     return schema_conformance(spark, df, prev)
 
 
+def partition_state(
+    rows: DataFrame,
+    conv_rows: DataFrame,
+    cfg: SuiteConfig,
+    run_id: str,
+    extended: bool = False,
+) -> list[tuple[str, DataFrame]]:
+    """The state appends for the partitions in `rows`, as (relation,
+    DataFrame) pairs in COMMIT ORDER — the log comes last, because a
+    partition is complete iff its log row exists, so every other
+    relation must be durable before it. The one builder behind both
+    `run_incremental` and `streaming.validate.validated_stream`.
+
+    `conv_rows` holds the whole conversations of `rows` (a superset of
+    it): the sequence check needs full conversations, which may span
+    partitions, and its verdicts are attributed to each row's own
+    partition — the left join from the scalar counts keeps only the
+    partitions of `rows`. Every row carries `run_id`. The
+    partition-sized relations are written as one file each (otherwise
+    every append leaves shuffle-partitions-many KB-sized files, and a
+    micro-batched run reads hundreds of them at assembly); the key
+    index keeps the shuffle's partitioning. `extended=True` adds the
+    partition-local rule/FD metrics (`local_ext`)."""
+    p = cfg.partition_col
+    part = F.col(p).alias("part")
+    seq = (
+        out_of_order_turns(conv_rows)
+        .groupBy(part)
+        .agg(F.count(F.lit(1)).alias("seq_order"))
+    )
+    local = (
+        scalar_check_metrics(rows, cfg)
+        .join(seq, "part", "left")
+        .fillna(0, subset=["seq_order"])
+    )
+    appends = [
+        ("local", local.coalesce(1)),
+        # per-partition key counts: uniqueness merges these
+        (
+            "key_index",
+            rows.groupBy(*cfg.key, part).agg(F.count(F.lit(1)).alias("cnt")),
+        ),
+        ("sketch", _counts(rows, p, F.length("text")).coalesce(1)),
+    ]
+    if extended:
+        ext = extended_partition_metrics(
+            rows, cfg, default_transcript_rules(), ["text", "role"]
+        )
+        appends.append(("local_ext", ext.coalesce(1)))
+    tagged = [(n, df.withColumn("run_id", F.lit(run_id))) for n, df in appends]
+    log = (
+        rows.groupBy(part)
+        .agg(F.count(F.lit(1)).alias("n_rows"))
+        .select("part", F.lit(run_id).alias("run_id"), "n_rows")
+    )
+    return [*tagged, ("log", log.coalesce(1))]
+
+
 def run_incremental(
     spark: SparkSession,
     transcripts: DataFrame,
@@ -295,99 +394,35 @@ def run_incremental(
         remaining = remaining.filter(F.col(p).isin(parts))
 
     if remaining.select(p).limit(1).count() > 0:
-        # ---- partition-local state for the new partitions ----
-        scalar = scalar_check_metrics(remaining, cfg)
-
-        # sequence needs whole conversations (they span partitions):
-        # bounded boundary re-read via semi-join, verdicts attributed to
-        # each row's own partition
+        # whole conversations of the new partitions: a bounded boundary
+        # re-read via semi-join (they may span partitions)
         convs = remaining.select(*cfg.key[:1]).distinct()
         full_convs = transcripts.join(convs, cfg.key[:1], "left_semi")
-        seq = (
-            out_of_order_turns(full_convs)
-            .join(remaining.select(p).distinct(), p, "left_semi")
-            .groupBy(F.col(p).alias("part"))
-            .agg(F.count(F.lit(1)).alias("seq_order"))
-        )
-        local = (
-            scalar.join(seq, "part", "left")
-            .fillna(0, subset=["seq_order"])
-            .withColumn("run_id", F.lit(run_id))
-        )
-        store._append(local, "local", fingerprint)
-
-        # key index: per-partition key counts (uniqueness merges these).
-        # run_id rides along so readers can tell appends apart: the batch
-        # path dedups on the natural key (a crashed run re-appends whole
-        # partitions → identical rows under a new run_id), the streaming
-        # path dedups on (run_id, natural key) and SUMS (distinct
-        # micro-batches legitimately append the same key again).
-        key_index = (
-            remaining.groupBy(*cfg.key, F.col(p).alias("part"))
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .withColumn("run_id", F.lit(run_id))
-        )
-        store._append(key_index, "key_index", fingerprint)
-
-        # drift sketch: per-partition value counts (same run_id contract)
-        sketch = _counts(remaining, p, F.length("text")).withColumn(
-            "run_id", F.lit(run_id)
-        )
-        store._append(sketch, "sketch", fingerprint)
-
-        if extended:
-            # BEFORE the log append: the resume contract is "complete iff
-            # a log row exists", so every state relation must be durable
-            # before the partition is marked complete — a crash in the
-            # gap would otherwise prune the partition from all future
-            # scans while its extended state is missing forever
-            from matric_spark.checks.constraints import (
-                default_transcript_rules,
-            )
-            from matric_spark.checks.suite import extended_partition_metrics
-
-            ext = extended_partition_metrics(
-                remaining, cfg, default_transcript_rules(), ["text", "role"]
-            ).withColumn("run_id", F.lit(run_id))
-            store._append(ext, "local_ext", fingerprint)
-
-        # the log append comes LAST: it is the commit point
-        log = (
-            remaining.groupBy(F.col(p).alias("part"))
-            .agg(F.count(F.lit(1)).alias("n_rows"))
-            .select("part", F.lit(run_id).alias("run_id"), "n_rows")
-        )
-        store._append(log, "log", fingerprint)
+        for name, df in partition_state(
+            remaining, full_convs, cfg, run_id, extended
+        ):
+            store._append(df, name, fingerprint)
 
     if extended:
-        return assemble_verdicts_extended(spark, store, fingerprint, cfg)
-    return assemble_verdicts(spark, store, fingerprint, cfg)
+        return assemble_verdicts_extended(store, fingerprint, cfg)
+    return assemble_verdicts(store, fingerprint, cfg)
 
 
 def assemble_verdicts(
-    spark: SparkSession,
-    store: StateStore,
-    fingerprint: str,
-    cfg: SuiteConfig,
+    store: StateStore, fingerprint: str, cfg: SuiteConfig
 ) -> DataFrame:
-    """Full verdict table from state only — no data re-scan.
+    """Full verdict table from committed state only — no data re-scan.
 
     Global checks: uniqueness folds the key index (keys duplicated
-    ANYWHERE → per-partition participating-row counts); KS/PSI run on
-    the merged sketch via the same code path as the batch suite."""
-    from pyspark.sql import Column
+    ANYWHERE → per-partition participating-row counts); KS/PSI and the
+    unpivot are the batch suite's own `core_rows`."""
+    commits = store._for("log", fingerprint)
+    assert commits is not None, "no completed partitions in state"
+    local = store.committed("local", fingerprint, ["part"], commits)
 
-    local = store._for("local", fingerprint)
-    assert local is not None, "no completed partitions in state"
-    local = local.dropDuplicates(["part"]).drop("run_id")
-
-    # batch/resume semantics: appends are WHOLE partitions, so rows
-    # repeated under a different run_id (crash between state append and
-    # log append, then re-run) are exact duplicates — dedup on the
-    # natural key. Streaming overrides these accessors with per-batch
-    # folds (streaming/validate.stream_verdicts) because there the same
-    # natural key across run_ids is NEW data, not a replay.
-    key_index = store.key_index_for(fingerprint, cfg)
+    key_index = store.committed(
+        "key_index", fingerprint, ["part", *cfg.key], commits
+    )
     glob = key_index.groupBy(*cfg.key).agg(F.sum("cnt").alias("_g"))
     dup_keys = glob.filter(F.col("_g") > 1).select(*cfg.key)
     uniq = (
@@ -395,70 +430,33 @@ def assemble_verdicts(
         .groupBy("part")
         .agg(F.sum("cnt").alias("uniqueness"))
     )
-
-    sketch = store.sketch_for(fingerprint)
-    ks = ks_by_partition(None, "part", None, precomputed=sketch).select(
-        "part", "ks_d"
-    )
-    psi = psi_by_partition(None, "part", None, precomputed=sketch).select(
-        "part", "psi"
-    )
-
-    wide = (
-        local.join(uniq, "part", "left")
-        .join(ks, "part", "left")
-        .join(psi, "part", "left")
-        .fillna(0, subset=["uniqueness"])
-    )
-
-    def entry(metric: Column, fail_when: Column) -> Column:
-        status = F.when(fail_when, F.lit("fail")).otherwise(F.lit("pass"))
-        return F.struct(metric.cast("double").alias("m"), status.alias("s"))
-
-    structs: dict[str, Column] = {}
-    for chk in ["ref_role", "ref_tool", "null_text", "null_ts", "uniqueness", "seq_order"]:
-        structs[chk] = entry(F.col(chk), F.col(chk) > 0)
-    structs["drift_ks"] = entry(F.col("ks_d"), F.col("ks_d") > cfg.ks_threshold)
-    structs["drift_psi"] = entry(F.col("psi"), F.col("psi") > cfg.psi_threshold)
-
-    packed = wide.select("part", *[c.alias(n) for n, c in structs.items()])
-    return packed.unpivot(
-        ids=["part"],
-        values=list(structs),
-        variableColumnName="check_id",
-        valueColumnName="ms",
-    ).select(
-        "part",
-        "check_id",
-        F.col("ms.m").alias("metric"),
-        F.col("ms.s").alias("status"),
-    )
+    local = local.join(uniq, "part", "left").fillna(0, subset=["uniqueness"])
+    sketch = store.committed("sketch", fingerprint, ["p", "v"], commits)
+    return core_rows(local, sketch, cfg)
 
 
 def assemble_verdicts_extended(
-    spark: SparkSession,
     store: StateStore,
     fingerprint: str,
     cfg: SuiteConfig,
     volume_abs_delta: float = 0.5,
 ) -> DataFrame:
-    """Extended verdict table from state only — the resumable emission of
-    checks/suite.run_verdicts_extended.
+    """Extended verdict table from committed state only — the resumable
+    emission of checks/suite.run_verdicts_extended.
 
-    Rule/FD metrics come from the per-partition `local_ext` appends
-    (whole-partition replays deduped on part, like `local`); the volume
-    check derives from the completion log's per-partition row counts via
-    the SAME volume_profile stage the batch operator uses, and the
-    verdict rows are built by the SAME _extended_rows unpivot — so the
-    batch and resumed emissions cannot diverge.
+    Rule/FD metrics come from the per-partition `local_ext` appends; the
+    volume check derives from the completion log's per-partition row
+    counts via the SAME volume_profile stage the batch operator uses,
+    and the verdict rows are built by the SAME _extended_rows unpivot —
+    so the batch and resumed emissions cannot diverge.
     """
     from matric_spark.checks.column_stats import volume_profile
-    from matric_spark.checks.constraints import default_transcript_rules
     from matric_spark.checks.suite import _extended_rows
 
-    core = assemble_verdicts(spark, store, fingerprint, cfg)
+    core = assemble_verdicts(store, fingerprint, cfg)
 
-    ext = store._for("local_ext", fingerprint)
+    commits = store._for("log", fingerprint)
+    ext = store.committed("local_ext", fingerprint, ["part"], commits)
     if ext is None:
         raise ValueError(
             "no extended state for this fingerprint: its partitions were "
@@ -466,14 +464,14 @@ def assemble_verdicts_extended(
             "them from re-scanning. Re-validate under a fresh state_dir "
             "or fingerprint with extended=True."
         )
-    ext = ext.dropDuplicates(["part"]).drop("run_id")
 
     # every completed partition must have extended state (a fingerprint
     # partly completed by non-extended runs would otherwise silently
     # lose its rule/FD/volume verdict rows while keeping core rows)
-    local_parts = {r.part for r in core.select("part").distinct().collect()}
-    ext_parts = {r.part for r in ext.select("part").collect()}
-    missing = sorted(local_parts - ext_parts)
+    log = store.committed("log", fingerprint, ["part"], commits)
+    missing = sorted(
+        r.part for r in log.join(ext, "part", "left_anti").select("part").collect()
+    )
     if missing:
         raise ValueError(
             f"extended state missing for completed partitions {missing}: "
@@ -482,15 +480,7 @@ def assemble_verdicts_extended(
             "fingerprint with extended=True throughout."
         )
 
-    log = (
-        store._for("log", fingerprint, _LOG_SCHEMA)
-        .dropDuplicates(["part"])
-        .select("part", "n_rows")
-    )
-    vol = volume_profile(log, "part").select(
-        "part", "delta_pct", "gap_months"
-    )
-
+    vol = volume_profile(log, "part").select("part", "delta_pct", "gap_months")
     wide = ext.join(vol, "part", "left")
     return core.unionByName(
         _extended_rows(wide, default_transcript_rules(), volume_abs_delta)
@@ -517,12 +507,12 @@ def metric_history_drift(
     checks = ["ref_role", "ref_tool", "null_text", "null_ts", "seq_order"]
 
     def rates(fp: str, tag: str) -> DataFrame:
-        local = store._for("local", fp)
-        # unknown fingerprint = readable relation, zero rows — both are
-        # "no completed state" (the head(1) probe is state-sized)
-        if local is None or not local.head(1):
+        commits = store._for("log", fp)
+        # unknown fingerprint = readable log, zero rows — both are "no
+        # completed state" (the head(1) probe is log-sized)
+        if commits is None or not commits.head(1):
             raise ValueError(f"no completed state for fingerprint {fp!r}")
-        local = local.dropDuplicates(["part"])
+        local = store.committed("local", fp, ["part"], commits)
         packed = local.select(
             "part",
             *[

@@ -7,12 +7,13 @@ based, not streaming-state based):
 - `stream_transcripts` reads a directory as a file-source stream with
   the transcript schema (new parquet files = new micro-batches; on a
   cluster this is an Iceberg/Kafka source).
-- `validated_stream` runs EVERY micro-batch through the same
-  partition-local state appends as `state.run_incremental` (scalar
-  verdicts, key index, drift sketch, completion log keyed by batch), so
-  a streaming deployment and a batch backfill share one state table and
-  one verdict semantics — the batch/streaming differential test asserts
-  exactly that equivalence.
+- `validated_stream` runs EVERY micro-batch through the same state
+  builder as `state.run_incremental` (`state.partition_state`: scalar
+  verdicts, key index, drift sketch, completion log keyed by batch),
+  and `stream_verdicts` reads it back through the same commit rule and
+  assembly, so a streaming deployment and a batch backfill share one
+  state table and one verdict semantics — the batch/streaming
+  differential test asserts exactly that equivalence.
 - `windowed_rates` is the genuinely-streaming piece: event-time windows
   + watermark for late data, counting turns and violation candidates
   per (window, partition) — built-in windowed aggregation (the checks
@@ -97,89 +98,42 @@ def validated_stream(
 ):
     """Start a foreachBatch query appending per-micro-batch check state.
 
-    Each batch contributes:
-      - partition-local scalar verdicts + seq counts (batch-scoped),
-      - key-index rows (cross-partition/cross-batch uniqueness folds
-        them exactly like the batch path),
-      - drift counts sketch rows,
-    into the SAME StateStore layout as `state.run_incremental`; final
-    verdicts come from `state.assemble_verdicts`, so streaming ingestion
-    and batch backfill are interchangeable (differential-tested).
-    Exactly-once: foreachBatch may retry a batch; ALL appends (local,
-    key index, sketch, log) carry the batch id in `run_id`, and
-    `stream_verdicts` dedups on (run_id, natural key) before summing —
-    retries collapse, while legitimate re-occurrences of a key in later
-    batches are preserved (they are new data, not replays).
+    Each batch goes through `state.partition_state`, the builder
+    `state.run_incremental` uses (scalar verdicts + seq counts, key
+    index, drift sketch, completion log), under run_id
+    `stream-<batchId>` and into the SAME StateStore layout; final
+    verdicts come from `stream_verdicts`, i.e. `state.assemble_verdicts`,
+    so streaming ingestion and batch backfill are interchangeable
+    (differential-tested). Exactly-once: foreachBatch may retry a batch,
+    which re-appends under the same batch id; the commit rule
+    (`StateStore.committed`) collapses such replays on (run_id, key),
+    while a key that recurs in a later batch is new data and is summed.
     """
     cfg = cfg or SuiteConfig()
-    p = cfg.partition_col
+    from pyspark import StorageLevel
 
-    from matric_spark.checks.drift import _counts
-    from matric_spark.checks.sequence import out_of_order_turns
-    from matric_spark.checks.suite import scalar_check_metrics
-    from matric_spark.state import StateStore
+    from matric_spark.state import StateStore, partition_state
 
     store = StateStore(spark, state_dir)
 
     def process(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
             return
-        # four state appends below = four separate jobs over this
-        # micro-batch; persist once so the batch source (and any
-        # upstream projection) is scanned a single time instead of four
-        # — at bench scale this is most of the per-batch fixed cost
-        # beyond the constraint suite itself
-        from pyspark import StorageLevel
-
+        # the state appends are separate jobs over this micro-batch;
+        # persist once so the batch source (and any upstream projection)
+        # is scanned a single time instead of once per append — at bench
+        # scale this is most of the per-batch fixed cost beyond the
+        # constraint suite itself
         batch.persist(StorageLevel.MEMORY_AND_DISK)
         try:
-            _process_persisted(batch, batch_id)
+            # conversation-complete batches: the batch is its own
+            # conversation superset
+            for name, df in partition_state(
+                batch, batch, cfg, f"stream-{batch_id}"
+            ):
+                store._append(df, name, fingerprint)
         finally:
             batch.unpersist(blocking=False)
-
-    def _process_persisted(batch: DataFrame, batch_id: int) -> None:
-        run_id = f"stream-{batch_id}"
-        scalar = scalar_check_metrics(batch, cfg)
-        seq = (
-            out_of_order_turns(batch)
-            .groupBy(F.col(p).alias("part"))
-            .agg(F.count(F.lit(1)).alias("seq_order"))
-        )
-        # every per-batch relation is partitions-scale tiny (local/
-        # sketch/log) or ids+counts (key_index) — coalesce the appends
-        # so the state dir holds a handful of files per batch instead
-        # of shuffle.partitions-many KB-sized ones (a micro-batched run
-        # otherwise reads hundreds of tiny parquet files at assembly)
-        local = (
-            scalar.join(seq, "part", "left")
-            .fillna(0, subset=["seq_order"])
-            .withColumn("run_id", F.lit(run_id))
-        )
-        store._append(local.coalesce(1), "local", fingerprint)
-
-        # run_id = batch id: stream_verdicts dedups appends on
-        # (run_id, natural key) — a foreachBatch RETRY (same batch id)
-        # collapses, while a genuinely new batch carrying the same
-        # natural key again is summed, so cross-batch duplicate keys and
-        # partition-spanning sketch counts stay correct.
-        key_index = (
-            batch.groupBy(*cfg.key, F.col(p).alias("part"))
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .withColumn("run_id", F.lit(run_id))
-        )
-        store._append(key_index.coalesce(4), "key_index", fingerprint)
-
-        sketch = _counts(batch, p, F.length("text")).withColumn(
-            "run_id", F.lit(run_id)
-        )
-        store._append(sketch.coalesce(1), "sketch", fingerprint)
-
-        log = (
-            batch.groupBy(F.col(p).alias("part"))
-            .agg(F.count(F.lit(1)).alias("n_rows"))
-            .select("part", F.lit(run_id).alias("run_id"), "n_rows")
-        )
-        store._append(log.coalesce(1), "log", fingerprint)
 
     src = stream_transcripts(spark, input_dir, max_files_per_trigger)
     return (
@@ -196,66 +150,18 @@ def stream_verdicts(
     fingerprint: str = "stream",
     cfg: SuiteConfig | None = None,
 ) -> DataFrame:
-    """Assemble the verdict table from streaming-appended state.
-
-    NOTE on semantics vs batch: micro-batches may split one data
-    partition across appends, so EVERY state relation is folded per
-    batch here — local metrics, the key index, and the drift sketch are
-    deduped on (run_id, natural key) to absorb foreachBatch retries,
-    then SUMMED across batches. Deduping on the natural key alone (the
-    batch/resume semantics) would silently collapse a duplicate key
-    split across two micro-batches to uniqueness=0/pass and undercount
-    sketch values whenever a data partition spans batches. Sequence
+    """Assemble the verdict table from streaming-appended state: the
+    same `state.assemble_verdicts` as a batch resume. Its commit rule
+    (`StateStore.committed`) collapses foreachBatch retries and sums a
+    partition, or a duplicate key, split across micro-batches. Sequence
     ordering is validated within each micro-batch (cross-batch
     reordering needs event-time windows — `windowed_rates` — or the
     batch path)."""
-    cfg = cfg or SuiteConfig()
     from matric_spark.state import StateStore, assemble_verdicts
 
-    store = StateStore(spark, state_dir)
-    # fold multi-batch local rows (one per (part, batch)) into one row
-    # per partition; replayed batches dedup on (part, run_id) first
-    local = store._for("local", fingerprint)
-    assert local is not None, "no streamed batches in state"
-    folded = (
-        local.dropDuplicates(["part", "run_id"])
-        .drop("run_id")
-        .groupBy("part")
-        .agg(
-            *[
-                F.sum(c).alias(c)
-                for c in local.columns
-                if c not in ("part", "run_id")
-            ]
-        )
+    return assemble_verdicts(
+        StateStore(spark, state_dir), fingerprint, cfg or SuiteConfig()
     )
-    key_folded = (
-        store._for("key_index", fingerprint)
-        .dropDuplicates(["run_id", *cfg.key, "part"])
-        .groupBy(*cfg.key, "part")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
-    sketch_folded = (
-        store._for("sketch", fingerprint)
-        .dropDuplicates(["run_id", "p", "v"])
-        .groupBy("p", "v")
-        .agg(F.sum("c").alias("c"))
-    )
-
-    class _FoldedStore(StateStore):
-        def _for(self, name: str, fp: str, schema: str | None = None):
-            if name == "local":
-                return folded
-            return StateStore._for(self, name, fp, schema)
-
-        def key_index_for(self, fp: str, _cfg):
-            return key_folded
-
-        def sketch_for(self, fp: str):
-            return sketch_folded
-
-    fs = _FoldedStore(spark, state_dir)
-    return assemble_verdicts(spark, fs, fingerprint, cfg)
 
 
 def rule_violation_stream(stream: DataFrame, rules=None, id_cols=None) -> DataFrame:

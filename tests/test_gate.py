@@ -158,3 +158,36 @@ def test_oracle_gate(spark, duck, name):
     assert check_one(
         name, e.queries()[name], spark, duck, _SF_DIR, e.oracle_sql().get(name)
     )
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
+def test_lsh_sign_margin(sf):
+    """`emb_near_dup_lsh` is value-hash gated because both engines take
+    the same sign decision for every (vector, plane): DuckDB reads the
+    sign of a sequential dot over the raw embedding, Spark of a matmul
+    over the normalized one. That holds only while no kept vector lies
+    within float slop (~1e-15) of a plane, so pin the corpus margin:
+    min |normalized dot| over the rows `_NORM_OK` keeps must stay
+    >= 1e-9 (measured 2.7e-6 to 7.3e-6 across the three scales)."""
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    from matric_spark.operators.ann import _lcg_planes
+
+    path = os.path.join(os.path.dirname(_SF_DIR), sf, "embeddings.parquet")
+    if not os.path.exists(path):
+        pytest.skip(f"testdata {sf} not present")
+    t = pq.read_table(path, columns=["vec_id", "embedding"]).to_pydict()
+    ids = np.array([i for i, v in zip(t["vec_id"], t["embedding"]) if v is not None])
+    x = np.array([v for v in t["embedding"] if v is not None], dtype=np.float64)
+    sq = np.einsum("ij,ij->i", x, x)
+    keep = np.isfinite(sq) & (sq > 0)  # duck_oracle._NORM_OK
+    ids, x = ids[keep], x[keep] / np.sqrt(sq[keep])[:, None]
+    planes = np.array(_lcg_planes(128, 64, seed=42), dtype=np.float64)
+    margin = np.abs(x @ planes.T)
+    row, plane = np.unravel_index(np.argmin(margin), margin.shape)
+    assert margin[row, plane] >= 1e-9, (
+        f"{sf}: vec_id {ids[row]} lies {margin[row, plane]:.3g} from LSH "
+        f"plane {plane}; the engines' sign bits may disagree there, so "
+        "emb_near_dup_lsh's value hash is no longer trustworthy"
+    )

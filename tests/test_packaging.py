@@ -190,6 +190,36 @@ def test_spark_submit_cluster_master_respected(tmp_path):
     assert rep["executors"] == 2, rep
 
 
+def test_spark_submit_local_star_refuses_graft_cpus(tmp_path):
+    """Regression for a silent parallelism leak: spark-submit without
+    --master runs local[*], every core of the host, and used to ignore
+    SPARK_GRAFT_CPUS. get_spark now stops the session and raises a
+    ValueError naming the --master local[N] fix."""
+    import pyspark
+
+    job = tmp_path / "job.py"
+    job.write_text(
+        "import sys; sys.path.insert(0, %r)\n"
+        "from matric_spark.session import get_spark\n"
+        "get_spark()\n" % REPO
+    )
+    spark_submit = os.path.join(
+        os.path.dirname(pyspark.__file__), "bin", "spark-submit"
+    )
+    r = subprocess.run(
+        [spark_submit, "--conf", "spark.driver.memory=1g", str(job)],
+        cwd=str(tmp_path),
+        env={**os.environ, "PYTHONPATH": "", "SPARK_GRAFT_CPUS": "2"},
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    # spark-submit's PythonRunner merges the job's stderr into stdout
+    out = r.stdout + r.stderr
+    assert r.returncode != 0, out[-2000:]
+    assert "ValueError" in out and "--master local[2]" in out, out[-4000:]
+
+
 def test_bench_compact_line_fits_driver_tail_window():
     """BENCH_r03.json recorded `parsed: null`: the driver json-parses the
     last line of a ~2000-char output tail, and a 100+-entry `queries`
@@ -233,30 +263,3 @@ def test_bench_compact_line_fits_driver_tail_window():
     # small suites serialize whole
     small = {"queries": {"a": 1.0, "b": 2.0}, "value": 1.0}
     assert json.loads(bench.compact_line(small))["queries"] == {"a": 1.0, "b": 2.0}
-
-
-def test_wait_clean_gate(monkeypatch):
-    """wait_clean must require BOTH a clean ratio and a clean absolute
-    stream time (the ratio is blind to a uniform grant collapse), and
-    must give up after the timeout with the last probe stamped."""
-    sys.path.insert(0, os.path.join(REPO, "tools"))
-    import scaling_bench as sb
-
-    seq = [
-        {"ceiling": 0.95, "stream_sec_low": 30.0, "stream_sec_high": 31.0},
-        {"ceiling": 0.50, "stream_sec_low": 3.0, "stream_sec_high": 6.0},
-        {"ceiling": 0.90, "stream_sec_low": 3.0, "stream_sec_high": 3.3},
-    ]
-    probes = iter(seq)
-    monkeypatch.setattr(sb, "_stream_ceiling", lambda lo, hi: next(probes))
-    got = sb.wait_clean(2, 8, 0.85, timeout=999.0, poll_sec=0.0)
-    assert got == seq[-1]  # ratio-dirty and abs-dirty probes both rejected
-
-    # timeout path: forever dirty -> returns after the deadline, last probe
-    monkeypatch.setattr(
-        sb, "_stream_ceiling",
-        lambda lo, hi: {"ceiling": 0.1, "stream_sec_low": 50.0,
-                        "stream_sec_high": 50.0},
-    )
-    got = sb.wait_clean(2, 8, 0.85, timeout=0.0, poll_sec=0.0)
-    assert got["ceiling"] == 0.1

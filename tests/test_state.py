@@ -40,6 +40,33 @@ def test_crash_resume_equals_fresh(spark, tiny_transcripts, tmp_path, cfg):
     assert _rows(out) == _rows(run_verdicts(tiny_transcripts, cfg))
 
 
+def test_crash_before_log_commit_resumes(
+    spark, tiny_transcripts, tmp_path, cfg, monkeypatch
+):
+    """A crash in the gap between a run's state appends and its log
+    append (the commit point) leaves state rows that no log row commits.
+    The partitions stay incomplete, the resume recomputes them under its
+    own run_id, and the assembly counts only committed rows."""
+    sd = str(tmp_path / "state")
+    append = StateStore._append
+
+    def crash_on_log(self, df, name, fingerprint):
+        if name == "log":
+            raise RuntimeError("crash before commit")
+        append(self, df, name, fingerprint)
+
+    monkeypatch.setattr(StateStore, "_append", crash_on_log)
+    with pytest.raises(RuntimeError, match="crash before commit"):
+        run_incremental(spark, tiny_transcripts, sd, "run1", "fp1", cfg)
+    monkeypatch.setattr(StateStore, "_append", append)
+
+    store = StateStore(spark, sd)
+    assert store.completed_partitions("fp1") == []
+    assert store._read("local").count() == 2  # uncommitted, not pruned
+    out = run_incremental(spark, tiny_transcripts, sd, "run2", "fp1", cfg)
+    assert _rows(out) == _rows(run_verdicts(tiny_transcripts, cfg))
+
+
 def test_resume_skips_completed_partitions(spark, tiny_transcripts, tmp_path, cfg):
     sd = str(tmp_path / "state")
     run_incremental(spark, tiny_transcripts, sd, "run1", "fp1", cfg)

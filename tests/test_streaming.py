@@ -46,6 +46,36 @@ def test_streaming_equals_batch_verdicts(spark, tiny_transcripts, staged_stream_
     assert _rows(out) == _rows(run_verdicts(tiny_transcripts, SuiteConfig()))
 
 
+def test_streaming_batch_retry_collapses(
+    spark, tiny_transcripts, staged_stream_dir, tmp_path
+):
+    """foreachBatch may run a batch again under the same batch id. Re-
+    append batch 0's four relations as such a retry would: the commit
+    rule collapses the replay on (run_id, key), so the verdicts still
+    equal the batch suite."""
+    from matric_spark.state import StateStore
+    from matric_spark.streaming.validate import stream_verdicts, validated_stream
+
+    sd = str(tmp_path / "state")
+    q = validated_stream(
+        spark,
+        staged_stream_dir,
+        state_dir=sd,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    await_or_raise(q, 120)
+    store = StateStore(spark, sd)
+    n_log = store._read("log").count()
+    for name in ["local", "key_index", "sketch", "log"]:
+        first = store._for(name, "stream").filter(F.col("run_id") == "stream-0")
+        replay = spark.createDataFrame(first.collect(), first.schema)
+        assert replay.count() > 0
+        store._append(replay, name, "stream")
+    assert store._read("log").count() > n_log
+    out = stream_verdicts(spark, sd)
+    assert _rows(out) == _rows(run_verdicts(tiny_transcripts, SuiteConfig()))
+
+
 def test_streaming_cross_batch_duplicate_key_fails_uniqueness(spark, tmp_path):
     """Regression: a duplicate (conv_id, turn_idx) SPLIT ACROSS two
     micro-batches must be reported exactly like the batch suite reports

@@ -19,10 +19,9 @@ keeps both levels in the same clock regime (see BASELINE.md "Why 4->16":
 32-thread load trips turbo throttling on this host).
 
 Methodology mirrors scaling_bench.py: materialized many-file input,
-interleaved levels, best-of-inner warm reps per fresh driver JVM, and a
-concurrent memory-bus ceiling probe bracketing every interleave (the
-host is a shared VM; an efficiency reading is only interpretable next to
-the bus grant it was measured under).
+interleaved levels, best-of-inner warm reps per fresh driver JVM. Host
+contention is not probed here; perfbench records CPU steal per run
+(`host_steal`).
 
 Usage: python tools/cluster_scaling_bench.py [--copies 64] [--runs 2]
        [--low-cores-max 4] [--high-cores-max 16] [--executor-cores 4]
@@ -44,13 +43,7 @@ SPARK_HOME = os.environ.get("SPARK_HOME", "/opt/spark")
 MASTER_URL = "spark://127.0.0.1:7077"
 
 sys.path.insert(0, os.path.join(REPO, "tools"))
-from scaling_bench import (  # noqa: E402
-    _PREPARE,
-    _run,
-    _stream_ceiling,
-    CLEAN_STREAM_SEC,
-    wait_clean,
-)
+from scaling_bench import _PREPARE, _run  # noqa: E402
 
 
 def _daemon_env() -> dict:
@@ -136,13 +129,6 @@ def main() -> None:
     ap.add_argument("--files", type=int, default=96)
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
     ap.add_argument("--input-dir", default=None)
-    ap.add_argument("--wait-clean", type=float, default=0.0,
-                    help="block each interleave until the bus probe reads "
-                         "ceiling >= this AND absolute stream sec <= "
-                         f"{CLEAN_STREAM_SEC} (0 = run immediately)")
-    ap.add_argument("--wait-timeout", type=float, default=7200.0,
-                    help="max seconds to wait for a clean window before "
-                         "proceeding anyway (stamped either way)")
     args = ap.parse_args()
     if args.input_dir is None:
         args.input_dir = f"/tmp/graft_scaling_input_x{args.copies}"
@@ -170,7 +156,6 @@ def main() -> None:
 
     low_n = args.low_cores_max // args.executor_cores
     levels: dict[int, dict] = {}
-    ceilings: list[dict] = []
     history: list[dict] = []
     stop_cluster()  # stale daemons from a crashed run
     try:
@@ -178,16 +163,6 @@ def main() -> None:
         # reaps the already-running master — stop_cluster is idempotent
         start_cluster(worker_cores, worker_mem)
         for i in range(args.runs):
-            if args.wait_clean > 0:
-                # the gate's own passing probe IS the bracketing stamp —
-                # a second probe here could land in a flipped window and
-                # costs multi-seconds per interleave
-                probe = wait_clean(args.low_cores_max, args.high_cores_max,
-                                   args.wait_clean, args.wait_timeout)
-            else:
-                probe = _stream_ceiling(args.low_cores_max,
-                                        args.high_cores_max)
-            ceilings.append(probe)
             for cores_max in (args.low_cores_max, args.high_cores_max):
                 rep = submit(cores_max, args.executor_cores,
                              args.executor_mem, args.input_dir, args.inner)
@@ -209,7 +184,6 @@ def main() -> None:
         "executor_ratio": ratio,
         "speedup": round(lo["sec"] / hi["sec"], 3),
         "efficiency": round(eff, 3),
-        "host_stream_ceiling": ceilings,
         "history": history,
         "sf": args.sf_dir, "copies": args.copies,
         "expected_executors": {"low": low_n, "high": n_exec_high},

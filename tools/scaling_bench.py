@@ -20,14 +20,9 @@ Method notes (what made the measurement honest):
   untimed count).
 - Shuffle partitions scale with the core count (session.py), so the
   reduce side also widens from N to 4N.
-- Every interleave records the host's CONCURRENT memory-bus grant: a
-  pure numpy streaming loop run low-way and high-way right before the
-  job pair. Its per-core slowdown bounds what ANY stream-bound job can
-  measure at that moment (ceiling = t_low/t_high); on this shared VM
-  the grant swings by >2x between noisy-neighbor windows (round-4
-  measurements: identical single-process work ranged 1.8-3.9 s minutes
-  apart), so a job efficiency reading is only interpretable next to
-  the ceiling it was measured under.
+- Host contention is not probed here: a shared host's noisy
+  neighbours show up as CPU steal, which perfbench records per run
+  (`host_steal`).
 
 Usage: python tools/scaling_bench.py [--copies 16] [--runs 2]
        [--low 8] [--high 32] [--sf-dir /root/testdata/sf0.1]
@@ -98,72 +93,6 @@ print(json.dumps({"cpus": cpus, "n_turns": n_turns, "sec": round(best, 2),
 """
 
 
-_CAL = r"""
-import numpy as np, time
-n = 40_000_000  # 320 MB buffer/proc: far past LLC, pure bus traffic
-a = np.ones(n); b = np.empty_like(a)
-t0 = time.time()
-for _ in range(30):
-    np.multiply(a, 1.0000001, out=b)
-    a, b = b, a
-print(round(time.time() - t0, 3))
-"""
-
-
-def _stream_ceiling(low: int, high: int) -> dict:
-    """Concurrent memory-bus calibration: median per-process time of a
-    pure numpy streaming loop at low-way vs high-way parallelism.
-    ceiling = t_low/t_high is the best efficiency a fully stream-bound,
-    perfectly parallel job can measure on this host RIGHT NOW."""
-
-    def batch(k: int) -> float:
-        procs = [
-            subprocess.Popen(
-                [sys.executable, "-c", _CAL],
-                stdout=subprocess.PIPE,
-                text=True,
-            )
-            for _ in range(k)
-        ]
-        times = sorted(float(p.communicate()[0]) for p in procs)
-        return times[len(times) // 2]
-
-    t_low, t_high = batch(low), batch(high)
-    return {
-        "stream_sec_low": t_low,
-        "stream_sec_high": t_high,
-        "ceiling": round(min(t_low / t_high, 1.0), 3),
-    }
-
-
-#: clean-host band for the calibration loop's ABSOLUTE time (seconds);
-#: the ratio alone is blind to a uniform grant collapse where every
-#: parallelism level slows 10x equally (BASELINE.md, session-4 record)
-CLEAN_STREAM_SEC = 5.0
-
-
-def wait_clean(low: int, high: int, threshold: float, timeout: float,
-               poll_sec: float = 180.0) -> dict:
-    """Block until the bus probe reads ceiling >= threshold AND an
-    absolute stream time inside the clean-host band, or `timeout`
-    elapses (measurement proceeds either way, stamped). Each probe is
-    logged to stderr so an aborted wait still leaves a record."""
-    import time as _time
-
-    t0 = _time.time()
-    while True:
-        probe = _stream_ceiling(low, high)
-        clean = (probe["ceiling"] >= threshold
-                 and probe["stream_sec_low"] <= CLEAN_STREAM_SEC)
-        waited = _time.time() - t0
-        print(json.dumps({"waiting": not clean,
-                          "waited_sec": round(waited, 1), **probe}),
-              file=sys.stderr)
-        if clean or waited > timeout:
-            return probe
-        _time.sleep(poll_sec)
-
-
 def _run(code: str, env: dict) -> str:
     out = subprocess.run(
         [sys.executable, "-c", code], env=env, capture_output=True, text=True
@@ -189,11 +118,6 @@ def main() -> None:
     ap.add_argument("--files", type=int, default=96)
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
     ap.add_argument("--input-dir", default=None)
-    ap.add_argument("--wait-clean", type=float, default=0.0,
-                    help="block each interleave until the bus probe reads "
-                         "ceiling >= this AND absolute stream sec <= "
-                         f"{CLEAN_STREAM_SEC} (0 = run immediately)")
-    ap.add_argument("--wait-timeout", type=float, default=7200.0)
     args = ap.parse_args()
     if args.input_dir is None:
         # copies-specific dir: a stale marker from a different --copies
@@ -226,13 +150,8 @@ def main() -> None:
     # one (measured: cold-only 16-core reps read 165s where the warm
     # steady state is ~101s on the same input).
     levels: dict[int, dict] = {}
-    ceilings: list[dict] = []
     env["SB_RUNS"] = str(args.inner)
     for _ in range(args.runs):
-        if args.wait_clean > 0:
-            wait_clean(args.low, args.high, args.wait_clean,
-                       args.wait_timeout)
-        ceilings.append(_stream_ceiling(args.low, args.high))
         for cpus in (args.low, args.high):
             env["SB_CPUS"] = str(cpus)
             out = _run(_CHILD, env)
@@ -254,7 +173,6 @@ def main() -> None:
                 "parallelism_ratio": ratio,
                 "speedup": round(lo["sec"] / hi["sec"], 3),
                 "efficiency": round(eff, 3),
-                "host_stream_ceiling": ceilings,
                 "sf": args.sf_dir,
                 "copies": args.copies,
             }
