@@ -17,7 +17,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from matric_spark.checks.column_stats import column_stats
-from matric_spark.checks.drift import ks_by_partition, psi_by_partition
+from matric_spark.checks.drift import (
+    counts_sketch,
+    drift_by_partition,
+    entropy_by_partition,
+)
 from matric_spark.checks.referential import domain_violations
 from matric_spark.checks.sequence import (
     DEFAULT_ROLE_GRAMMAR,
@@ -134,17 +138,13 @@ def q_seq_out_of_order(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_drift_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = ks_by_partition(
-        None, "part_month", None, precomputed=_drift_sketch(spark, sf_dir)
-    )
-    return _round6(out, ["ks_d", "ks_p"])
+    out = drift_by_partition(_drift_sketch(spark, sf_dir), "part_month")
+    return _round6(out.drop("psi", "emd"), ["ks_d", "ks_p"])
 
 
 def q_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = psi_by_partition(
-        None, "part_month", None, precomputed=_drift_sketch(spark, sf_dir)
-    )
-    return _round6(out, ["psi"])
+    out = drift_by_partition(_drift_sketch(spark, sf_dir), "part_month")
+    return _round6(out.select("part_month", "n_part", "psi"), ["psi"])
 
 
 def q_role_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -181,23 +181,15 @@ def q_partition_spillover(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_drift_emd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wasserstein-1 drift of text length per partition cohort vs its
     complement — the integral counterpart of drift_ks's max gap."""
-    from matric_spark.checks.drift import emd_by_partition
-
-    out = emd_by_partition(
-        None, "part_month", None, precomputed=_drift_sketch(spark, sf_dir)
-    )
-    return _round6(out, ["emd"])
+    out = drift_by_partition(_drift_sketch(spark, sf_dir), "part_month")
+    return _round6(out.drop("ks_d", "ks_p", "psi"), ["emd"])
 
 
 def q_colstats_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shannon entropy of the text-length distribution per partition —
     a collapsing domain (template takeover) drops entropy before any
     referential/drift check fires."""
-    from matric_spark.checks.drift import entropy_by_partition
-
-    out = entropy_by_partition(
-        None, "part_month", None, precomputed=_drift_sketch(spark, sf_dir)
-    )
+    out = entropy_by_partition(_drift_sketch(spark, sf_dir), "part_month")
     return _round6(out, ["entropy"])
 
 
@@ -688,8 +680,6 @@ def _drift_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     _tapes/_level10 style, so four gated entries cost one table scan."""
     path = _DRIFT_SKETCH_CACHE.get(sf_dir)
     if path is None:
-        from matric_spark.checks.drift import counts_sketch
-
         t = transcript_df(spark, sf_dir)
         out = counts_sketch(t, "part_month", F.length("text"))
         path = _scratch("graft_drift_") + "/sketch.parquet"
@@ -707,8 +697,6 @@ def _events_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialize-once pattern as _drift_sketch."""
     path = _EVENTS_SKETCH_CACHE.get(sf_dir)
     if path is None:
-        from matric_spark.checks.drift import counts_sketch
-
         ev = spark.read.parquet(f"{sf_dir}/events.parquet").withColumn(
             "cohort",
             (F.year("ts") * 10000 + F.month("ts") * 100 + F.dayofmonth("ts"))
@@ -1150,22 +1138,16 @@ def q_events_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temporal drift: KS of floor(value) for each DAY cohort vs the rest
     of the event stream — the time-axis twin of drift_ks's partition
     cohorts."""
-    out = ks_by_partition(
-        None, "cohort", None, precomputed=_events_sketch(spark, sf_dir)
-    )
-    return _round6(out, ["ks_d", "ks_p"])
+    out = drift_by_partition(_events_sketch(spark, sf_dir), "cohort")
+    return _round6(out.drop("psi", "emd"), ["ks_d", "ks_p"])
 
 
 def q_events_emd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wasserstein-1 of floor(value) for each DAY cohort vs the rest of
     the event stream — the time-axis twin of drift_emd (and the
     magnitude complement to events_drift's KS)."""
-    from matric_spark.checks.drift import emd_by_partition
-
-    out = emd_by_partition(
-        None, "cohort", None, precomputed=_events_sketch(spark, sf_dir)
-    )
-    return _round6(out, ["emd"])
+    out = drift_by_partition(_events_sketch(spark, sf_dir), "cohort")
+    return _round6(out.drop("ks_d", "ks_p", "psi"), ["emd"])
 
 
 def q_conv_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1981,8 +1963,8 @@ def queries_manifest() -> dict[str, dict[str, str]]:
 
 def _ks_ctes(src: str, part: str, val: str) -> str:
     """CTE chain computing the per-cohort two-sample KS statistic of
-    `val` (cohort vs complement) over `src` — mirrors
-    checks/drift.ks_by_partition step for step."""
+    `val` (cohort vs complement) over `src` — mirrors the ECDF grid of
+    checks/drift.drift_by_partition step for step."""
     return f"""
 cnt AS (SELECT {part} p, {val} v, CAST(count(*) AS BIGINT) c
         FROM {src} WHERE {val} IS NOT NULL GROUP BY 1, 2),
@@ -2006,7 +1988,7 @@ ks AS (SELECT p, np AS n_part, n_total - np AS n_rest,
 
 # the EMD tail over the shared cnt→cum grid (assumes the _ks_ctes
 # chain in scope; the trailing unused `ks` CTE is harmless).
-# The coalesce fallback mirrors emd_by_partition's degenerate guard:
+# The coalesce fallback mirrors drift_by_partition's degenerate guard:
 # CASE WHEN np < n_total (not a bare 0.0), so a single-cohort input
 # yields NULL emd on BOTH engines.
 _EMD_SELECT = """

@@ -22,8 +22,8 @@ command line. See session.py.)
 
 (The cluster-provided master is respected — get_spark only forces
 local[N] when the process was launched outside spark-submit; see
-session.py and tools/cluster_scaling_bench.py for the measured
-multi-executor deployment of exactly this entry point.)
+session.py, and tests/test_packaging.py, which spark-submits the suite
+(tools/cluster_scaling_job.py) to a two-executor local-cluster.)
 
 The job validates only partitions not yet completed for the input's
 lineage fingerprint (resume-without-recompute), appends per-partition

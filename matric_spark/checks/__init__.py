@@ -24,4 +24,4 @@ from matric_spark.checks.column_stats import column_stats  # noqa: F401
 from matric_spark.checks.uniqueness import duplicate_keys, uniqueness_violations  # noqa: F401
 from matric_spark.checks.referential import domain_violations  # noqa: F401
 from matric_spark.checks.sequence import conversation_shape, out_of_order_turns  # noqa: F401
-from matric_spark.checks.drift import ks_by_partition, psi_by_partition  # noqa: F401
+from matric_spark.checks.drift import drift_by_partition  # noqa: F401

@@ -22,13 +22,11 @@ only two read the wide text column:
             shuffles here. Standalone duplicate_row_counts (hash-first,
             8-byte shuffle) remains the right shape when uniqueness runs
             alone; inside the suite the window exchange is already paid.
-  1 scan  — drift value-counts, PERSISTED: KS and PSI consume the
-            (p, v, c) sketch through ~6 sub-relations (ECDF grid,
-            re-bucketing), and exchange-reuse does NOT deduplicate them
-            (column pruning canonicalizes the branches differently —
-            measured), so an unpersisted sketch re-scans the table once
-            per consumer. Persisting pins the fan-out to the sketch,
-            whose size is |partitions| x |distinct values|, not |rows|.
+  1 scan  — drift value-counts: KS and PSI come from ONE partition x
+            value grid over the (p, v, c) sketch (drift_by_partition),
+            whose three consumers read one reused exchange — so the
+            sketch is neither persisted nor re-scanned, and everything
+            after it is |partitions| x |distinct values|, not |rows|.
 Violation ROWS are materialized lazily on demand (separate filters that
 each push down to the scan), optionally capped.
 """
@@ -40,7 +38,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from matric_spark.checks.drift import ks_by_partition, psi_by_partition, _counts
+from matric_spark.checks.drift import counts_sketch, drift_by_partition
 from matric_spark.checks.referential import domain_violations
 from matric_spark.checks.sequence import out_of_order_turns
 from matric_spark.checks.uniqueness import uniqueness_violations
@@ -129,15 +127,7 @@ def conv_keyed_metrics(df: DataFrame, cfg: SuiteConfig) -> DataFrame:
 def run_verdicts(df: DataFrame, cfg: SuiteConfig | None = None) -> DataFrame:
     """The flagship query: per-(partition, check) verdict table
     (part, check_id, metric, status), every partition present for every
-    check, 'fail' iff the check's threshold is exceeded.
-
-    Cache lifecycle is CALLER-OWNED: the drift sketch below is
-    persist()ed and consumed lazily by the returned plan, so it cannot
-    be unpersisted here — a long-lived driver invoking run_verdicts
-    repeatedly must release it between calls
-    (spark.catalog.clearCache(), as bench.py / tools/check_oracle.py /
-    tools/scaling_bench.py all do) or the storage pool accumulates one
-    sketch per invocation."""
+    check, 'fail' iff the check's threshold is exceeded."""
     cfg = cfg or SuiteConfig()
     p = cfg.partition_col
 
@@ -147,17 +137,7 @@ def run_verdicts(df: DataFrame, cfg: SuiteConfig | None = None) -> DataFrame:
         .join(conv_keyed_metrics(df, cfg), "part", "left")
         .fillna(0, subset=["uniqueness", "seq_order"])
     )
-
-    # drift: ONE persisted counts sketch feeds both KS and PSI — the
-    # persist is load-bearing: the ECDF/re-bucket consumers otherwise
-    # each re-derive the sketch from a fresh table scan (exchange reuse
-    # does not fire across their differently-pruned branches)
-    from pyspark import StorageLevel
-
-    counts = _counts(df, p, F.length("text")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    return core_rows(local, counts, cfg)
+    return core_rows(local, counts_sketch(df, p, F.length("text")), cfg)
 
 
 def _entry(metric: Column, fail_when: Column) -> Column:
@@ -195,11 +175,8 @@ def core_rows(local: DataFrame, sketch: DataFrame, cfg: SuiteConfig) -> DataFram
     uniqueness, seq_order), one row per partition. ``sketch``: the
     (p, v, c) text-length counts; KS and PSI of every partition against
     its complement are derived from it here."""
-    ks = ks_by_partition(None, "part", None, precomputed=sketch)
-    psi = psi_by_partition(None, "part", None, precomputed=sketch)
-    wide = local.join(ks.select("part", "ks_d"), "part", "left").join(
-        psi.select("part", "psi"), "part", "left"
-    )
+    drift = drift_by_partition(sketch, "part").select("part", "ks_d", "psi")
+    wide = local.join(drift, "part", "left")
     cells = {
         c: _entry(F.col(c), F.col(c) > 0)
         for c in ["ref_role", "ref_tool", "null_text", "null_ts", "uniqueness", "seq_order"]

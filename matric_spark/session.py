@@ -131,7 +131,7 @@ def get_spark(
     # submitted config — under Spark 4 the submitted master is NOT
     # mirrored into JVM system properties, so the SparkConf probe alone
     # misses it and would silently downgrade a standalone-cluster submit
-    # to local mode; caught by tools/cluster_scaling_bench.py), and the
+    # to local mode; pinned by tests/test_packaging.py), and the
     # SparkConf probe covers an explicitly pre-set spark.master property.
     from pyspark import SparkConf
 
@@ -195,4 +195,14 @@ def get_spark(
             f"pass --master local[{env}] to spark-submit"
         )
     spark.sparkContext.setLogLevel("WARN")
+    # WindowExec warns "No Partition Defined" once per plan of each global
+    # (un-partitioned) window. The engine's three are deliberate and small:
+    # metrics.bh_adjust ranks a metric-level table (one row per (row,
+    # group)); column_stats.volume_profile and text_analysis.vocab_drift
+    # lag one row per partition.
+    jvm = spark.sparkContext._jvm
+    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+        "org.apache.spark.sql.execution.window.WindowExec",
+        jvm.org.apache.logging.log4j.Level.ERROR,
+    )
     return spark

@@ -66,7 +66,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from matric_spark.checks.constraints import default_transcript_rules
-from matric_spark.checks.drift import _counts
+from matric_spark.checks.drift import counts_sketch
 from matric_spark.checks.sequence import out_of_order_turns
 from matric_spark.checks.suite import (
     SuiteConfig,
@@ -339,7 +339,7 @@ def partition_state(
             "key_index",
             rows.groupBy(*cfg.key, part).agg(F.count(F.lit(1)).alias("cnt")),
         ),
-        ("sketch", _counts(rows, p, F.length("text")).coalesce(1)),
+        ("sketch", counts_sketch(rows, p, F.length("text")).coalesce(1)),
     ]
     if extended:
         ext = extended_partition_metrics(

@@ -24,13 +24,10 @@ based, not streaming-state based):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from matric_spark.checks.suite import SuiteConfig
-from matric_spark.schema import DEFAULT_ROLE_DOMAIN
 
 TRANSCRIPT_DDL = (
     "conv_id string, turn_idx int, role string, text string, "

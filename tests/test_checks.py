@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from matric_spark.checks.column_stats import column_stats
-from matric_spark.checks.drift import ks_by_partition, psi_by_partition, _counts
+from matric_spark.checks.drift import counts_sketch, drift_by_partition, entropy_by_partition
 from matric_spark.checks.referential import domain_violations
 from matric_spark.checks.sequence import conversation_shape, out_of_order_turns, text_parity
 from matric_spark.checks.suite import SuiteConfig, run_verdicts
@@ -112,7 +112,7 @@ def test_ks_two_identical_cohorts(spark):
     # identical length distributions in both partitions -> D = 0
     rows = [(p, "x" * (i % 5 + 1)) for p in (1, 2) for i in range(50)]
     df = spark.createDataFrame(rows, "part int, text string")
-    out = ks_by_partition(df, "part", F.length("text")).collect()
+    out = drift_by_partition(counts_sketch(df, "part", F.length("text")), "part").collect()
     assert all(r["ks_d"] == pytest.approx(0.0) for r in out)
     assert all(r["ks_p"] == pytest.approx(1.0) for r in out)
 
@@ -121,7 +121,8 @@ def test_ks_disjoint_cohorts(spark):
     # completely disjoint supports -> D = 1
     rows = [(1, "x" * 2)] * 30 + [(2, "x" * 50)] * 30
     df = spark.createDataFrame(rows, "part int, text string")
-    out = {r["part"]: r for r in ks_by_partition(df, "part", F.length("text")).collect()}
+    sk = counts_sketch(df, "part", F.length("text"))
+    out = {r["part"]: r for r in drift_by_partition(sk, "part").collect()}
     assert out[1]["ks_d"] == pytest.approx(1.0)
     assert out[2]["ks_d"] == pytest.approx(1.0)
     assert out[1]["ks_p"] < 1e-6
@@ -130,16 +131,27 @@ def test_ks_disjoint_cohorts(spark):
 def test_psi_identical_is_zero(spark):
     rows = [(p, "x" * (60 * (i % 4))) for p in (1, 2) for i in range(40)]
     df = spark.createDataFrame(rows, "part int, text string")
-    out = psi_by_partition(df, "part", F.length("text")).collect()
+    out = drift_by_partition(counts_sketch(df, "part", F.length("text")), "part").collect()
     assert all(abs(r["psi"]) < 1e-12 for r in out)
 
 
-def test_psi_precomputed_equals_standalone(tiny_transcripts):
-    cnt = _counts(tiny_transcripts, "part_month", F.length("text"))
-    a = sorted(map(tuple, psi_by_partition(tiny_transcripts, "part_month", F.length("text")).collect()))
-    b = sorted(map(tuple, psi_by_partition(
-        tiny_transcripts, "part_month", F.length("text"), precomputed=cnt).collect()))
-    assert a == pytest.approx(b)
+def test_psi_closed_form(spark):
+    """Two partitions over three 50-wide buckets, each missing one bucket
+    the other has: psi is the docstring formula with B = 3, the buckets
+    observed in ANY partition (per partition, B would be 2)."""
+    import numpy as np
+
+    rows = (
+        [("A", 0)] * 3 + [("A", 60)]           # buckets 0, 1
+        + [("B", 10)] * 2 + [("B", 120)] * 2   # buckets 0, 2
+    )
+    df = spark.createDataFrame(rows, "p string, v int")
+    out = {r.p: r.psi for r in drift_by_partition(counts_sketch(df, "p", F.col("v")), "p").collect()}
+    a, b = np.array([3.0, 1.0, 0.0]), np.array([2.0, 0.0, 2.0])
+    for name, part, rest in (("A", a, b), ("B", b, a)):
+        pa = (part + 0.5) / (part.sum() + 0.5 * 3)
+        pb = (rest + 0.5) / (rest.sum() + 0.5 * 3)
+        assert out[name] == pytest.approx(float(np.sum((pa - pb) * np.log(pa / pb))), rel=1e-12)
 
 
 def test_verdicts(tiny_transcripts):
@@ -356,11 +368,9 @@ def test_conv_token_stats(tiny_transcripts):
 def test_emd_by_partition_closed_form(spark):
     """Two point masses one value-unit apart: each cohort's EMD vs its
     complement is exactly 1.0 (all mass moves distance 1)."""
-    from matric_spark.checks.drift import emd_by_partition
-
     rows = [("A", 0), ("A", 0), ("B", 1), ("B", 1)]
     df = spark.createDataFrame(rows, "p string, v int")
-    out = {r.p: r for r in emd_by_partition(df, "p", F.col("v")).collect()}
+    out = {r.p: r for r in drift_by_partition(counts_sketch(df, "p", F.col("v")), "p").collect()}
     assert out["A"].emd == 1.0 and out["B"].emd == 1.0
     assert out["A"].n_part == 2 and out["A"].n_rest == 2
 
@@ -369,18 +379,18 @@ def test_emd_vs_ks_sensitivity(spark):
     """A small shift moves EMD proportionally to distance while KS only
     sees the overlap fraction: shifting one cohort by 10 value units
     yields EMD 10× the 1-unit shift, same KS."""
-    from matric_spark.checks.drift import emd_by_partition, ks_by_partition
-
     near = spark.createDataFrame(
         [("A", 0)] * 4 + [("B", 1)] * 4, "p string, v int"
     )
     far = spark.createDataFrame(
         [("A", 0)] * 4 + [("B", 10)] * 4, "p string, v int"
     )
-    emd_near = emd_by_partition(near, "p", F.col("v")).collect()[0].emd
-    emd_far = emd_by_partition(far, "p", F.col("v")).collect()[0].emd
-    ks_near = ks_by_partition(near, "p", F.col("v")).collect()[0].ks_d
-    ks_far = ks_by_partition(far, "p", F.col("v")).collect()[0].ks_d
+    emd_near, ks_near = drift_by_partition(
+        counts_sketch(near, "p", F.col("v")), "p"
+    ).select("emd", "ks_d").first()
+    emd_far, ks_far = drift_by_partition(
+        counts_sketch(far, "p", F.col("v")), "p"
+    ).select("emd", "ks_d").first()
     assert emd_far == 10 * emd_near
     assert ks_near == ks_far == 1.0
 
@@ -388,14 +398,12 @@ def test_emd_vs_ks_sensitivity(spark):
 def test_entropy_by_partition_closed_form(spark):
     import math
 
-    from matric_spark.checks.drift import entropy_by_partition
-
     rows = (
         [("A", 0), ("A", 0), ("A", 1), ("A", 1)]  # uniform over 2 → ln 2
         + [("B", 5), ("B", 5), ("B", 5)]          # degenerate → 0
     )
     df = spark.createDataFrame(rows, "p string, v int")
-    out = {r.p: r for r in entropy_by_partition(df, "p", F.col("v")).collect()}
+    out = {r.p: r for r in entropy_by_partition(counts_sketch(df, "p", F.col("v")), "p").collect()}
     assert abs(out["A"].entropy - math.log(2)) < 1e-12
     assert out["A"].n_values == 2
     assert out["B"].entropy == 0.0 and out["B"].n_values == 1
@@ -404,40 +412,30 @@ def test_entropy_by_partition_closed_form(spark):
 def test_drift_degenerate_single_partition_yields_null(spark):
     """One partition = empty complement cohort: KS and EMD must emit
     NULL statistics (integer-guarded), not NaN or an ANSI
-    divide-by-zero error."""
-    from matric_spark.checks.drift import emd_by_partition, ks_by_partition
-
+    divide-by-zero error; PSI is 0 (one bucket, pa = pb = 1)."""
     df = spark.createDataFrame(
         [("A", v) for v in (1, 2, 3, 4)], "p string, v int"
     )
-    k = ks_by_partition(df, "p", F.col("v")).collect()[0]
+    k = drift_by_partition(counts_sketch(df, "p", F.col("v")), "p").collect()[0]
     assert k.n_rest == 0
     assert k.ks_d is None and k.ks_p is None
-    e = emd_by_partition(df, "p", F.col("v")).collect()[0]
-    assert e.emd is None
+    assert k.emd is None
+    assert k.psi == 0.0
 
 
-def test_drift_sketch_reuse_matches_direct(spark):
-    """precomputed= path ≡ direct computation (incl. a parquet
-    roundtrip of the sketch, as __spark_entry__._drift_sketch does)."""
-    import tempfile
-
-    from matric_spark.checks.drift import (
-        counts_sketch,
-        emd_by_partition,
-        entropy_by_partition,
-        ks_by_partition,
-    )
-
+def test_drift_sketch_parquet_roundtrip(spark, tmp_path):
+    """An in-memory sketch and the same sketch read back from parquet
+    (as __spark_entry__._drift_sketch and the state table do) give the
+    same drift and entropy rows."""
     rows = [("A", v % 7) for v in range(40)] + [("B", v % 5) for v in range(25)]
     df = spark.createDataFrame(rows, "p string, v int")
-    path = tempfile.mkdtemp(prefix="sketch_") + "/s.parquet"
-    counts_sketch(df, "p", F.col("v")).write.parquet(path)
-    sk = spark.read.parquet(path)
-    for fn in (ks_by_partition, emd_by_partition, entropy_by_partition):
-        direct = sorted(map(tuple, fn(df, "p", F.col("v")).collect()))
-        shared = sorted(map(tuple, fn(None, "p", None, precomputed=sk).collect()))
-        assert direct == shared, fn.__name__
+    sk = counts_sketch(df, "p", F.col("v"))
+    path = str(tmp_path / "s.parquet")
+    sk.write.parquet(path)
+    for fn in (drift_by_partition, entropy_by_partition):
+        direct = sorted(map(tuple, fn(sk, "p").collect()))
+        read_back = sorted(map(tuple, fn(spark.read.parquet(path), "p").collect()))
+        assert direct == read_back, fn.__name__
 
 
 def test_robust_outliers_planted(spark):

@@ -68,17 +68,17 @@ def test_ks_self_is_zero_and_bounded(spark, vals):
     """KS of two identical cohorts is 0 (p=1); any KS D ∈ [0,1]."""
     from pyspark.sql import functions as F
 
-    from matric_spark.checks.drift import ks_by_partition
+    from matric_spark.checks.drift import counts_sketch, drift_by_partition
 
     rows = [(p, "x" * (v + 1)) for p in (1, 2) for v in vals]
     df = spark.createDataFrame(rows, "part int, text string")
-    out = ks_by_partition(df, "part", F.length("text")).collect()
+    out = drift_by_partition(counts_sketch(df, "part", F.length("text")), "part").collect()
     for r in out:
         assert r.ks_d == pytest.approx(0.0) and r.ks_p == pytest.approx(1.0)
 
     skew = [(1, "x" * (v + 1)) for v in vals] + [(2, "y" * (v + 60)) for v in vals]
     df2 = spark.createDataFrame(skew, "part int, text string")
-    for r in ks_by_partition(df2, "part", F.length("text")).collect():
+    for r in drift_by_partition(counts_sketch(df2, "part", F.length("text")), "part").collect():
         assert 0.0 <= r.ks_d <= 1.0 and 0.0 <= r.ks_p <= 1.0
         assert r.ks_d == pytest.approx(1.0)  # disjoint supports
 
