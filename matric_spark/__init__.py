@@ -10,7 +10,7 @@ ts timestamp).
 Layout
 ------
 - ``session``     SparkSession factory (AQE, Arrow, UTC, skew-join configs)
-- ``schema``      transcript schema + annotation/feature split helpers
+- ``schema``      transcript schema + referential-check domains
 - ``checks``      the validation suite: column stats, uniqueness,
                   referential integrity, sequence invariants, drift
 - ``operators``   matric parity: sim_calculate / sim_filter / sim_collate /

@@ -10,7 +10,7 @@ Semantics lineage (reference, cited per function):
 - column stats   ← preprocess_data's null accounting (R/utils.R:97-120)
                    + background stats (R/sim_metrics.R:391-404)
 - uniqueness     ← matric's pair-dedup discipline (R/sim_calculate.R:293-299,
-                   396-399), made a first-class salted two-phase constraint
+                   396-399), made a first-class hash-first key count
 - referential    ← sim_validate id-domain checks
                    (R/sim_construct-validate.R:69-78) + predicate-by-example
                    semi/anti joins (R/sim_filter.R:49-103)

@@ -19,9 +19,7 @@ only two read the wide text column:
             sort (conv_id, turn_idx, ts) covers the key window's
             (conv_id, turn_idx) — so BOTH checks ride ONE exchange and
             ONE sort (plan-pinned in tests/test_plans.py). Text never
-            shuffles here. Standalone duplicate_row_counts (hash-first,
-            8-byte shuffle) remains the right shape when uniqueness runs
-            alone; inside the suite the window exchange is already paid.
+            shuffles here.
   1 scan  — drift value-counts: KS and PSI come from ONE partition x
             value grid over the (p, v, c) sketch (drift_by_partition),
             whose three consumers read one reused exchange — so the
@@ -81,8 +79,8 @@ def conv_keyed_metrics(df: DataFrame, cfg: SuiteConfig) -> DataFrame:
       as out_of_order_turns, so the two can never drift.
     - uniqueness: rows participating in duplicated composite keys,
       null-keyed rows excluded — the same semantics as
-      duplicate_row_counts (the count window runs over the REAL key, so
-      there is no hash-collision risk to void).
+      uniqueness.duplicate_keys (the count window runs over the REAL key,
+      so there is no hash-collision risk to void).
 
     Physical shape (see module docstring): the key-count window needs
     only ClusteredDistribution(*key), which the sequence window's

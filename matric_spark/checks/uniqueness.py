@@ -6,13 +6,9 @@ keys multiply downstream inner joins. Here uniqueness on
 ``(conv_id, turn_idx)`` is a first-class constraint with materialized
 violation rows.
 
-Scale notes: Spark's hash aggregate is already two-phase (map-side partial
-combine → shuffle → final), which handles *value* skew in the count. The
-explicit salted variant additionally spreads the FINAL aggregation of a
-pathologically hot key across ``n_salt`` reducers — needed when one key
-occurs so often that even partial counts flood one reducer's hash table
-(e.g. a crawler bug repeating one (conv_id, turn_idx) billions of times).
-``strategy='direct'`` and ``'salted'`` are differential-tested equal.
+Skew: Spark's hash aggregate is two-phase, so a hot key reaches its final
+reducer as at most one partial count per input split (tests/test_skew.py
+pins a 500× hot key).
 
 NULL-key semantics (uniform across every function here, pinned by
 tests/test_checks.py::test_uniqueness_null_keys_excluded): rows with a
@@ -22,13 +18,13 @@ USING(...)`` and Spark's equi-joins agree on this), so "two rows with the
 same NULL key" is not a well-defined duplicate — and nullness of a key
 column is its own check (column_stats null-rate / a not-null constraint),
 not a uniqueness violation. Window.partitionBy DOES group NULL tuples
-together, which is why the window paths must pre-filter to keep the
-window and join formulations differential-equal on null-key data.
+together, which is why the verdict path's key window
+(suite.conv_keyed_metrics) masks null-keyed rows out of its count.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -40,98 +36,37 @@ def _non_null_keys(df: DataFrame, key: list[str]) -> DataFrame:
     return df.filter(cond)
 
 
-def duplicate_keys(
-    df: DataFrame,
-    key: list[str],
-    strategy: str = "hash",
-    n_salt: int = 16,
-) -> DataFrame:
+def duplicate_keys(df: DataFrame, key: list[str]) -> DataFrame:
     """Keys occurring more than once → DataFrame[*key, n_dup long].
 
-    strategy='hash' (default, the scale path): aggregate on
-    xxhash64(key) FIRST — an 8-byte primitive that Spark's vectorized
-    hash map handles at memory speed, vs. fat string keys that spill the
-    partial-agg hash table when keys are near-unique (the common case:
-    almost every (conv_id, turn_idx) appears once, so the first phase is
-    pure shuffle-byte cost). Rows whose hash collides are then verified
-    with an exact groupBy on the real key — only the candidate fraction
-    is reshuffled, and 64-bit false positives are filtered exactly.
+    Aggregates on xxhash64(key) FIRST — an 8-byte primitive that Spark's
+    vectorized hash map handles at memory speed, vs. fat string keys that
+    spill the partial-agg hash table when keys are near-unique (the
+    common case: almost every (conv_id, turn_idx) appears once, so the
+    first phase is pure shuffle-byte cost). Rows whose hash collides are
+    then verified with an exact groupBy on the real key — only the
+    candidate fraction is reshuffled, and 64-bit false positives are
+    filtered exactly.
     """
     df = _non_null_keys(df, key)
-    if strategy == "hash":
-        h = F.xxhash64(*key)
-        cand = (
-            df.select(h.alias("_h"))
-            .groupBy("_h")
-            .agg(F.count(F.lit(1)).alias("_c"))
-            .filter(F.col("_c") > 1)
-            .select("_h")
-        )
-        hits = df.withColumn("_h", h).join(cand, "_h", "left_semi")
-        counts = hits.groupBy(*key).agg(F.count(F.lit(1)).alias("n_dup"))
-    elif strategy == "direct":
-        counts = df.groupBy(*key).agg(F.count(F.lit(1)).alias("n_dup"))
-    elif strategy == "salted":
-        # Salt by physical input split: duplicate rows of one hot key sit
-        # in many splits, so partial counts land on n_salt distinct
-        # reducers before the (tiny) second-phase re-aggregation.
-        partial = (
-            df.withColumn("_salt", F.spark_partition_id() % n_salt)
-            .groupBy(*key, "_salt")
-            .agg(F.count(F.lit(1)).alias("_c"))
-        )
-        counts = partial.groupBy(*key).agg(F.sum("_c").alias("n_dup"))
-    else:
-        raise ValueError(f"unknown strategy {strategy!r}")
+    h = F.xxhash64(*key)
+    cand = (
+        df.select(h.alias("_h"))
+        .groupBy("_h")
+        .agg(F.count(F.lit(1)).alias("_c"))
+        .filter(F.col("_c") > 1)
+        .select("_h")
+    )
+    hits = df.withColumn("_h", h).join(cand, "_h", "left_semi")
+    counts = hits.groupBy(*key).agg(F.count(F.lit(1)).alias("n_dup"))
     return counts.filter(F.col("n_dup") > 1)
 
 
-def duplicate_row_counts(
-    df: DataFrame, key: list[str], part_col: str
-) -> DataFrame:
-    """Per-partition count of rows participating in globally-duplicated
-    keys → DataFrame[part, n] (parts with zero violations absent).
-
-    The JOIN-FREE formulation for the verdict path: two stacked window
-    counts. W1 groups by xxhash64(key) — the full-table shuffle moves an
-    8-byte key, and the in-partition count is a sort of longs, not a
-    153M-entry hash table. Only candidate rows (hash count > 1) reach W2,
-    which re-counts over the REAL key to void 64-bit collisions exactly.
-    On dup-heavy data this beats `uniqueness_violations` + groupBy ~2×:
-    that path re-joins the duplicate-key set back to the table, and when
-    duplicates are a double-digit percentage the "tiny broadcast
-    semi-join" becomes two full shuffle joins carrying string keys
-    (measured 4->16-core on 153.6M turns: 227s->70s joins vs 107s->33s
-    windows, identical results; both scale at ~0.81).
-    """
-    h = F.xxhash64(*key)
-    w1 = Window.partitionBy("_h")
-    w2 = Window.partitionBy(*key)
-    cand = (
-        _non_null_keys(df, key)
-        .select(*key, part_col)
-        .withColumn("_h", h)
-        .withColumn("_n", F.count(F.lit(1)).over(w1))
-        .filter(F.col("_n") > 1)
-    )
-    exact = cand.withColumn("_m", F.count(F.lit(1)).over(w2)).filter(
-        F.col("_m") > 1
-    )
-    return exact.groupBy(F.col(part_col).alias("part")).agg(
-        F.count(F.lit(1)).alias("n")
-    )
-
-
-def uniqueness_violations(
-    df: DataFrame,
-    key: list[str],
-    strategy: str = "hash",
-    n_salt: int = 16,
-) -> DataFrame:
+def uniqueness_violations(df: DataFrame, key: list[str]) -> DataFrame:
     """Materialized violating rows: every input row whose key collides.
 
     left_semi join against the duplicate-key set; with few violations AQE
     converts this to a broadcast semi-join at runtime.
     """
-    dups = duplicate_keys(df, key, strategy=strategy, n_salt=n_salt)
+    dups = duplicate_keys(df, key)
     return df.join(dups.select(*key), on=key, how="left_semi")

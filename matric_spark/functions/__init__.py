@@ -18,7 +18,7 @@ from matric_spark.functions.text import (
     token_count,
     tokens,
 )
-from matric_spark.functions.vector import cosine_sim, dot, l2_norm
+from matric_spark.functions.vector import dot, l2_norm
 
 __all__ = [
     "HASH_PRIME",
@@ -30,7 +30,6 @@ __all__ = [
     "stopword_ratio",
     "punct_ratio",
     "quality_score",
-    "cosine_sim",
     "dot",
     "l2_norm",
 ]

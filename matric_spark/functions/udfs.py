@@ -43,26 +43,6 @@ def _scatter(result_list: list, mask, n: int) -> pd.Series:
     return pd.Series(out, dtype=object)
 
 
-def make_hyperplane_signature_udf(planes: "np.ndarray"):
-    """Sign-bit LSH signature: one (batch × dim) @ (dim × planes) matmul
-    per Arrow batch. `planes` is captured (broadcast with the task)."""
-    n_planes = planes.shape[0]
-    weights = np.left_shift(np.int64(1), np.arange(n_planes, dtype=np.int64))
-
-    @pandas_udf("long")
-    def sig(v: pd.Series) -> pd.Series:
-        mat, mask = _stack_masked(v)
-        if mat is None:
-            return pd.Series([None] * len(v), dtype=object)
-        bits = (mat @ planes.T >= 0.0).astype(np.int64)
-        vals = bits @ weights
-        if mask is None:
-            return pd.Series(vals)
-        return _scatter(list(vals), mask, len(v))
-
-    return sig
-
-
 def make_hyperplane_bands_udf(planes: "np.ndarray", n_bands: int, band_bits: int):
     """Banded sign-bit LSH: one (batch × dim) @ (dim × n_bands·band_bits)
     matmul per Arrow batch, sign bits packed per band into one integer

@@ -2,8 +2,7 @@
 
 `F.aggregate`/`F.zip_with` run inside codegen on the JVM — no Python
 boundary — which is the right default for 100 TB of embeddings. The
-DuckDB oracle uses `list_dot_product`/`list_cosine_similarity`, which
-implement the same formulas.
+DuckDB oracle uses `list_dot_product`, which implements the same formula.
 """
 
 from __future__ import annotations
@@ -31,10 +30,3 @@ def l2_norm(a: Column | str) -> Column:
             _c(a), F.lit(0.0), lambda acc, v: acc + v.cast("double") * v
         )
     )
-
-
-def cosine_sim(a: Column | str, b: Column | str) -> Column:
-    """dot(a,b) / (||a||*||b||); null-safe on zero norms (returns null)."""
-    d = dot(a, b)
-    na, nb = l2_norm(a), l2_norm(b)
-    return F.when((na > 0) & (nb > 0), d / (na * nb))

@@ -31,8 +31,6 @@ from pyspark.sql import functions as F
 
 from matric_spark.functions.vector import dot
 
-N_PLANES = 16  # hyperplane_signatures default (single packed signature)
-
 
 def _lcg_planes(n_planes: int, dim: int, seed: int = 42) -> list[list[float]]:
     """Deterministic hyperplanes, components uniform in [-1, 1] via the
@@ -173,29 +171,6 @@ def embedding_near_dup(
         .filter(F.col("id1") < F.col("id2"))
         .select("id1", "id2", dot("v1", "v2").alias("cosine"))
         .filter(F.col("cosine") >= threshold)
-    )
-
-
-def hyperplane_signatures(
-    emb: DataFrame,
-    dim: int,
-    n_planes: int = N_PLANES,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Sign-bit LSH signature per vector via one Arrow-batched matmul."""
-    import numpy as np
-
-    from matric_spark.functions.udfs import make_hyperplane_signature_udf
-
-    planes = np.array(_lcg_planes(n_planes, dim, seed=seed), dtype=np.float64)
-    sig = make_hyperplane_signature_udf(planes)
-
-    return emb.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("v"),
-        sig(F.col(vec_col)).alias("sig"),
     )
 
 

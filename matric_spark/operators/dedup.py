@@ -66,10 +66,10 @@ def exact_duplicates(df: DataFrame, text_col: str = "text") -> DataFrame:
     Spark's partial aggregation already collapses a pathologically
     common document (crawl boilerplate) to one row per input partition
     BEFORE the shuffle — an explicit spark_partition_id salt would just
-    re-implement that partial-combine phase by hand. The salted
-    two-phase pattern earns its keep only where the pre-shuffle payload
-    is not combinable per key (checks/uniqueness.py 'hash' strategy,
-    where whole key tuples would otherwise cross the wire).
+    re-implement that partial-combine phase by hand. A hash-first
+    pre-count (checks/uniqueness.duplicate_keys) earns its keep only
+    where wide key tuples would otherwise cross the wire; here the key
+    already is one 60-bit hash.
 
     content_fp is a single 60-bit half because it IS the report key
     (output schema): at 10^12 rows expect ~N²/2^61 ≈ 4×10^5 spurious
@@ -640,38 +640,14 @@ def minhash_signatures(
     return sets.groupBy("doc_id").agg(*aggs)
 
 
-def minhash_signatures_from_arrays(
-    harr_df: DataFrame, num_hashes: int = 32, seed: int = 42
-) -> DataFrame:
-    """Broder signatures from a (doc_id, harr) shingle-hash-array relation
-    — value-identical to `minhash_signatures` (min over the same set per
-    permutation; differential-tested), but NARROW: each mh_i is an
-    array_min over a per-row transform, so there is no explode and no
-    aggregation shuffle at all. 125 hashes over 40M shingles: 2.5 s vs
-    6.5 s for the exploded groupBy path at sf0.1."""
-    params = minhash_params(num_hashes, seed=seed)
-
-    def _perm(a: int, b: int):
-        return lambda h: (F.lit(a) * h + F.lit(b)) % HASH_PRIME
-
-    return harr_df.select(
-        "doc_id",
-        *[
-            F.array_min(F.transform(F.col("harr"), _perm(a, b))).alias(
-                f"mh_{i}"
-            )
-            for i, (a, b) in enumerate(params)
-        ],
-    )
-
-
 def banded_minhash_arrays(
     harr_df: DataFrame, num_hashes: int = 32, bands: int = 8, seed: int = 42
 ) -> DataFrame:
     """DataFrame[doc_id, band_hash] in ONE vectorized Arrow pass over the
     shingle-hash arrays — value-identical to
-    ``_banded(minhash_signatures_from_arrays(...))`` (differential-tested,
-    and byte-equal to the DuckDB mirror in duck_oracle.minhash_lsh_sql):
+    ``_banded(minhash_signatures(...))`` over the same shingle sets
+    (differential-tested, and byte-equal to the DuckDB mirror in
+    duck_oracle.minhash_lsh_sql):
     per permutation i, mh_i = min((a_i*h + b_i) % P) over the row's
     distinct shingle hashes; per band b, band_hash = Horner(b, mh_{b*r}..
     mh_{b*r+r-1}) mod P.

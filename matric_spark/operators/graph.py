@@ -35,15 +35,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# pair lists up to this many edges are solved on the driver by union-find
+_LOCAL_EDGES = 200_000
+# pointer jumping converges in O(log diameter) rounds; this is the guard
+_MAX_ROUNDS = 50
+
 
 def connected_components(
-    pairs: DataFrame,
-    src: str = "id1",
-    dst: str = "id2",
-    max_rounds: int = 50,
-    strategy: str = "auto",
-    local_threshold: int = 200_000,
-    materialize_edges: bool = True,
+    pairs: DataFrame, src: str = "id1", dst: str = "id2"
 ) -> DataFrame:
     """Resolve an undirected pair list into components.
 
@@ -55,42 +54,24 @@ def connected_components(
     emitted — callers wanting them can left-join this result onto the
     full id set and coalesce(cluster_id, id).
 
-    strategy='auto' (default) is a cost-based switch in the spirit of
-    matric's filter-strategy switch (R/sim_filter.R:179-206): a pair
-    list small enough to hold on the driver (<= local_threshold edges)
-    is solved by exact union-find in one collect — O(E α(E)) with zero
-    Spark rounds, the right call when near-dup candidates are a sliver
-    of the corpus — while anything larger runs the distributed
-    label-propagation loop. 'distributed' / 'local' force a path; both
-    are differential-tested equal.
-
-    `materialize_edges=True` (default) eagerly localCheckpoints the edge
-    list before anything else — right when `pairs` is an expensive
-    derived pipeline (shingle joins, LSH), wrong when the caller would
-    have pruned/sampled it or already holds a materialized relation.
-    Pass False ONLY for a pair list that is pre-materialized (or cheap)
-    AND deterministic under re-evaluation: the plan is then evaluated
-    independently by the strategy probe plus the collect (local path)
-    or the sym/labels checkpoint seeds (distributed path) — 2-3 cheap
-    re-reads of a stored relation instead of one forced full build. A
-    nondeterministic source (sample(), LIMIT over an unordered relation)
-    could present different edge sets to those evaluations and corrupt
-    the labeling — keep the default for anything not re-read-stable.
+    The path is a cost-based switch in the spirit of matric's
+    filter-strategy switch (R/sim_filter.R:179-206): a pair list small
+    enough to hold on the driver (<= `_LOCAL_EDGES` edges) is solved by
+    exact union-find in one collect — O(E α(E)) with zero Spark rounds,
+    the right call when near-dup candidates are a sliver of the corpus —
+    while anything larger runs the distributed label-propagation loop
+    (at most `_MAX_ROUNDS` rounds). Both paths are differential-tested
+    against a Python union-find (tests/test_linkage.py).
     """
     id_type = pairs.schema[src].dataType.simpleString()
     # materialize the edge list ONCE: upstream pair generation is
     # typically an expensive dedup pipeline (shingle joins, LSH), and
-    # both the strategy decision and every propagation round would
+    # both the path decision and every propagation round would
     # otherwise re-evaluate it from scratch per action
-    e = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    if materialize_edges:
-        e = e.localCheckpoint(eager=True)
-    if strategy == "auto":
-        # counts the checkpointed relation (cheap) — or, with
-        # materialize_edges=False, evaluates the caller's plan once
-        n_edges = e.count()
-        strategy = "local" if n_edges <= local_threshold else "distributed"
-    if strategy == "local":
+    e = pairs.select(
+        F.col(src).alias("a"), F.col(dst).alias("b")
+    ).localCheckpoint(eager=True)
+    if e.count() <= _LOCAL_EDGES:
         return _local_components(pairs.sparkSession, e.collect(), id_type)
     sym = (
         e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
@@ -108,7 +89,7 @@ def connected_components(
         .localCheckpoint(eager=True)
     )
 
-    for _ in range(max_rounds):
+    for _ in range(_MAX_ROUNDS):
         nbr_min = (
             sym.join(
                 labels.select(F.col("v").alias("b"), F.col("l").alias("nl")),
@@ -140,7 +121,7 @@ def connected_components(
             break
     else:
         raise RuntimeError(
-            f"connected_components: no fixpoint after {max_rounds} rounds"
+            f"connected_components: no fixpoint after {_MAX_ROUNDS} rounds"
         )
     return labels.select("v", F.col("l").alias("cluster_id"))
 

@@ -223,11 +223,8 @@ def bh_adjust(df: DataFrame, p_col: str, q_col: str = "q_value") -> DataFrame:
     capped at 1 — a rank window + a reverse running min, no driver pass.
 
     CARDINALITY NOTE: the global un-partitioned windows funnel the whole
-    table through ONE task — correct and fine for metric-level tables
-    (the only callers today: level-1_0 has one row per (row, group)),
-    but wrong once the input approaches raw-data scale. For that, use
-    `bh_adjust_scalable` below — bit-identical output (differential-
-    tested at 10^6 rows), distributed via range partitioning."""
+    table through ONE task. Its only callers are metric-level tables
+    (level-1_0 has one row per (row, group)), never raw-data scale."""
     n = Window.partitionBy()
     w_rank = Window.orderBy(p_col)
     w_rev = Window.orderBy(F.desc(p_col)).rowsBetween(
@@ -245,79 +242,3 @@ def bh_adjust(df: DataFrame, p_col: str, q_col: str = "q_value") -> DataFrame:
         F.min(F.col(p_col) * F.col("_n") / F.col("_rank")).over(w_rev),
     )
     return with_rank.withColumn(q_col, q).drop("_rn", "_n", "_rank")
-
-
-def bh_adjust_scalable(
-    df: DataFrame,
-    p_col: str,
-    q_col: str = "q_value",
-    n_partitions: int | None = None,
-) -> DataFrame:
-    """Distributed BH: identical values to `bh_adjust` (min/rank are
-    exact, so float op order is preserved) with no single-task window.
-
-    Classic two-phase global-order decomposition (the TeraSort rank
-    recipe): range-partition on p (ties co-locate by value), rank within
-    each partition with local windows, then stitch partitions together
-    with TWO driver-side arrays of per-partition scalars — row-count
-    offsets for the global rank, and suffix-mins of v = p·n/rank for the
-    reverse running min. Driver traffic is O(n_partitions); the local
-    ranking is persisted (MEMORY_AND_DISK) so the two stitch collects
-    and the output pass share one shuffle+sort — release via
-    spark.catalog.clearCache() after materializing if the session is
-    long-lived."""
-    from pyspark import StorageLevel
-
-    n_parts = n_partitions or df.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions", "32"
-    )
-    d = df.repartitionByRange(int(n_parts), F.col(p_col)).withColumn(
-        "_pid", F.spark_partition_id()
-    )
-    w_loc = Window.partitionBy("_pid").orderBy(p_col)
-    w_tie = Window.partitionBy("_pid", p_col)
-    loc = (
-        d.withColumn("_lrn", F.row_number().over(w_loc))
-        .withColumn("_lrank", F.max("_lrn").over(w_tie))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    counts = {
-        r["_pid"]: r["c"]
-        for r in loc.groupBy("_pid").agg(F.count(F.lit(1)).alias("c")).collect()
-    }
-    pids = sorted(counts)
-    n = sum(counts.values())
-    offsets: dict[int, int] = {}
-    acc = 0
-    for pid in pids:
-        offsets[pid] = acc
-        acc += counts[pid]
-    off = F.create_map(
-        *[F.lit(x) for pid in pids for x in (pid, offsets[pid])]
-    )[F.col("_pid")]
-    v = F.col(p_col) * F.lit(float(n)) / (F.col("_lrank") + off)
-    scored = loc.withColumn("_v", v)
-    # suffix min of v over HIGHER partitions (larger p), from one tiny
-    # per-partition aggregate
-    mins = {
-        r["_pid"]: r["m"]
-        for r in scored.groupBy("_pid").agg(F.min("_v").alias("m")).collect()
-    }
-    suffix: dict[int, float] = {}
-    running = float("inf")
-    for pid in reversed(pids):
-        suffix[pid] = running
-        running = min(running, mins[pid])
-    suf = F.create_map(
-        *[F.lit(x) for pid in pids for x in (pid, suffix[pid])]
-    )[F.col("_pid")]
-    w_suf = (
-        Window.partitionBy("_pid")
-        .orderBy(F.desc(p_col))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    q = F.least(F.lit(1.0), F.least(F.min("_v").over(w_suf), suf))
-    # `loc` stays persisted for the output pass (third scan of the same
-    # materialized ranking); release with spark.catalog.clearCache() or
-    # loc's parent lineage once the result is written
-    return scored.withColumn(q_col, q).drop("_pid", "_lrn", "_lrank", "_v")

@@ -55,24 +55,14 @@ def get_annotation(
     df: DataFrame,
     prefix: str = ANNOTATION_PREFIX,
     id_col: str = "id",
-    id_strategy: str = "hash",
 ) -> DataFrame:
     """Project annotation columns + a stable row id (R/utils.R:32-39:
-    `id = seq_len(n)` — the graft needs stability, not 1..N density).
-
-    id_strategy="hash" (default): sort-free bucketed surrogate id (see
-    `_stable_row_id`) — the 10^12-row-safe path. id_strategy="sort":
-    row_number over a TOTAL ORDER of all columns — dense 1..N like the
-    reference, but a single-task sort; fixture/parity use only. For
+    `id = seq_len(n)` — the graft needs stability, not 1..N density, so
+    the id is the sort-free bucketed surrogate of `_stable_row_id`). For
     keyed tables, prefer the natural key and skip this entirely.
     """
-    if id_strategy == "hash":
-        return _stable_row_id(df, id_col).select(
-            id_col, *annotation_cols(df, prefix)
-        )
-    w = Window.orderBy(*[F.col(c) for c in df.columns])
-    return df.select(
-        F.row_number().over(w).alias(id_col), *annotation_cols(df, prefix)
+    return _stable_row_id(df, id_col).select(
+        id_col, *annotation_cols(df, prefix)
     )
 
 
@@ -104,21 +94,15 @@ def assemble_population(
     df: DataFrame,
     prefix: str = ANNOTATION_PREFIX,
     id_col: str = "id",
-    id_strategy: str = "hash",
 ) -> DataFrame:
     """Wide population → (id, features array<double>, *annotations):
     the input shape `operators/pairs.sim_calculate` consumes. Feature
-    columns are packed into one array column in schema order. Ids follow
-    `get_annotation`'s id_strategy (default: sort-free hash surrogate —
-    tests/test_plans.py asserts no single-partition exchange)."""
+    columns are packed into one array column in schema order. Ids are
+    `get_annotation`'s sort-free hash surrogate (tests/test_plans.py
+    asserts no single-partition exchange)."""
     clean, _ = preprocess_data(df, prefix)
     feat = [c for c in clean.columns if not c.startswith(prefix)]
-    if id_strategy == "hash":
-        withid = _stable_row_id(clean, id_col)
-    else:
-        w = Window.orderBy(*[F.col(c) for c in clean.columns])
-        withid = clean.withColumn(id_col, F.row_number().over(w))
-    return withid.select(
+    return _stable_row_id(clean, id_col).select(
         id_col,
         F.array(*[F.col(c).cast("double") for c in feat]).alias("features"),
         *annotation_cols(clean, prefix),

@@ -76,12 +76,6 @@ SELECT * FROM typed
 """
 
 
-def transcript_sql() -> str:
-    """The shared-dialect SQL producing the transcript view (+ part_month
-    partition column) from the pre-registered `lineitem`/`orders` views."""
-    return TRANSCRIPT_VIEW_SQL
-
-
 # keyed WEAKLY on the session OBJECT (not id()): id reuse can never alias
 # a stale plan, and a stopped session's plans are garbage-collected with
 # it instead of pinning every dead session for the process lifetime
@@ -136,8 +130,3 @@ def transcript_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = spark.sql(TRANSCRIPT_VIEW_SQL)
     per_session[key] = out
     return out
-
-
-def duckdb_transcript_cte(alias: str = "transcripts") -> str:
-    """Wrap the shared SQL as a DuckDB CTE prefix: ``WITH <alias> AS (...)``."""
-    return f"WITH {alias} AS ({TRANSCRIPT_VIEW_SQL})"

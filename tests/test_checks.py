@@ -35,10 +35,8 @@ def test_column_stats(tiny_transcripts):
 
 def test_uniqueness_strategies_agree(tiny_transcripts):
     key = ["conv_id", "turn_idx"]
-    direct = sorted(map(tuple, duplicate_keys(tiny_transcripts, key, "direct").collect()))
-    salted = sorted(map(tuple, duplicate_keys(tiny_transcripts, key, "salted").collect()))
-    hashed = sorted(map(tuple, duplicate_keys(tiny_transcripts, key, "hash").collect()))
-    assert direct == salted == hashed == [("B", 1, 2)]
+    got = sorted(map(tuple, duplicate_keys(tiny_transcripts, key).collect()))
+    assert got == [("B", 1, 2)]
     rows = uniqueness_violations(tiny_transcripts, key).collect()
     assert len(rows) == 2 and all(r["conv_id"] == "B" and r["turn_idx"] == 1 for r in rows)
 
@@ -46,10 +44,10 @@ def test_uniqueness_strategies_agree(tiny_transcripts):
 def test_uniqueness_null_keys_excluded(spark):
     """NULL-containing key tuples are excluded from uniqueness accounting
     in EVERY formulation (module-docstring contract): Window.partitionBy
-    groups NULLs together, so without the pre-filter the window-based
+    groups NULLs together, so without the null-key mask the window-based
     verdict path would report NULL-key 'duplicates' the join-based path
     (and the DuckDB oracle's JOIN USING) can never match."""
-    from matric_spark.checks.uniqueness import duplicate_row_counts
+    from matric_spark.checks.suite import SuiteConfig, conv_keyed_metrics
 
     rows = [
         ("A", 0, 1, "x"), ("A", 0, 1, "y"),        # real dup
@@ -61,14 +59,14 @@ def test_uniqueness_null_keys_excluded(spark):
         rows, "conv_id string, turn_idx int, part_month int, text string"
     )
     key = ["conv_id", "turn_idx"]
-    for strat in ("direct", "salted", "hash"):
-        got = sorted(map(tuple, duplicate_keys(df, key, strat).collect()))
-        assert got == [("A", 0, 2)], strat
+    got = sorted(map(tuple, duplicate_keys(df, key).collect()))
+    assert got == [("A", 0, 2)]
     viol = uniqueness_violations(df, key).collect()
     assert sorted(r["text"] for r in viol) == ["x", "y"]
     # window-based verdict path agrees with the join-based path
-    counts = {r["part"]: r["n"] for r in
-              duplicate_row_counts(df, key, "part_month").collect()}
+    with_ts = df.withColumn("ts", F.lit(None).cast("timestamp"))
+    counts = {r["part"]: r["uniqueness"] for r in
+              conv_keyed_metrics(with_ts, SuiteConfig()).collect()}
     assert counts == {1: 2}
 
 

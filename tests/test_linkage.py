@@ -8,6 +8,7 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
+from matric_spark.operators import graph
 from matric_spark.operators.events import asof_join
 from matric_spark.operators.graph import connected_components, dedup_clusters
 from matric_spark.operators.sampling import (
@@ -36,7 +37,18 @@ def _brute_components(edges: list[tuple[int, int]]) -> dict[int, int]:
     return {v: find(v) for v in parent}
 
 
-@pytest.mark.parametrize("strategy", ["distributed", "local", "auto"])
+@pytest.fixture(params=["distributed", "local"])
+def cc_path(request, monkeypatch):
+    """Drive connected_components down each path: an edge budget of -1
+    sends every pair list to the distributed loop; the default budget
+    solves these small graphs by driver-side union-find."""
+    if request.param == "distributed":
+        monkeypatch.setattr(graph, "_LOCAL_EDGES", -1)
+    return request.param
+
+
+# cc_path re-stated here (indirect) only to keep the edges-first test ids
+@pytest.mark.parametrize("cc_path", ["distributed", "local"], indirect=True)
 @pytest.mark.parametrize(
     "edges",
     [
@@ -49,32 +61,24 @@ def _brute_components(edges: list[tuple[int, int]]) -> dict[int, int]:
         [(1, 2), (2, 1), (3, 3), (2, 3), (2, 3)],
     ],
 )
-def test_connected_components_vs_union_find(spark, edges, strategy):
+def test_connected_components_vs_union_find(spark, edges, cc_path):
     df = spark.createDataFrame(edges, ["id1", "id2"])
-    got = {
-        r["v"]: r["cluster_id"]
-        for r in connected_components(df, strategy=strategy).collect()
-    }
+    got = {r["v"]: r["cluster_id"] for r in connected_components(df).collect()}
     want = _brute_components([(a, b) for a, b in edges if a != b])
     assert got == want
 
 
-def test_connected_components_auto_switches_to_distributed(spark):
-    """Above local_threshold the auto path must fall through to the
+def test_connected_components_auto_switches_to_distributed(spark, monkeypatch):
+    """Above the edge budget the path must fall through to the
     distributed loop and still match union-find."""
+    monkeypatch.setattr(graph, "_LOCAL_EDGES", 10)
     edges = [(i, i + 1) for i in range(0, 300, 2)] + [(7, 207)]
     df = spark.createDataFrame(edges, ["id1", "id2"])
-    got = {
-        r["v"]: r["cluster_id"]
-        for r in connected_components(
-            df, strategy="auto", local_threshold=10
-        ).collect()
-    }
+    got = {r["v"]: r["cluster_id"] for r in connected_components(df).collect()}
     assert got == _brute_components(edges)
 
 
-@pytest.mark.parametrize("strategy", ["distributed", "local"])
-def test_connected_components_string_ids_deep_chain(spark, strategy):
+def test_connected_components_string_ids_deep_chain(spark, cc_path):
     """String node ids with diameter >> 3: the old sum-based convergence
     detector cast labels to decimal, got NULL on strings, and silently
     stopped after one round — the changed-count detector must converge
@@ -83,23 +87,16 @@ def test_connected_components_string_ids_deep_chain(spark, strategy):
         ("zzz1", "zzz2")
     ]
     df = spark.createDataFrame(edges, ["id1", "id2"])
-    got = {
-        r["v"]: r["cluster_id"]
-        for r in connected_components(df, strategy=strategy).collect()
-    }
+    got = {r["v"]: r["cluster_id"] for r in connected_components(df).collect()}
     for i in range(41):
         assert got[f"doc{i:04d}"] == "doc0000"
     assert got["zzz1"] == got["zzz2"] == "zzz1"
 
 
-@pytest.mark.parametrize("strategy", ["distributed", "local"])
-def test_connected_components_self_loop_only_node_is_singleton(spark, strategy):
+def test_connected_components_self_loop_only_node_is_singleton(spark, cc_path):
     edges = [(1, 2), (9, 9)]
     df = spark.createDataFrame(edges, ["id1", "id2"])
-    got = {
-        r["v"]: r["cluster_id"]
-        for r in connected_components(df, strategy=strategy).collect()
-    }
+    got = {r["v"]: r["cluster_id"] for r in connected_components(df).collect()}
     assert got == {1: 1, 2: 1, 9: 9}
 
 
@@ -416,26 +413,3 @@ def test_emb_dedup_clusters_composition(spark):
     assert out[0] == (0, 3) and out[1] == (0, 3) and out[2] == (0, 3)
     assert out[10] == (10, 2) and out[11] == (10, 2)
     assert 20 not in out  # pairless vectors are absent, not singletons
-
-
-def test_connected_components_unmaterialized_edges(spark):
-    """materialize_edges=False must produce identical components on both
-    strategies (the opt-out exists for callers holding pre-materialized
-    or deliberately pruned pair lists — review note r4)."""
-    from matric_spark.operators.graph import connected_components
-
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11), (20, 20)], "id1 long, id2 long"
-    )
-    want = {
-        tuple(r)
-        for r in connected_components(pairs).collect()
-    }
-    for strat in ("local", "distributed"):
-        got = {
-            tuple(r)
-            for r in connected_components(
-                pairs, strategy=strat, materialize_edges=False
-            ).collect()
-        }
-        assert got == want, strat

@@ -125,29 +125,11 @@ def test_shingle_hashes_match_python_reference(spark):
     }
 
 
-def test_minhash_array_signatures_match_exploded(spark, tiny_docs):
-    """Differential: the narrow array-transform signature builder must be
-    value-identical to the exploded groupBy path, and the
-    array_intersect verify must reproduce the exploded shared-hash count
-    exactly (jaccard values equal to the set-algebra ground truth)."""
-    from matric_spark.operators.dedup import (
-        minhash_lsh_pairs,
-        minhash_signatures,
-        minhash_signatures_from_arrays,
-        shingle_hash_arrays,
-        shingle_sets,
-    )
-
-    harr = shingle_hash_arrays(tiny_docs, n=3)
-    a = {
-        r.doc_id: [r[f"mh_{i}"] for i in range(32)]
-        for r in minhash_signatures_from_arrays(harr, 32).collect()
-    }
-    b = {
-        r.doc_id: [r[f"mh_{i}"] for i in range(32)]
-        for r in minhash_signatures(tiny_docs, 32).collect()
-    }
-    assert a == b and len(a) == 5
+def test_minhash_lsh_jaccard_matches_set_algebra(spark, tiny_docs):
+    """The array_intersect verify must reproduce the exploded
+    shared-hash count exactly (jaccard values equal to the set-algebra
+    ground truth)."""
+    from matric_spark.operators.dedup import minhash_lsh_pairs, shingle_sets
 
     sets = {}
     for r in shingle_sets(tiny_docs, n=3).collect():
@@ -166,13 +148,13 @@ def test_banded_minhash_arrow_matches_column_path(spark, tiny_docs):
     """Differential: the vectorized Arrow band-hash pass
     (banded_minhash_arrays — the hot path inside minhash_lsh_pairs)
     must emit exactly the (doc_id, band_hash) multiset of the JVM
-    column construction _banded(minhash_signatures_from_arrays(...)),
-    which is itself pinned to the DuckDB oracle mirror. Covers both a
-    32-hash/8-band and a 10-hash/5-band parametrization."""
+    column construction _banded(minhash_signatures(...)) over the same
+    shingle sets, which is itself pinned to the DuckDB oracle mirror.
+    Covers both a 32-hash/8-band and a 10-hash/5-band parametrization."""
     from matric_spark.operators.dedup import (
         _banded,
         banded_minhash_arrays,
-        minhash_signatures_from_arrays,
+        minhash_signatures,
         shingle_hash_arrays,
     )
 
@@ -185,7 +167,7 @@ def test_banded_minhash_arrow_matches_column_path(spark, tiny_docs):
         want = sorted(
             (r.doc_id, r.band_hash)
             for r in _banded(
-                minhash_signatures_from_arrays(harr, num_hashes),
+                minhash_signatures(tiny_docs, num_hashes),
                 num_hashes // bands,
                 bands,
             ).collect()
@@ -204,7 +186,7 @@ def test_minhash_lsh_null_text_and_long_docs(spark, tiny_docs):
         _banded,
         banded_minhash_arrays,
         minhash_lsh_pairs,
-        minhash_signatures_from_arrays,
+        minhash_signatures,
         shingle_hash_arrays,
     )
 
@@ -232,9 +214,7 @@ def test_minhash_lsh_null_text_and_long_docs(spark, tiny_docs):
     )
     want = sorted(
         (r.doc_id, r.band_hash)
-        for r in _banded(
-            minhash_signatures_from_arrays(harr, 32), 4, 8
-        ).collect()
+        for r in _banded(minhash_signatures(long_docs, 32), 4, 8).collect()
     )
     assert got == want and len(got) == 16
 

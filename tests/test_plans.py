@@ -137,7 +137,7 @@ def test_uniqueness_hash_phase_aggregates_on_long(spark, transcripts_parquet):
     from matric_spark.checks.uniqueness import duplicate_keys
 
     t = spark.read.parquet(transcripts_parquet)
-    p = plan(duplicate_keys(t, SuiteConfig().key, "hash"))
+    p = plan(duplicate_keys(t, SuiteConfig().key))
     assert "xxhash64" in p  # candidate phase keyed on the 64-bit hash
     assert "CartesianProduct" not in p
 
@@ -276,15 +276,17 @@ def test_asof_join_is_single_shuffle_no_join(spark):
     assert "Window" in p
 
 
-def test_connected_components_shuffles_ids_only(spark):
+def test_connected_components_shuffles_ids_only(spark, monkeypatch):
     """The label-propagation loop must never carry anything except the
     two long columns — no wide payloads in its exchanges."""
+    from matric_spark.operators import graph
     from matric_spark.operators.graph import connected_components
 
+    monkeypatch.setattr(graph, "_LOCAL_EDGES", -1)  # force the loop
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(20)], ["id1", "id2"]
     ).withColumn("payload", F.lit("x" * 100))
-    out = connected_components(pairs, strategy="distributed")
+    out = connected_components(pairs)
     assert set(out.columns) == {"v", "cluster_id"}
     # the payload column must not survive into the loop's plan
     assert "payload" not in plan(out)

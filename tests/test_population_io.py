@@ -33,13 +33,10 @@ def test_annotation_split(wide_pop):
     ann = get_annotation(wide_pop)
     assert ann.columns == ["id", "Metadata_group", "Metadata_plate"]
     ids = [r.id for r in ann.collect()]
-    assert len(set(ids)) == 3  # unique, stable (hash strategy default)
+    assert len(set(ids)) == 3  # unique
     # stability under repartition — the property the R seq_len id lacks
     ids2 = [r.id for r in get_annotation(wide_pop.repartition(7)).collect()]
     assert sorted(ids) == sorted(ids2)
-    # sort strategy = the reference's dense 1..N
-    dense = get_annotation(wide_pop, id_strategy="sort")
-    assert sorted(r.id for r in dense.collect()) == [1, 2, 3]
     assert drop_annotation(wide_pop).columns == ["x", "y", "z"]
 
 

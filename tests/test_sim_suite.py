@@ -409,31 +409,6 @@ def test_relrank_below_background_clamps_to_one(spark):
     assert r["sim_ranked_relrank_mean_non_rep_i"] == pytest.approx(1.0)
 
 
-def test_bh_scalable_equals_single_window_1m_rows(spark):
-    """Differential at 10^6 rows with heavy ties: the distributed
-    range-partitioned BH must reproduce the single-window formulation
-    exactly (min/rank are exact ops — zero float divergence)."""
-    from matric_spark.operators.metrics import bh_adjust, bh_adjust_scalable
-
-    n = 1_000_000
-    df = (
-        spark.range(n)
-        .withColumn("p", ((F.col("id") * 2654435761) % 99991) / 99991.0)
-        .repartition(16)
-    )
-    a = bh_adjust(df, "p").select("id", "q_value")
-    b = bh_adjust_scalable(df, "p", n_partitions=16).select(
-        "id", F.col("q_value").alias("q2")
-    )
-    diff = (
-        a.join(b, "id")
-        .filter(F.col("q_value") != F.col("q2"))
-        .count()
-    )
-    assert diff == 0
-    spark.catalog.clearCache()
-
-
 def test_bh_adjust(spark):
     from matric_spark.operators.metrics import bh_adjust
 

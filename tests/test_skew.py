@@ -1,7 +1,7 @@
 """Skew robustness: the north rule calls out Zipfian conversation
 length. One pathological conversation must neither break correctness
-nor concentrate per-key aggregation (hash/salted strategies agree with
-direct on a hot-key table)."""
+nor concentrate per-key aggregation (the hash-first key count is exact
+on a hot-key table)."""
 
 from __future__ import annotations
 
@@ -48,14 +48,12 @@ def skewed_transcripts(spark):
     return monster.unionByName(small).unionByName(hot_dup).repartition(16)
 
 
-def test_uniqueness_strategies_agree_under_hot_key(spark, skewed_transcripts):
+def test_uniqueness_under_hot_key(spark, skewed_transcripts):
     from matric_spark.checks.uniqueness import duplicate_keys
 
     key = ["conv_id", "turn_idx"]
-    expect = [("HOT", 7, 500)]
-    for strat in ("direct", "salted", "hash"):
-        got = sorted(map(tuple, duplicate_keys(skewed_transcripts, key, strat).collect()))
-        assert got == expect, strat
+    got = sorted(map(tuple, duplicate_keys(skewed_transcripts, key).collect()))
+    assert got == [("HOT", 7, 500)]
 
 
 def test_suite_correct_under_skew(spark, skewed_transcripts):
