@@ -2379,7 +2379,7 @@ SELECT per.cohort, per."offset", per.n_users,
 FROM per JOIN sz USING (cohort)"""
 
     # quarantine routing: one scan + two windows (key membership, conv
-    # ordering); reason flags mirror checks/quarantine._flags exactly
+    # ordering); reason flags mirror suite.check_flags + quarantine's rule flag
     sql["quarantine_summary"] = f"""{_T},
 x AS (SELECT part_month, conv_id, turn_idx, role, tool, text, ts,
         CASE WHEN conv_id IS NOT NULL AND turn_idx IS NOT NULL

@@ -106,7 +106,9 @@ def rule_violations(
     name-or-NULL element of one array expression; the array is compacted
     JVM-side and exploded, so non-violating rows (the overwhelming
     majority) are dropped inside the codegen stage and never reach the
-    explode. No shuffle, no UDF.
+    explode. No shuffle, no UDF — stateless, so a stream runs it in
+    append mode with no watermark, each violating row emitted once, in
+    the micro-batch it arrives in (tests/test_streaming.py).
     """
     id_cols = id_cols or ["conv_id", "turn_idx", "part_month"]
     flags = F.array_compact(

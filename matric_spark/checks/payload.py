@@ -134,6 +134,9 @@ def json_payload_violations(
 
     Conforming rows are dropped inside the codegen filter and never
     reach the output — at a healthy 100 TB table this emits ~nothing.
+    Stateless, so a stream runs it in append mode with no watermark,
+    each violating row emitted once, in the micro-batch it arrives in
+    (tests/test_streaming.py).
     """
     id_cols = id_cols or ["event_id", "event_type"]
     valid, has_key, is_int, in_range, _ = _payload_flags(col, key, lo, hi)

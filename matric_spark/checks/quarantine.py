@@ -8,99 +8,59 @@ a quarantine table carrying why each row was held (matric's construct-
 validate split keeps invalid rows out of the SimFrame the same way,
 R/sim_construct-validate.R:69-78; here the routing is row-granular).
 
-Every row-attributable check from the verdict suite quarantines: domain
-membership, null text / null ts, the cross-field rule pack, duplicate-
-key membership, out-of-order timestamps — so a partition made only of
+Every row-attributable check from the verdict suite quarantines: the six
+row checks of suite.check_flags (domain membership, null text / null ts,
+duplicate-key membership, out-of-order timestamps) read from that one
+definition, plus the cross-field rule pack — so a partition made only of
 quarantine-clean rows also passes every row-level verdict. Partition-
 level signals (drift, volume) can't name a row and never should — a
 drifted cohort is re-weighted or investigated, not row-dropped.
 
-Scale shape: ALL row-local flags (including everything that reads the
-~10×-bytes text column) are computed BEFORE the windows, and the summary
-path projects to (partition, key, ts, flags) first — so neither window
-exchange ever carries text (plan-pinned). The two windows (composite key
-for duplicate membership, conversation for ordering — the ordering
-window is sequence.preceding_max_ts_window, shared with
-out_of_order_turns) are keyed by columns a transcript table is naturally
-clustered on. The full-row quarantine() routing necessarily ships whole
-rows — its output IS the data — but its flags are likewise pre-computed,
-so the windows add no text re-reads.
+Scale shape: check_flags computes the row-local flags (and here the rule
+pack, everything that reads the ~10×-bytes text column) at the scan, so
+the summary path's window exchange never carries text (plan-pinned). The
+full-row quarantine() routing necessarily ships whole rows — its output
+IS the data — but its flags are likewise pre-computed, so the windows
+add no text re-reads.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from matric_spark.checks.sequence import preceding_max_ts_window
-from matric_spark.checks.suite import SuiteConfig
+from matric_spark.checks.suite import SuiteConfig, check_flags
 
-#: reason order fixes the `reasons` string; mirrors the oracle SQL
-_REASONS = [
-    "bad_role",
-    "bad_tool",
-    "null_text",
-    "null_ts",
-    "rule",
-    "dup_key",
-    "ooo",
-]
+#: reason -> flag column; the order fixes the `reasons` string and the
+#: n_<reason> columns, mirroring the oracle SQL
+_REASONS = {
+    "bad_role": "ref_role",
+    "bad_tool": "ref_tool",
+    "null_text": "null_text",
+    "null_ts": "null_ts",
+    "rule": "_rule",
+    "dup_key": "uniqueness",
+    "ooo": "seq_order",
+}
 
 
-def _flags(
-    df: DataFrame,
-    cfg: SuiteConfig,
-    rules,
-    carry: list[str] | None = None,
-) -> DataFrame:
-    """Attach _q_<reason> booleans. ``carry=None`` keeps every input
-    column (the routing path); a column list projects BEFORE the windows
-    (the summary path — text never reaches an exchange)."""
+def _flagged(df: DataFrame, cfg: SuiteConfig, rules, carry: list[str]) -> DataFrame:
+    """check_flags over `df` plus the never-NULL `_rule` flag (any rule
+    of the pack violated), carried through the exchange."""
     from matric_spark.checks.constraints import default_transcript_rules
 
     rules = rules if rules is not None else default_transcript_rules()
-    key = cfg.key
-
-    non_null_key = None
-    for k in key:
-        c = F.col(k).isNotNull()
-        non_null_key = c if non_null_key is None else (non_null_key & c)
-
-    bad_role = F.col("role").isNull() | ~F.col("role").isin(cfg.role_domain)
-    bad_tool = F.col("tool").isNotNull() & ~F.col("tool").isin(cfg.tool_domain)
     rule_any: Column = F.lit(False)
     for r in rules:
         rule_any = rule_any | r.violated()
-
-    # row-local flags first — the only consumers of text/tool/role
-    base_cols = list(df.columns) if carry is None else list(carry)
-    rowlocal = df.select(
-        *base_cols,
-        bad_role.alias("_q_bad_role"),
-        bad_tool.alias("_q_bad_tool"),
-        F.col("text").isNull().alias("_q_null_text"),
-        F.col("ts").isNull().alias("_q_null_ts"),
-        F.coalesce(rule_any, F.lit(False)).alias("_q_rule"),
-        non_null_key.alias("_nnk"),
-    )
-
-    wk = Window.partitionBy(*key)
-    dup_key = F.col("_nnk") & (F.count(F.lit(1)).over(wk) > 1)
-    prev_max = F.max("ts").over(preceding_max_ts_window())
-    ooo = F.col("ts") < prev_max
-    return rowlocal.select(
-        "*",
-        F.coalesce(dup_key, F.lit(False)).alias("_q_dup_key"),
-        F.coalesce(ooo, F.lit(False)).alias("_q_ooo"),
-    ).drop("_nnk")
+    ruled = df.withColumn("_rule", F.coalesce(rule_any, F.lit(False)))
+    return check_flags(ruled, cfg, [*carry, "_rule"])
 
 
 def _any_bad() -> Column:
-    cond = None
-    for r in _REASONS:
-        c = F.col(f"_q_{r}")
-        cond = c if cond is None else (cond | c)
-    return cond
+    return reduce(Column.__or__, [F.col(f) for f in _REASONS.values()])
 
 
 def quarantine(
@@ -122,26 +82,19 @@ def quarantine(
     if granularity not in ("row", "conversation"):
         raise ValueError(f"unknown granularity {granularity!r}")
     cfg = cfg or SuiteConfig()
-    flagged = _flags(df, cfg, rules)
+    cols = df.columns
+    flagged = _flagged(df, cfg, rules, cols)
     if granularity == "conversation":
         wconv = Window.partitionBy("conv_id")
         flagged = flagged.select(
-            *[c for c in flagged.columns if not c.startswith("_q_")],
-            *[
-                F.max(F.col(f"_q_{r}")).over(wconv).alias(f"_q_{r}")
-                for r in _REASONS
-            ],
+            *cols, *[F.max(f).over(wconv).alias(f) for f in _REASONS.values()]
         )
     any_bad = _any_bad()
     reasons = F.concat_ws(
-        ",", *[F.when(F.col(f"_q_{r}"), F.lit(r)) for r in _REASONS]
+        ",", *[F.when(F.col(f), F.lit(r)) for r, f in _REASONS.items()]
     )
-    clean = flagged.filter(~any_bad).drop(*[f"_q_{r}" for r in _REASONS])
-    quarantined = (
-        flagged.filter(any_bad)
-        .withColumn("reasons", reasons)
-        .drop(*[f"_q_{r}" for r in _REASONS])
-    )
+    clean = flagged.filter(~any_bad).select(*cols)
+    quarantined = flagged.filter(any_bad).select(*cols, reasons.alias("reasons"))
     return clean, quarantined
 
 
@@ -150,11 +103,11 @@ def quarantine_summary(
 ) -> DataFrame:
     """Per-partition routing report: (part, n_rows, n_quarantined,
     n_clean, n_<reason>...). Multi-reason rows count once in
-    n_quarantined and once per reason column. Projects to
-    (partition, key, ts) before the windows — text never shuffles."""
+    n_quarantined and once per reason column. Only the partition column,
+    the window keys and the flags cross the exchange — text never
+    shuffles."""
     cfg = cfg or SuiteConfig()
-    carry = list(dict.fromkeys([cfg.partition_col, *cfg.key, "conv_id", "ts"]))
-    flagged = _flags(df, cfg, rules, carry=carry)
+    flagged = _flagged(df, cfg, rules, [cfg.partition_col])
     any_bad = _any_bad()
     return flagged.groupBy(
         F.col(cfg.partition_col).alias("part")
@@ -163,7 +116,7 @@ def quarantine_summary(
         F.sum(any_bad.cast("long")).alias("n_quarantined"),
         F.sum((~any_bad).cast("long")).alias("n_clean"),
         *[
-            F.sum(F.col(f"_q_{r}").cast("long")).alias(f"n_{r}")
-            for r in _REASONS
+            F.sum(F.col(f).cast("long")).alias(f"n_{r}")
+            for r, f in _REASONS.items()
         ],
     )

@@ -187,7 +187,11 @@ def role_transitions(
     )
 
 
-def conv_token_stats(df: DataFrame, budget: int = 256) -> DataFrame:
+#: BPE-ish token budget of one conversation (context-window packing)
+TOKEN_BUDGET = 256
+
+
+def conv_token_stats(df: DataFrame, budget: int = TOKEN_BUDGET) -> DataFrame:
     """Per-conversation token accounting (the context-window budget
     check a training pipeline runs before packing) ->
     DataFrame[conv_id, n_turns, n_text_null, n_tokens, n_bpe_tokens,
@@ -202,16 +206,19 @@ def conv_token_stats(df: DataFrame, budget: int = 256) -> DataFrame:
     Scale shape: one groupBy(conv_id) hash aggregate with map-side
     combine; token counting is pure codegen regex, no Python, no window.
     """
+    from matric_spark.checks.suite import row_local_flags
     from matric_spark.functions.text import bpe_token_count, token_count
 
+    null_text = row_local_flags()["null_text"]
+
     def nz(c: F.Column) -> F.Column:
-        return F.when(F.col("text").isNull(), F.lit(0).cast("long")).otherwise(c)
+        return F.when(null_text, F.lit(0).cast("long")).otherwise(c)
 
     return (
         df.groupBy("conv_id")
         .agg(
             F.count(F.lit(1)).alias("n_turns"),
-            F.sum(F.col("text").isNull().cast("long")).alias("n_text_null"),
+            F.sum(null_text.cast("long")).alias("n_text_null"),
             F.sum(nz(token_count("text"))).alias("n_tokens"),
             F.sum(nz(bpe_token_count("text"))).alias("n_bpe_tokens"),
             F.sum(nz(F.length("text").cast("long"))).alias("n_chars"),
@@ -220,13 +227,7 @@ def conv_token_stats(df: DataFrame, budget: int = 256) -> DataFrame:
     )
 
 
-def conv_verdicts(
-    df: DataFrame,
-    role_domain: list[str] | None = None,
-    tool_domain: list[str] | None = None,
-    grammar: frozenset[tuple[str, str]] = DEFAULT_ROLE_GRAMMAR,
-    token_budget: int = 256,
-) -> DataFrame:
+def conv_verdicts(df: DataFrame) -> DataFrame:
     """Conversation-level verdict table: per conv_id, every constraint
     family's violation count, the overall pass decision, and a
     comma-joined reason string → DataFrame[conv_id, n_turns,
@@ -237,7 +238,10 @@ def conv_verdicts(
     (checks/suite.run_verdicts): the same constraint families — key
     uniqueness/contiguity, role/tool domains, role-transition grammar,
     timestamp monotonicity, null text, token budget — scored per
-    conversation, the granularity a curation pipeline filters on.
+    conversation, the granularity a curation pipeline filters on. The
+    role/tool domain and null-text predicates are the suite's own
+    (suite.row_local_flags, default SuiteConfig domains); the grammar is
+    DEFAULT_ROLE_GRAMMAR and the budget TOKEN_BUDGET.
 
     Scale shape: one window keyed on conv_id (lag(role) + preceding-max
     ts in the same frame spec) feeding one hash aggregate on the SAME
@@ -248,27 +252,21 @@ def conv_verdicts(
     Reason codes, fixed order: dup_keys, non_contiguous, role_domain,
     tool_domain, grammar, out_of_order, null_text, over_budget.
     """
+    from matric_spark.checks.suite import row_local_flags
     from matric_spark.functions.text import bpe_token_count
-    from matric_spark.schema import DEFAULT_ROLE_DOMAIN, DEFAULT_TOOL_DOMAIN
 
-    role_domain = role_domain or list(DEFAULT_ROLE_DOMAIN)
-    tool_domain = tool_domain or list(DEFAULT_TOOL_DOMAIN)
-
+    flags = row_local_flags()
     role_s = F.coalesce(F.col("role"), F.lit("\x1dnull"))
     order_s = turn_order_string(include_tool=True)
     w = Window.partitionBy("conv_id").orderBy("turn_idx", "ts", order_s)
     w_prev = w.rowsBetween(Window.unboundedPreceding, -1)
-    allowed_keys = sorted(f"{a}\x1f{b}" for a, b in grammar)
+    allowed_keys = sorted(f"{a}\x1f{b}" for a, b in DEFAULT_ROLE_GRAMMAR)
 
     flagged = df.select(
         "conv_id",
         "turn_idx",
-        (F.col("role").isNull() | ~F.col("role").isin(role_domain)).alias(
-            "_role_bad"
-        ),
-        (F.col("tool").isNotNull() & ~F.col("tool").isin(tool_domain)).alias(
-            "_tool_bad"
-        ),
+        flags["ref_role"].alias("_role_bad"),
+        flags["ref_tool"].alias("_tool_bad"),
         (
             ~F.concat_ws(
                 "\x1f",
@@ -277,8 +275,8 @@ def conv_verdicts(
             ).isin(allowed_keys)
         ).alias("_grammar_bad"),
         (F.col("ts") < F.max("ts").over(w_prev)).alias("_ooo"),
-        F.col("text").isNull().alias("_text_null"),
-        F.when(F.col("text").isNull(), F.lit(0).cast("long"))
+        flags["null_text"].alias("_text_null"),
+        F.when(flags["null_text"], F.lit(0).cast("long"))
         .otherwise(bpe_token_count("text"))
         .alias("_bpe"),
     )
@@ -309,7 +307,7 @@ def conv_verdicts(
         ("grammar", F.col("n_grammar_viol") > 0),
         ("out_of_order", F.col("n_ooo") > 0),
         ("null_text", F.col("n_text_null") > 0),
-        ("over_budget", F.col("n_bpe_tokens") > token_budget),
+        ("over_budget", F.col("n_bpe_tokens") > TOKEN_BUDGET),
     ]
     reasons = F.concat_ws(
         ",", *[F.when(cond, F.lit(name)) for name, cond in rules]
@@ -328,12 +326,12 @@ def conv_verdicts(
 
 
 def preceding_max_ts_window():
-    """THE ordering window for out-of-order detection — one definition
-    shared by out_of_order_turns and the quarantine router so the ooo
-    reason and the seq_order verdict can never drift: per conversation,
-    ordered by (turn_idx, ts) (the ts tie-break makes the preceding-max
-    deterministic even under duplicate turn_idx), frame = all earlier
-    rows."""
+    """THE ordering window for out-of-order detection, read by
+    suite.check_flags' seq_order flag (shared by the verdicts, the
+    state, the quarantine router and out_of_order_turns): per
+    conversation, ordered by (turn_idx, ts) (the ts tie-break makes the
+    preceding-max deterministic even under duplicate turn_idx), frame =
+    all earlier rows."""
     return (
         Window.partitionBy("conv_id")
         .orderBy("turn_idx", "ts")
@@ -342,13 +340,13 @@ def preceding_max_ts_window():
 
 
 def out_of_order_turns(df: DataFrame) -> DataFrame:
-    """Rows whose ts is strictly below the max ts of any earlier turn
-    (see preceding_max_ts_window)."""
-    return (
-        df.withColumn("_prev_max_ts", F.max("ts").over(preceding_max_ts_window()))
-        .filter(F.col("ts") < F.col("_prev_max_ts"))
-        .drop("_prev_max_ts")
-    )
+    """Rows whose ts is strictly below the max ts of any earlier turn:
+    the rows suite.check_flags flags seq_order (Catalyst prunes the
+    other flags and the key window)."""
+    from matric_spark.checks.suite import SuiteConfig, check_flags
+
+    flagged = check_flags(df, SuiteConfig(), df.columns)
+    return flagged.filter(F.col("seq_order")).select(*df.columns)
 
 
 def text_parity(df: DataFrame, reference: DataFrame) -> DataFrame:

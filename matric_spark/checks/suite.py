@@ -3,23 +3,24 @@ violation rows — the graft's analog of matric's collate-then-metrics
 pipeline (typed subsets unioned with a discriminator column,
 R/sim_collate.R:480-504; per-group metric rows, R/sim_metrics.R:154-304).
 
-Physical plan budget per run (the 100 TB story) — THREE scans, of which
-only two read the wide text column:
-  1 scan  — fused conditional-aggregation pass: ALL scalar-predicate
-            checks (role domain, tool domain, null text) + row counts per
-            partition ride one groupBy(partition) with map-side combine.
-            IN-list domains stay JVM-side (no join, no shuffle of the
-            big table beyond the partial-agg shuffle).
-  1 scan  — fused conv-keyed window pass (conv_keyed_metrics): the
-            sequence check's Window.partitionBy(conv_id) exchange
-            already moves (conv_id, turn_idx, ts, part), and uniqueness
-            on the (conv_id, turn_idx) key needs only clustering by a
-            prefix of that — hashpartitioning(conv_id) satisfies
-            ClusteredDistribution(conv_id, turn_idx) and the sequence
-            sort (conv_id, turn_idx, ts) covers the key window's
-            (conv_id, turn_idx) — so BOTH checks ride ONE exchange and
-            ONE sort (plan-pinned in tests/test_plans.py). Text never
-            shuffles here.
+The six row checks (ROW_CHECKS) are defined ONCE, in `check_flags`, the
+way matric's constructor and reader share one `sim_validate`
+(R/sim_construct-validate.R:54-81): the verdicts, the state builder,
+the quarantine router and the stream monitors all read these flags, so
+no two of them can disagree on a NULL role or a NULL conv_id.
+
+Physical plan budget per run (the 100 TB story) — TWO passes:
+  1 scan  — the flag pass (check_flags -> check_counts): the four
+            row-local flags (role/tool IN-list domains, null text, null
+            ts) are computed at the scan, so text is read there and
+            never shuffles; only the partition column, the window keys
+            and the booleans enter ONE conv_id exchange. The key-count
+            window needs only ClusteredDistribution(conv_id, turn_idx),
+            which hashpartitioning(conv_id) satisfies, and the sequence
+            sort (conv_id, turn_idx, ts) covers its ordering — so
+            uniqueness and seq_order ride ONE exchange and ONE sort, and
+            one groupBy(partition) sums every flag (plan-pinned in
+            tests/test_plans.py).
   1 scan  — drift value-counts: KS and PSI come from ONE partition x
             value grid over the (p, v, c) sketch (drift_by_partition),
             whose three consumers read one reused exchange — so the
@@ -32,93 +33,88 @@ each push down to the scan), optionally capped.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from matric_spark.checks.drift import counts_sketch, drift_by_partition
 from matric_spark.checks.referential import domain_violations
-from matric_spark.checks.sequence import out_of_order_turns
+from matric_spark.checks.sequence import out_of_order_turns, preceding_max_ts_window
 from matric_spark.checks.uniqueness import uniqueness_violations
-from matric_spark.schema import DEFAULT_ROLE_DOMAIN, DEFAULT_TOOL_DOMAIN
+from matric_spark.schema import DEFAULT_ROLE_DOMAIN, DEFAULT_TOOL_DOMAIN, TRANSCRIPT_KEY
 
 VERDICT_COLUMNS = ["part", "check_id", "metric", "status"]
+
+#: the row-level checks, in verdict order
+ROW_CHECKS = ["ref_role", "ref_tool", "null_text", "null_ts", "uniqueness", "seq_order"]
 
 
 @dataclass
 class SuiteConfig:
     partition_col: str = "part_month"
-    key: list[str] = field(default_factory=lambda: ["conv_id", "turn_idx"])
+    key: list[str] = field(default_factory=lambda: list(TRANSCRIPT_KEY))
     role_domain: list[str] = field(default_factory=lambda: list(DEFAULT_ROLE_DOMAIN))
     tool_domain: list[str] = field(default_factory=lambda: list(DEFAULT_TOOL_DOMAIN))
     ks_threshold: float = 0.15
     psi_threshold: float = 0.25
 
 
-def scalar_check_metrics(df: DataFrame, cfg: SuiteConfig) -> DataFrame:
-    """ONE pass over the table: per-partition counts for every
-    scalar-predicate check (conditional aggregation)."""
-    bad_role = (~F.col("role").isin(cfg.role_domain)) & F.col("role").isNotNull()
-    bad_tool = (~F.col("tool").isin(cfg.tool_domain)) & F.col("tool").isNotNull()
-    return df.groupBy(F.col(cfg.partition_col).alias("part")).agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(bad_role.cast("long")).alias("ref_role"),
-        F.sum(bad_tool.cast("long")).alias("ref_tool"),
-        F.sum(F.col("text").isNull().cast("long")).alias("null_text"),
-        F.sum(F.col("ts").isNull().cast("long")).alias("null_ts"),
-    )
+def row_local_flags(cfg: SuiteConfig | None = None) -> dict[str, Column]:
+    """The four row-local checks as never-NULL booleans, in verdict
+    order: a role that is NULL or outside the domain (as the oracle and
+    the violation rows count it), a non-NULL tool outside the domain,
+    NULL text, NULL ts."""
+    cfg = cfg or SuiteConfig()
+    role, tool = F.col("role"), F.col("tool")
+    return {
+        "ref_role": role.isNull() | ~role.isin(cfg.role_domain),
+        "ref_tool": tool.isNotNull() & ~tool.isin(cfg.tool_domain),
+        "null_text": F.col("text").isNull(),
+        "null_ts": F.col("ts").isNull(),
+    }
 
 
-def conv_keyed_metrics(df: DataFrame, cfg: SuiteConfig) -> DataFrame:
-    """The suite's fused conv-keyed pass: sequence + uniqueness metrics
-    from ONE exchange -> DataFrame[part, seq_order, uniqueness] (every
-    partition present; zero-violation partitions carry 0).
+def check_flags(df: DataFrame, cfg: SuiteConfig, carry: list[str]) -> DataFrame:
+    """THE row-check definition -> DataFrame[*carry, *ROW_CHECKS], one
+    never-NULL boolean per check.
 
-    - seq_order: rows whose ts is strictly below the max ts of any
-      earlier turn — the same shared preceding_max_ts_window definition
-      as out_of_order_turns, so the two can never drift.
-    - uniqueness: rows participating in duplicated composite keys,
-      null-keyed rows excluded — the same semantics as
-      uniqueness.duplicate_keys (the count window runs over the REAL key,
-      so there is no hash-collision risk to void).
-
-    Physical shape (see module docstring): the key-count window needs
-    only ClusteredDistribution(*key), which the sequence window's
-    hashpartitioning(conv_id) satisfies (key[0] is conv_id — asserted),
-    and the sequence sort (conv_id, turn_idx, ts) covers the key
-    window's (conv_id, turn_idx): one exchange, one sort, two window
-    frames, then a tiny per-part aggregate. For an exotic non-conv-
-    prefixed key Spark would insert a second exchange — still correct,
-    just not fused — so the assert keeps the contract visible.
-    """
+    The row-local flags are computed at the scan; only `carry`, the
+    window keys and the booleans enter the one conv_id exchange.
+    - uniqueness: the row's key occurs more than once; rows with a NULL
+      key column are excluded (uniqueness.py's NULL-key contract —
+      Window.partitionBy groups NULLs together, so the count is masked).
+    - seq_order: ts strictly below the max ts of any earlier turn of
+      the conversation (sequence.preceding_max_ts_window; NULL conv_ids
+      form one conversation, as in the oracle).
+    For an exotic non-conv-prefixed key Spark would insert a second
+    exchange — still correct, just not fused — so the assert keeps the
+    contract visible."""
     assert cfg.key[0] == "conv_id", "fused pass assumes conv-prefixed key"
-    p = cfg.partition_col
-    from matric_spark.checks.sequence import preceding_max_ts_window
-
-    cols = list(dict.fromkeys(["conv_id", "turn_idx", "ts", p, *cfg.key]))
-    nn = F.lit(True)
-    for k in cfg.key:
-        nn = nn & F.col(k).isNotNull()
-    enriched = (
-        df.select(*cols)
-        .withColumn(
-            "_prev_max_ts", F.max("ts").over(preceding_max_ts_window())
-        )
-        .withColumn(
-            "_k", F.count(F.lit(1)).over(Window.partitionBy(*cfg.key))
-        )
+    window_cols = [
+        c for c in dict.fromkeys(["conv_id", "turn_idx", "ts", *cfg.key]) if c not in carry
+    ]
+    local = row_local_flags(cfg)
+    scanned = df.select(*carry, *window_cols, *[c.alias(n) for n, c in local.items()])
+    non_null_key = reduce(Column.__and__, [F.col(k).isNotNull() for k in cfg.key])
+    key_count = F.count(F.lit(1)).over(Window.partitionBy(*cfg.key))
+    prev_max_ts = F.max("ts").over(preceding_max_ts_window())
+    return scanned.select(
+        *carry,
+        *local,
+        (non_null_key & (key_count > 1)).alias("uniqueness"),
+        F.coalesce(F.col("ts") < prev_max_ts, F.lit(False)).alias("seq_order"),
     )
-    # coalesce: a partition whose every ts comparison is NULL (all rows
-    # conversation-first, _prev_max_ts NULL) must report 0, matching the
-    # previous absent-row + fillna(0) shape bit for bit
-    return enriched.groupBy(F.col(p).alias("part")).agg(
-        F.coalesce(
-            F.sum((F.col("ts") < F.col("_prev_max_ts")).cast("long")),
-            F.lit(0),
-        ).alias("seq_order"),
-        F.coalesce(
-            F.sum((nn & (F.col("_k") > 1)).cast("long")), F.lit(0)
-        ).alias("uniqueness"),
+
+
+def check_counts(df: DataFrame, cfg: SuiteConfig) -> DataFrame:
+    """Per-partition violation counts of every row check ->
+    DataFrame[part, n_rows, *ROW_CHECKS]: the flag pass grouped by
+    partition."""
+    p = cfg.partition_col
+    return check_flags(df, cfg, [p]).groupBy(F.col(p).alias("part")).agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        *[F.sum(F.col(c).cast("long")).alias(c) for c in ROW_CHECKS],
     )
 
 
@@ -127,15 +123,8 @@ def run_verdicts(df: DataFrame, cfg: SuiteConfig | None = None) -> DataFrame:
     (part, check_id, metric, status), every partition present for every
     check, 'fail' iff the check's threshold is exceeded."""
     cfg = cfg or SuiteConfig()
-    p = cfg.partition_col
-
-    # sequence + uniqueness: one conv-keyed exchange (module docstring)
-    local = (
-        scalar_check_metrics(df, cfg)
-        .join(conv_keyed_metrics(df, cfg), "part", "left")
-        .fillna(0, subset=["uniqueness", "seq_order"])
-    )
-    return core_rows(local, counts_sketch(df, p, F.length("text")), cfg)
+    sketch = counts_sketch(df, cfg.partition_col, F.length("text"))
+    return core_rows(check_counts(df, cfg), sketch, cfg)
 
 
 def _entry(metric: Column, fail_when: Column) -> Column:
@@ -169,16 +158,13 @@ def core_rows(local: DataFrame, sketch: DataFrame, cfg: SuiteConfig) -> DataFram
     (state.assemble_verdicts), so the two emissions cannot diverge in
     check ids, thresholds or status logic.
 
-    ``local``: (part, ref_role, ref_tool, null_text, null_ts,
-    uniqueness, seq_order), one row per partition. ``sketch``: the
-    (p, v, c) text-length counts; KS and PSI of every partition against
-    its complement are derived from it here."""
+    ``local``: (part, *ROW_CHECKS) violation counts, one row per
+    partition (check_counts' shape). ``sketch``: the (p, v, c)
+    text-length counts; KS and PSI of every partition against its
+    complement are derived from it here."""
     drift = drift_by_partition(sketch, "part").select("part", "ks_d", "psi")
     wide = local.join(drift, "part", "left")
-    cells = {
-        c: _entry(F.col(c), F.col(c) > 0)
-        for c in ["ref_role", "ref_tool", "null_text", "null_ts", "uniqueness", "seq_order"]
-    }
+    cells = {c: _entry(F.col(c), F.col(c) > 0) for c in ROW_CHECKS}
     cells["drift_ks"] = _entry(F.col("ks_d"), F.col("ks_d") > cfg.ks_threshold)
     cells["drift_psi"] = _entry(F.col("psi"), F.col("psi") > cfg.psi_threshold)
     return _unpivot(wide, cells)
@@ -197,7 +183,7 @@ def run_verdicts_extended(
     the same (part, check_id, metric, status) schema:
     - ``rule_<name>``: violation count per cross-field implication rule
       (checks/constraints.Rule) — ALL rules ride ONE conditional
-      aggregation scan, the scalar_check_metrics pattern.
+      aggregation scan, one summed boolean per rule as in check_counts.
     - ``fd_conflict``: intra-partition functional-dependency conflicts —
       (key) groups within the partition whose copies disagree on any
       dependent. Cross-partition conflicts are partition_spillover /

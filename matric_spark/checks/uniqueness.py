@@ -19,7 +19,8 @@ same NULL key" is not a well-defined duplicate — and nullness of a key
 column is its own check (column_stats null-rate / a not-null constraint),
 not a uniqueness violation. Window.partitionBy DOES group NULL tuples
 together, which is why the verdict path's key window
-(suite.conv_keyed_metrics) masks null-keyed rows out of its count.
+(suite.check_flags' uniqueness flag) masks null-keyed rows out of its
+count.
 """
 
 from __future__ import annotations

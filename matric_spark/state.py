@@ -67,12 +67,11 @@ from pyspark.sql import functions as F
 
 from matric_spark.checks.constraints import default_transcript_rules
 from matric_spark.checks.drift import counts_sketch
-from matric_spark.checks.sequence import out_of_order_turns
 from matric_spark.checks.suite import (
     SuiteConfig,
+    check_counts,
     core_rows,
     extended_partition_metrics,
-    scalar_check_metrics,
 )
 
 _LOG_SCHEMA = "part int, run_id string, n_rows long, fingerprint string"
@@ -311,10 +310,13 @@ def partition_state(
     `run_incremental` and `streaming.validate.validated_stream`.
 
     `conv_rows` holds the whole conversations of `rows` (a superset of
-    it): the sequence check needs full conversations, which may span
-    partitions, and its verdicts are attributed to each row's own
-    partition — the left join from the scalar counts keeps only the
-    partitions of `rows`. Every row carries `run_id`. The
+    it, NULL conv_ids included — they form one conversation, as in the
+    batch suite): the sequence check needs full conversations, which
+    may span partitions. `local` is the batch suite's own check_counts
+    over `conv_rows`, semi-joined to the log's parts, so each verdict is
+    attributed to its row's own partition and only the partitions of
+    `rows` are written; its uniqueness column is dropped (assembly folds
+    that from `key_index`). Every row carries `run_id`. The
     partition-sized relations are written as one file each (otherwise
     every append leaves shuffle-partitions-many KB-sized files, and a
     micro-batched run reads hundreds of them at assembly); the key
@@ -322,15 +324,15 @@ def partition_state(
     partition-local rule/FD metrics (`local_ext`)."""
     p = cfg.partition_col
     part = F.col(p).alias("part")
-    seq = (
-        out_of_order_turns(conv_rows)
-        .groupBy(part)
-        .agg(F.count(F.lit(1)).alias("seq_order"))
+    log = (
+        rows.groupBy(part)
+        .agg(F.count(F.lit(1)).alias("n_rows"))
+        .select("part", F.lit(run_id).alias("run_id"), "n_rows")
     )
     local = (
-        scalar_check_metrics(rows, cfg)
-        .join(seq, "part", "left")
-        .fillna(0, subset=["seq_order"])
+        check_counts(conv_rows, cfg)
+        .drop("uniqueness")
+        .join(log.select("part"), "part", "left_semi")
     )
     appends = [
         ("local", local.coalesce(1)),
@@ -347,11 +349,6 @@ def partition_state(
         )
         appends.append(("local_ext", ext.coalesce(1)))
     tagged = [(n, df.withColumn("run_id", F.lit(run_id))) for n, df in appends]
-    log = (
-        rows.groupBy(part)
-        .agg(F.count(F.lit(1)).alias("n_rows"))
-        .select("part", F.lit(run_id).alias("run_id"), "n_rows")
-    )
     return [*tagged, ("log", log.coalesce(1))]
 
 
@@ -395,9 +392,12 @@ def run_incremental(
 
     if remaining.select(p).limit(1).count() > 0:
         # whole conversations of the new partitions: a bounded boundary
-        # re-read via semi-join (they may span partitions)
-        convs = remaining.select(*cfg.key[:1]).distinct()
-        full_convs = transcripts.join(convs, cfg.key[:1], "left_semi")
+        # re-read via semi-join (they may span partitions); null-safe,
+        # so the NULL-conv_id rows stay one conversation as in the batch
+        convs = remaining.select(F.col("conv_id").alias("_conv")).distinct()
+        full_convs = transcripts.join(
+            convs, F.col("conv_id").eqNullSafe(F.col("_conv")), "left_semi"
+        )
         for name, df in partition_state(
             remaining, full_convs, cfg, run_id, extended
         ):

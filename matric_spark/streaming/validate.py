@@ -8,8 +8,8 @@ based, not streaming-state based):
   the transcript schema (new parquet files = new micro-batches; on a
   cluster this is an Iceberg/Kafka source).
 - `validated_stream` runs EVERY micro-batch through the same state
-  builder as `state.run_incremental` (`state.partition_state`: scalar
-  verdicts, key index, drift sketch, completion log keyed by batch),
+  builder as `state.run_incremental` (`state.partition_state`: row-check
+  counts, key index, drift sketch, completion log keyed by batch),
   and `stream_verdicts` reads it back through the same commit rule and
   assembly, so a streaming deployment and a batch backfill share one
   state table and one verdict semantics — the batch/streaming
@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from matric_spark.checks.suite import SuiteConfig
+from matric_spark.checks.suite import SuiteConfig, row_local_flags
 
 TRANSCRIPT_DDL = (
     "conv_id string, turn_idx int, role string, text string, "
@@ -70,16 +70,17 @@ def windowed_rates(
     cfg: SuiteConfig | None = None,
 ) -> DataFrame:
     """Event-time windowed monitor: turns, null-text and bad-role counts
-    per (window, partition), tolerating `watermark` of lateness."""
+    per (window, partition), tolerating `watermark` of lateness. The
+    predicates are the suite's row-local flags (a NULL role is bad)."""
     cfg = cfg or SuiteConfig()
-    bad_role = (~F.col("role").isin(cfg.role_domain)) & F.col("role").isNotNull()
+    flags = row_local_flags(cfg)
     return (
         stream.withWatermark("ts", watermark)
         .groupBy(F.window("ts", window), F.col(cfg.partition_col).alias("part"))
         .agg(
             F.count(F.lit(1)).alias("n_turns"),
-            F.sum(F.col("text").isNull().cast("long")).alias("null_text"),
-            F.sum(bad_role.cast("long")).alias("bad_role"),
+            F.sum(flags["null_text"].cast("long")).alias("null_text"),
+            F.sum(flags["ref_role"].cast("long")).alias("bad_role"),
         )
     )
 
@@ -96,8 +97,8 @@ def validated_stream(
     """Start a foreachBatch query appending per-micro-batch check state.
 
     Each batch goes through `state.partition_state`, the builder
-    `state.run_incremental` uses (scalar verdicts + seq counts, key
-    index, drift sketch, completion log), under run_id
+    `state.run_incremental` uses (row-check counts, key index, drift
+    sketch, completion log), under run_id
     `stream-<batchId>` and into the SAME StateStore layout; final
     verdicts come from `stream_verdicts`, i.e. `state.assemble_verdicts`,
     so streaming ingestion and batch backfill are interchangeable
@@ -160,45 +161,3 @@ def stream_verdicts(
         StateStore(spark, state_dir), fingerprint, cfg or SuiteConfig()
     )
 
-
-def rule_violation_stream(stream: DataFrame, rules=None, id_cols=None) -> DataFrame:
-    """Row-constraint monitor on a stream: the rule pack from
-    checks/constraints.rule_violations applied to micro-batches.
-
-    rule_violations compiles to a narrow map (array-of-name expression +
-    codegen filter + explode — no shuffle, no window, no state), so it
-    is directly streamable in append mode with no watermark: every
-    violating row is emitted exactly once, in the micro-batch it
-    arrives in. This is the live-firehose complement of the batch
-    rule_<name> verdicts in checks/suite.run_verdicts_extended — same
-    Rule objects, same violation semantics, differential-tested
-    streaming ≡ batch.
-    """
-    from matric_spark.checks.constraints import (
-        default_transcript_rules,
-        rule_violations,
-    )
-
-    return rule_violations(stream, rules or default_transcript_rules(), id_cols)
-
-
-def payload_violation_stream(
-    stream: DataFrame,
-    col: str,
-    key: str,
-    lo: int,
-    hi: int,
-    id_cols=None,
-) -> DataFrame:
-    """JSON payload-contract monitor on a stream: checks/payload.
-    json_payload_violations applied to micro-batches.
-
-    Same streamability argument as rule_violation_stream: the payload
-    tiers compile to one codegen scan (get_json_object + regexp — no
-    shuffle, no window, no state), so append mode needs no watermark
-    and each violating row is emitted exactly once, in the micro-batch
-    it arrives in. Differential-tested streaming ≡ batch.
-    """
-    from matric_spark.checks.payload import json_payload_violations
-
-    return json_payload_violations(stream, col, key, lo, hi, id_cols)

@@ -33,7 +33,7 @@ def test_column_stats(tiny_transcripts):
     assert out[2]["tool_nulls"] == 1
 
 
-def test_uniqueness_strategies_agree(tiny_transcripts):
+def test_duplicate_keys_and_violation_rows(tiny_transcripts):
     key = ["conv_id", "turn_idx"]
     got = sorted(map(tuple, duplicate_keys(tiny_transcripts, key).collect()))
     assert got == [("B", 1, 2)]
@@ -47,7 +47,7 @@ def test_uniqueness_null_keys_excluded(spark):
     groups NULLs together, so without the null-key mask the window-based
     verdict path would report NULL-key 'duplicates' the join-based path
     (and the DuckDB oracle's JOIN USING) can never match."""
-    from matric_spark.checks.suite import SuiteConfig, conv_keyed_metrics
+    from matric_spark.checks.suite import SuiteConfig, check_counts
 
     rows = [
         ("A", 0, 1, "x"), ("A", 0, 1, "y"),        # real dup
@@ -56,7 +56,9 @@ def test_uniqueness_null_keys_excluded(spark):
         ("C", 2, 1, "ok"),
     ]
     df = spark.createDataFrame(
-        rows, "conv_id string, turn_idx int, part_month int, text string"
+        [(*r, "user", None) for r in rows],
+        "conv_id string, turn_idx int, part_month int, text string, "
+        "role string, tool string",
     )
     key = ["conv_id", "turn_idx"]
     got = sorted(map(tuple, duplicate_keys(df, key).collect()))
@@ -66,7 +68,7 @@ def test_uniqueness_null_keys_excluded(spark):
     # window-based verdict path agrees with the join-based path
     with_ts = df.withColumn("ts", F.lit(None).cast("timestamp"))
     counts = {r["part"]: r["uniqueness"] for r in
-              conv_keyed_metrics(with_ts, SuiteConfig()).collect()}
+              check_counts(with_ts, SuiteConfig()).collect()}
     assert counts == {1: 2}
 
 

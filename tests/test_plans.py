@@ -67,10 +67,10 @@ def test_referential_check_broadcasts_domain_no_shuffle(spark, transcripts_parqu
 
 
 def test_suite_scalar_domains_are_inlist_no_join(spark, transcripts_parquet):
-    from matric_spark.checks.suite import SuiteConfig, scalar_check_metrics
+    from matric_spark.checks.suite import SuiteConfig, check_counts
 
     t = spark.read.parquet(transcripts_parquet)
-    p = plan(scalar_check_metrics(t, SuiteConfig()))
+    p = plan(check_counts(t, SuiteConfig()))
     # domains as IN-list expressions inside the aggregate, no join node
     # (with AQE the pre-execution plan hides codegen *(n) markers; the
     # fused 2-aggregate shape is asserted in the sibling test)
@@ -104,32 +104,51 @@ def test_within_group_pairs_is_equi_join_not_cartesian(spark):
 
 
 def test_conv_keyed_metrics_one_exchange_one_sort(spark, transcripts_parquet):
-    """The fused sequence+uniqueness pass must ride ONE conv_id exchange
-    and ONE sort: hashpartitioning(conv_id) satisfies the key window's
-    ClusteredDistribution(conv_id, turn_idx) and the sequence sort
-    (conv_id, turn_idx, ts) covers its (conv_id, turn_idx) ordering —
-    if either stops holding, a second exchange/sort of the full table
-    appears and this pins the regression. Text must never enter the
-    exchange (it is not selected at all)."""
-    from matric_spark.checks.suite import SuiteConfig, conv_keyed_metrics
+    """The flag pass's sequence+uniqueness windows must ride ONE conv_id
+    exchange and ONE sort: hashpartitioning(conv_id) satisfies the key
+    window's ClusteredDistribution(conv_id, turn_idx) and the sequence
+    sort (conv_id, turn_idx, ts) covers its (conv_id, turn_idx)
+    ordering — if either stops holding, a second exchange/sort of the
+    full table appears and this pins the regression. Text is read at
+    the scan for null_text but must never enter an exchange."""
+    import re
+
+    from matric_spark.checks.suite import SuiteConfig, check_counts
 
     t = spark.read.parquet(transcripts_parquet)
-    p = plan(conv_keyed_metrics(t, SuiteConfig()))
+    p = plan(check_counts(t, SuiteConfig()))
     assert p.count("hashpartitioning(conv_id") == 1
     assert p.count("Sort (") == 1  # tree node: the (conv,turn,ts) sort
     assert p.count("Window (") == 2  # tree nodes: prev-max + key-count
-    assert "text" not in p  # the wide column never enters this pass
+    # the wide column never crosses the wire (\b: null_text# is a flag)
+    assert not any(re.search(r"\btext#\d+", i) for i in _exchange_inputs(p))
 
 
 def test_scalar_suite_is_single_aggregate(spark, transcripts_parquet):
-    """All scalar checks fuse into ONE partial+final aggregate pass."""
-    from matric_spark.checks.suite import SuiteConfig, scalar_check_metrics
+    """All row checks fuse into ONE partial+final aggregate pass."""
+    from matric_spark.checks.suite import SuiteConfig, check_counts
 
     t = spark.read.parquet(transcripts_parquet)
-    p = plan(scalar_check_metrics(t, SuiteConfig()))
+    p = plan(check_counts(t, SuiteConfig()))
     # tree section: exactly partial + final ("HashAggregate (n)" lines)
     assert p.count("HashAggregate (") == 2
     assert "Join" not in p
+
+
+def test_run_verdicts_scans_table_twice(spark, transcripts_parquet):
+    """run_verdicts reads the table in exactly two scan shapes: ONE flag
+    pass (every row check) and the drift sketch's text-only scans."""
+    import re
+
+    from matric_spark.checks.suite import run_verdicts
+
+    p = plan(run_verdicts(spark.read.parquet(transcripts_parquet)))
+    schemas = re.findall(
+        r"\n\(\d+\) Scan parquet[^\n]*\n(?:[^\n]+\n)*?ReadSchema: ([^\n]+)", p
+    )
+    sketch = "struct<text:string>"
+    assert sketch in schemas, schemas
+    assert len([s for s in schemas if s != sketch]) == 1, schemas
 
 
 def test_uniqueness_hash_phase_aggregates_on_long(spark, transcripts_parquet):

@@ -111,6 +111,80 @@ def test_cross_partition_duplicates_found_incrementally(spark, tmp_path, cfg):
     assert _rows(out) == _rows(run_verdicts(df, cfg))
 
 
+def test_degenerate_rows_agree_across_paths(spark, tmp_path, cfg):
+    """One definition per row check: on NULL role/tool/text/ts, a NULL
+    turn_idx pair, a real duplicate key and NULL-conv_id rows out of
+    order ACROSS two partitions, the batch verdicts, the quarantine
+    summary and a crash-after-one-partition resume report the same
+    count for every check and partition, and each violation-row set
+    has as many rows as its verdicts sum to."""
+    import datetime as dt
+
+    from matric_spark.checks.quarantine import quarantine_summary
+    from matric_spark.checks.suite import run_violations
+
+    t0 = dt.datetime(2024, 1, 1)
+
+    def r(conv, idx, role, text, tool, sec, part):
+        ts = None if sec is None else t0 + dt.timedelta(seconds=sec)
+        return (conv, idx, role, text, tool, ts, part)
+
+    rows = [
+        r("A", 0, "system", "s", None, 0, 1),
+        r("A", 1, None, "u", None, 10, 1),  # NULL role
+        r("A", 2, "assistant", None, None, 20, 1),  # NULL text
+        r("A", 3, "tool", "o", "telnet", None, 1),  # bad tool, NULL ts
+        r("D", 0, "user", "d1", None, 0, 1),  # real duplicate key
+        r("D", 0, "user", "d2", None, 1, 1),
+        r("E", None, "user", "e1", None, 0, 1),  # NULL turn_idx pair
+        r("E", None, "user", "e2", None, 1, 1),
+        r(None, 0, "user", "n0", None, 100, 1),  # NULL conv_id ...
+        r(None, 1, "user", "n1", None, 50, 2),  # ... backwards in part 2
+        r("B", 0, "user", "b", None, 0, 2),
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp, part_month int",
+    )
+
+    # row check -> its quarantine reason
+    reason = {
+        "ref_role": "bad_role", "ref_tool": "bad_tool",
+        "null_text": "null_text", "null_ts": "null_ts",
+        "uniqueness": "dup_key", "seq_order": "ooo",
+    }
+
+    def metrics(verdicts):
+        return {
+            (r.part, r.check_id): r.metric
+            for r in verdicts.collect()
+            if r.check_id in reason
+        }
+
+    batch = metrics(run_verdicts(df, cfg))
+    sd = str(tmp_path / "state")
+    run_incremental(spark, df, sd, "r1", "fp", cfg, fail_after_partitions=1)
+    resumed = metrics(run_incremental(spark, df, sd, "r2", "fp", cfg))
+    quarantined = {
+        (s.part, c): float(s[f"n_{q}"])
+        for s in quarantine_summary(df, cfg).collect()
+        for c, q in reason.items()
+    }
+    assert batch.keys() == quarantined.keys() == resumed.keys()
+    disagree = {
+        k: (batch[k], quarantined[k], resumed[k])
+        for k in batch
+        if not batch[k] == quarantined[k] == resumed[k]
+    }
+    assert disagree == {}  # (batch, quarantine, resume) per (part, check)
+    assert batch[(1, "ref_role")] == 1 and batch[(2, "seq_order")] == 1
+    assert batch[(1, "uniqueness")] == 2  # the NULL-key pair is excluded
+    for check, viol in run_violations(df, cfg).items():
+        total = sum(m for (_, c), m in batch.items() if c == check)
+        assert viol.count() == total, check
+
+
 def test_input_fingerprint_changes_with_data(tmp_path):
     d = tmp_path / "data"
     d.mkdir()

@@ -277,10 +277,7 @@ def test_stream_rule_violations_match_batch(spark, tiny_transcripts, staged_stre
         default_transcript_rules,
         rule_violations,
     )
-    from matric_spark.streaming.validate import (
-        TRANSCRIPT_DDL,
-        rule_violation_stream,
-    )
+    from matric_spark.streaming.validate import TRANSCRIPT_DDL
 
     stream = (
         spark.readStream.schema(TRANSCRIPT_DDL)
@@ -288,7 +285,7 @@ def test_stream_rule_violations_match_batch(spark, tiny_transcripts, staged_stre
         .parquet(staged_stream_dir)
     )
     q = (
-        rule_violation_stream(stream)
+        rule_violations(stream, default_transcript_rules())
         .writeStream.format("memory")
         .queryName("rule_viol")
         .outputMode("append")
@@ -315,7 +312,6 @@ def test_stream_payload_violations_match_batch(spark, tmp_path):
     multiset — including malformed/missing/not-int tiers split across
     micro-batches."""
     from matric_spark.checks.payload import json_payload_violations
-    from matric_spark.streaming.validate import payload_violation_stream
 
     rows = [
         (0, "a", '{"k": 5}'),
@@ -334,7 +330,7 @@ def test_stream_payload_violations_match_batch(spark, tmp_path):
         spark.readStream.schema(ddl).option("maxFilesPerTrigger", 1).parquet(src)
     )
     q = (
-        payload_violation_stream(stream, "props", "k", 0, 90)
+        json_payload_violations(stream, "props", "k", 0, 90)
         .writeStream.format("memory")
         .queryName("payload_viol")
         .outputMode("append")
