@@ -8,17 +8,18 @@ cluster):
         --py-files dist/matric_spark.zip \
         --conf spark.executor.cores=4 --conf spark.executor.memory=7g \
         --conf spark.cores.max=<4 x executors> \
-        --conf spark.driver.defaultJavaOptions=-XX:CICompilerCount=2 \
+        --conf spark.driver.defaultJavaOptions=-XX:TieredStopAtLevel=1 \
         main.py \
         --input  <transcript table path or sf dir> \
         --state  s3://bucket/state \
         --run-id run-$(date +%s) \
         [--partitions 202401,202402] [--output <verdicts path>]
 
-(The defaultJavaOptions line caps the driver JVM's JIT compiler threads,
+(The defaultJavaOptions line makes the driver JVM compile with C1 only,
 the policy get_spark applies when it launches the JVM itself; under
 spark-submit the driver JVM starts before get_spark runs, so it goes on the
-command line. See session.py.)
+command line. A cluster driver only plans: the row loops run in the
+executors, which keep the default tiered JIT. See session.py.)
 
 (The cluster-provided master is respected — get_spark only forces
 local[N] when the process was launched outside spark-submit; see

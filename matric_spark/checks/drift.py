@@ -60,6 +60,15 @@ def counts_sketch(df: DataFrame, partition_col: str, value: Column) -> DataFrame
     )
 
 
+def opaque_eq(left: Column, right: Column) -> Column:
+    """``left = right`` for a join condition (a NULL matches nothing),
+    phrased so that the optimizer infers no ``isnotnull`` filter from it.
+    An equi-join pushes ``isnotnull(key)`` into its side's subplan; when
+    that subplan is one of several consumers of one sketch, its scan and
+    exchange stop matching the others' and the sketch is scanned twice."""
+    return left.eqNullSafe(right) & left.isNotNull()
+
+
 def drift_by_partition(sketch: DataFrame, partition_col: str) -> DataFrame:
     """KS, PSI and EMD of each partition's value distribution vs its
     complement, from the (p, v, c) sketch →
@@ -88,9 +97,11 @@ def drift_by_partition(sketch: DataFrame, partition_col: str) -> DataFrame:
     # group-by and window reuses that hashpartitioning(p)
     w = Window.partitionBy("p").orderBy("v")
     whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    cells = sketch.select(F.col("p").alias("cp"), F.col("v").alias("cv"), "c")
+    on = opaque_eq(F.col("p"), F.col("cp")) & opaque_eq(F.col("v"), F.col("cv"))
     grid = (
         parts.crossJoin(tot)
-        .join(sketch, on=["p", "v"], how="left")
+        .join(cells, on, "left")
         .fillna(0, subset=["c"])
         .select(
             "p",

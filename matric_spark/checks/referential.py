@@ -20,9 +20,13 @@ from pyspark.sql import functions as F
 
 
 def _domain_df(spark: SparkSession, col: str, domain: Sequence[str] | DataFrame) -> DataFrame:
+    """The domain as a one-column string relation. A list is built on the
+    JVM, as an exploded array literal: ``createDataFrame`` over Python
+    rows would be a Python RDD, one Python-worker job per check run."""
     if isinstance(domain, DataFrame):
         return domain.select(F.col(domain.columns[0]).alias(col))
-    return spark.createDataFrame([(v,) for v in domain], f"{col} string")
+    values = F.array(*[F.lit(v) for v in domain]).cast("array<string>")
+    return spark.range(1, numPartitions=1).select(F.explode(values).alias(col))
 
 
 def domain_violations(

@@ -23,8 +23,10 @@ Physical plan budget per run (the 100 TB story) — TWO passes:
             tests/test_plans.py).
   1 scan  — drift value-counts: KS and PSI come from ONE partition x
             value grid over the (p, v, c) sketch (drift_by_partition),
-            whose three consumers read one reused exchange — so the
-            sketch is neither persisted nor re-scanned, and everything
+            whose three consumers read one reused exchange (the joins
+            above them use opaque_eq keys, so no inferred filter reaches
+            one consumer only) — so the sketch is neither persisted nor
+            re-scanned (plan-pinned), and everything
             after it is |partitions| x |distinct values|, not |rows|.
 Violation ROWS are materialized lazily on demand (separate filters that
 each push down to the scan), optionally capped.
@@ -38,7 +40,7 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from matric_spark.checks.drift import counts_sketch, drift_by_partition
+from matric_spark.checks.drift import counts_sketch, drift_by_partition, opaque_eq
 from matric_spark.checks.referential import domain_violations
 from matric_spark.checks.sequence import out_of_order_turns, preceding_max_ts_window
 from matric_spark.checks.uniqueness import uniqueness_violations
@@ -162,8 +164,8 @@ def core_rows(local: DataFrame, sketch: DataFrame, cfg: SuiteConfig) -> DataFram
     partition (check_counts' shape). ``sketch``: the (p, v, c)
     text-length counts; KS and PSI of every partition against its
     complement are derived from it here."""
-    drift = drift_by_partition(sketch, "part").select("part", "ks_d", "psi")
-    wide = local.join(drift, "part", "left")
+    drift = drift_by_partition(sketch, "dpart")
+    wide = local.join(drift, opaque_eq(F.col("part"), F.col("dpart")), "left")
     cells = {c: _entry(F.col(c), F.col(c) > 0) for c in ROW_CHECKS}
     cells["drift_ks"] = _entry(F.col("ks_d"), F.col("ks_d") > cfg.ks_threshold)
     cells["drift_psi"] = _entry(F.col("psi"), F.col("psi") > cfg.psi_threshold)

@@ -14,26 +14,44 @@ Design notes (scale-first):
 - Iceberg: if the runtime jar is on the classpath we register a hadoop
   catalog (``spark.sql.catalog.graft``); otherwise the sources layer falls
   back to partitioned Parquet with identical semantics.
-- Driver JIT budget: the driver JVM starts with ``-XX:CICompilerCount=2``
-  (one C1 and one C2 thread under tiered compilation). A validation pass
-  is dozens of small Spark jobs, so the driver's own planning code, not
-  the data, dominates. Per-thread ``/proc`` sampling of one nightly
-  ``batch_validate`` pass on a 4-core host (local[4], default compiler
-  count) found the C2 threads at 35.5 s of 80.4 s process-tree CPU, plus
-  6.1 s of C1, against 14.7 s in task threads. A JFR compilation record
-  of the same pass split C2's work into Janino 27 %, JDK classes 14 %,
-  Catalyst 14 %, Java serialization 9 %, ``spark.sql.execution`` 9 %,
-  Scala collections 6 %, and only 9.6 % for the generated per-row code.
-  With a single C2 thread the tiered policy compiles the hottest methods
-  first and drops stale queued ones, so the row loops still reach C2
-  while most lukewarm planner code never does. The cap is set on the
-  driver only: in ``local[N]`` the tasks run in that JVM, while cluster
-  executors do real row work and keep the JVM's default. C1-only
-  (``-XX:TieredStopAtLevel=1``) cuts more CPU on small passes but slows
-  large inputs (a warm 2 M-turn verdicts + t-digest probe ran ~10 % more
-  CPU and ~23 % more wall), because the row loops never reach C2. The
-  cap's own price on that probe is a slower warm-up: the first warm reps
-  wait longer for C2 (median +5 % CPU over reps 2-4), later reps match.
+- Driver JIT: the driver JVM starts with ``-XX:TieredStopAtLevel=1``, so
+  it compiles with C1 only. A validation pass is dozens of small Spark
+  jobs, so the driver's own planning code, not the data, dominates, and
+  almost none of it stays hot long enough to repay C2. Per-thread
+  ``/proc`` CPU of one cold ``batch_validate`` pass (4-core host,
+  local[4], after the benchmark's set-ups) with C2 capped at one thread
+  (``-XX:CICompilerCount=2``): C2 22.9 CPU-s of 65.8 process-tree CPU-s,
+  C1 6.5, task threads 16.8. With C1 only: C2 0, C1 2.0, task threads
+  14.2, 4.5 in JVM threads that ended during the pass, process tree 36.3
+  (the task threads drop because code no longer waits in profiled tier-3
+  code behind a saturated C2 queue; raising only the Tier4 thresholds x3
+  or x30 saved nothing). A JFR compilation record of such a pass (default
+  compiler count) put only 9.6 % of C2's work on the generated per-row
+  code; the rest went to Janino, JDK classes, Catalyst, Java serialization
+  and Scala collections. Where C2 pays is a long-lived JVM whose row loops
+  run over large inputs. ``perfbench.gen`` seed 11, one ``run_verdicts`` +
+  ``tdigest_quantiles`` per pass, local[4], 4 GB heap, CPU-s per pass (two
+  JVMs per side):
+
+  ============  ===========  ===========  =============  =============
+  turns         cold, C2     cold, C1     warm, C2       warm, C1
+  ============  ===========  ===========  =============  =============
+  2 M           52.5 / 54.2  39.7 / 41.9  20.9-25.9      28.7-34.2
+  6 M           81.4 / 82.8  84.4 / 96.4  52.5 / 55.1    79.9 / 95.0
+  ============  ===========  ===========  =============  =============
+
+  (2 M warm: passes 3-5; 6 M warm: the second pass.) So C1 wins the first
+  pass up to ~2 M turns and loses every warm pass, by ~35 % at 2 M and
+  ~60 % at 6 M. The traffic this engine's drivers see is on the C1 side of
+  that crossover: the nightly pass (``main.py``, ``batch_validate``) is
+  one cold pass per JVM; Tier-1, ``bench.py`` and ``check_oracle.py`` are
+  long-lived JVMs over small inputs, where planning outweighs the row
+  loops; and a cluster driver only plans, its row loops run in the
+  executors, which keep the JVM's default tiered JIT (the flag is set on
+  the driver only). A long-lived local driver over multi-million-turn
+  inputs is the exception: give it its own
+  ``spark.driver.defaultJavaOptions`` in ``spark-defaults.conf`` (e.g.
+  ``-XX:CICompilerCount=2``), which ``get_spark`` keeps.
 """
 
 from __future__ import annotations
@@ -56,8 +74,8 @@ def _iceberg_available() -> bool:
         return False
 
 
-#: driver JVM flag bounding the JIT compiler threads (module docstring)
-JIT_CAP = "-XX:CICompilerCount=2"
+#: driver JVM flag: compile with C1 only (module docstring)
+JIT_CAP = "-XX:TieredStopAtLevel=1"
 
 
 def _driver_default_java_options() -> str:
@@ -65,8 +83,8 @@ def _driver_default_java_options() -> str:
 
     A ``SparkSession.builder`` setting replaces the
     ``spark-defaults.conf`` value, so a value set there is read here and
-    kept ahead of the cap; one that already sets ``CICompilerCount`` is
-    left alone. Spark prepends these
+    kept ahead of the cap; one that already sets ``TieredStopAtLevel`` or
+    ``CICompilerCount`` (its own JIT choice) is left alone. Spark prepends these
     options to ``spark.driver.extraJavaOptions``, so callers that pass
     their own extra options keep the cap."""
     from pyspark.find_spark_home import _find_spark_home
@@ -84,7 +102,7 @@ def _driver_default_java_options() -> str:
                     opts = m.group(1).strip()
     except OSError:
         pass
-    if "-XX:CICompilerCount=" in opts:
+    if re.search(r"-XX:(TieredStopAtLevel|CICompilerCount)=", opts):
         return opts
     return f"{opts} {JIT_CAP}".strip()
 
@@ -114,7 +132,7 @@ def get_spark(
 
     The driver JIT cap (``JIT_CAP``) only applies when this call
     launches the JVM; under ``spark-submit`` put
-    ``--conf spark.driver.defaultJavaOptions=-XX:CICompilerCount=2`` on
+    ``--conf spark.driver.defaultJavaOptions=-XX:TieredStopAtLevel=1`` on
     the submit command line (see ``main.py``).
     """
     env = os.environ.get("SPARK_GRAFT_CPUS")

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from matric_spark.checks.column_stats import column_stats
 from matric_spark.checks.drift import counts_sketch, drift_by_partition, entropy_by_partition
-from matric_spark.checks.referential import domain_violations
+from matric_spark.checks.referential import _domain_df, domain_violations
 from matric_spark.checks.sequence import conversation_shape, out_of_order_turns, text_parity
 from matric_spark.checks.suite import SuiteConfig, run_verdicts
 from matric_spark.checks.uniqueness import duplicate_keys, uniqueness_violations
@@ -83,6 +83,10 @@ def test_referential(tiny_transcripts):
         len(domain_violations(tiny_transcripts, "tool", DEFAULT_TOOL_DOMAIN, nulls_ok=False).collect())
         == 1 + n_null_tool
     )
+    # an empty domain is still a string column: every non-NULL role violates
+    empty = domain_violations(tiny_transcripts, "role", [], nulls_ok=True)
+    assert empty.count() == tiny_transcripts.filter(F.col("role").isNotNull()).count()
+    assert _domain_df(tiny_transcripts.sparkSession, "role", []).dtypes == [("role", "string")]
 
 
 def test_conversation_shape(tiny_transcripts):

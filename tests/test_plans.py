@@ -66,6 +66,18 @@ def test_referential_check_broadcasts_domain_no_shuffle(spark, transcripts_parqu
     assert "hashpartitioning" not in p  # zero shuffle of the table side
 
 
+def test_referential_domain_needs_no_python_worker(spark, transcripts_parquet):
+    """A list domain is built on the JVM: no Python RDD scan (one
+    Python-worker job per check run), and still a broadcast anti-join."""
+    from matric_spark.checks.referential import domain_violations
+    from matric_spark.schema import DEFAULT_TOOL_DOMAIN
+
+    t = spark.read.parquet(transcripts_parquet)
+    p = plan(domain_violations(t, "tool", DEFAULT_TOOL_DOMAIN))
+    assert "ExistingRDD" not in p
+    assert "BroadcastHashJoin" in p
+
+
 def test_suite_scalar_domains_are_inlist_no_join(spark, transcripts_parquet):
     from matric_spark.checks.suite import SuiteConfig, check_counts
 
@@ -136,19 +148,19 @@ def test_scalar_suite_is_single_aggregate(spark, transcripts_parquet):
 
 
 def test_run_verdicts_scans_table_twice(spark, transcripts_parquet):
-    """run_verdicts reads the table in exactly two scan shapes: ONE flag
-    pass (every row check) and the drift sketch's text-only scans."""
+    """run_verdicts reads the table exactly twice: ONE flag pass (every
+    row check) and ONE text-only drift sketch scan, whose three consumers
+    share its exchange (counted in the executed AQE plan, after reuse)."""
     import re
 
     from matric_spark.checks.suite import run_verdicts
 
-    p = plan(run_verdicts(spark.read.parquet(transcripts_parquet)))
-    schemas = re.findall(
-        r"\n\(\d+\) Scan parquet[^\n]*\n(?:[^\n]+\n)*?ReadSchema: ([^\n]+)", p
-    )
-    sketch = "struct<text:string>"
-    assert sketch in schemas, schemas
-    assert len([s for s in schemas if s != sketch]) == 1, schemas
+    df = run_verdicts(spark.read.parquet(transcripts_parquet))
+    df.collect()
+    final = df._jdf.queryExecution().executedPlan().executedPlan().toString()
+    schemas = re.findall(r"FileScan parquet [^\n]*ReadSchema: (struct<[^\n]*?>)", final)
+    assert len(schemas) == 2, schemas
+    assert "struct<text:string>" in schemas, schemas
 
 
 def test_uniqueness_hash_phase_aggregates_on_long(spark, transcripts_parquet):

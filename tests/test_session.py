@@ -6,12 +6,21 @@ from matric_spark.session import JIT_CAP, _driver_default_java_options
 
 
 def test_driver_jvm_runs_with_jit_cap(spark):
-    """The fixture's driver JVM was launched by get_spark with the cap."""
+    """The fixture's driver JVM was launched by get_spark with C1 only."""
     args = (
         spark.sparkContext._jvm.java.lang.management.ManagementFactory
         .getRuntimeMXBean().getInputArguments()
     )
-    assert "-XX:CICompilerCount=2" in list(args)
+    assert "-XX:TieredStopAtLevel=1" in list(args)
+
+
+def test_driver_jvm_reports_c1_only(spark):
+    """The running JVM took the flag (not just received it)."""
+    jvm = spark.sparkContext._jvm
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    assert bean.getVMOption("TieredStopAtLevel").getValue() == "1"
 
 
 def test_jit_cap_appended_to_spark_defaults(tmp_path, monkeypatch):
@@ -29,6 +38,7 @@ def test_jit_cap_appended_to_spark_defaults(tmp_path, monkeypatch):
     conf.write_text("spark.driver.defaultJavaOptions=-Dfoo=2\n")
     assert _driver_default_java_options() == f"-Dfoo=2 {JIT_CAP}"
 
-    # a site that already chose its own compiler count keeps it
-    conf.write_text("spark.driver.defaultJavaOptions -XX:CICompilerCount=3\n")
-    assert _driver_default_java_options() == "-XX:CICompilerCount=3"
+    # a site that already chose its own JIT keeps it, with no cap added
+    for site in ("-XX:CICompilerCount=3", "-Dfoo=1 -XX:TieredStopAtLevel=4"):
+        conf.write_text(f"spark.driver.defaultJavaOptions {site}\n")
+        assert _driver_default_java_options() == site
