@@ -22,14 +22,13 @@ from matric_spark.checks.drift import (
     drift_by_partition,
     entropy_by_partition,
 )
-from matric_spark.checks.referential import domain_violations
 from matric_spark.checks.sequence import (
     DEFAULT_ROLE_GRAMMAR,
     conversation_shape,
     out_of_order_turns,
 )
 from matric_spark.checks.uniqueness import duplicate_keys
-from matric_spark.checks.suite import SuiteConfig, run_verdicts
+from matric_spark.checks.suite import SuiteConfig, row_local_flags, run_verdicts
 from matric_spark.schema import DEFAULT_ROLE_DOMAIN, DEFAULT_TOOL_DOMAIN
 from matric_spark.sources.transcripts_view import TRANSCRIPT_VIEW_SQL, transcript_df
 
@@ -115,14 +114,14 @@ def q_uniqueness_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_ref_role_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = transcript_df(spark, sf_dir)
-    return domain_violations(t, "role", DEFAULT_ROLE_DOMAIN, nulls_ok=False).select(
+    return t.filter(row_local_flags()["ref_role"]).select(
         "conv_id", "turn_idx", "role", "part_month"
     )
 
 
 def q_ref_tool_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = transcript_df(spark, sf_dir)
-    return domain_violations(t, "tool", DEFAULT_TOOL_DOMAIN, nulls_ok=True).select(
+    return t.filter(row_local_flags()["ref_tool"]).select(
         "conv_id", "turn_idx", "tool", "part_month"
     )
 
@@ -1017,8 +1016,8 @@ def q_text_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_fk_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Foreign-key integrity across the star schema: per-relation count
-    of child rows whose key has no parent (broadcast-anti-join shape of
-    checks/referential.py, generalized to table-valued domains)."""
+    of child rows whose key has no parent (a broadcast anti-join per
+    relation: the domain is a table, not an IN-list)."""
     from matric_spark.sources.testdata import load_tables
 
     t = load_tables(

@@ -12,8 +12,8 @@ Semantics lineage (reference, cited per function):
 - uniqueness     ← matric's pair-dedup discipline (R/sim_calculate.R:293-299,
                    396-399), made a first-class hash-first key count
 - referential    ← sim_validate id-domain checks
-                   (R/sim_construct-validate.R:69-78) + predicate-by-example
-                   semi/anti joins (R/sim_filter.R:49-103)
+                   (R/sim_construct-validate.R:69-78): IN-list domain
+                   flags in suite.row_local_flags, no join
 - drift (KS/PSI) ← scaled-vs-background z-metrics and relrank ECDF machinery
                    (R/sim_metrics.R:391-428)
 - sequence       ← graft-specific per-row invariant (stable (conv_id,
@@ -22,6 +22,5 @@ Semantics lineage (reference, cited per function):
 
 from matric_spark.checks.column_stats import column_stats  # noqa: F401
 from matric_spark.checks.uniqueness import duplicate_keys, uniqueness_violations  # noqa: F401
-from matric_spark.checks.referential import domain_violations  # noqa: F401
 from matric_spark.checks.sequence import conversation_shape, out_of_order_turns  # noqa: F401
 from matric_spark.checks.drift import drift_by_partition  # noqa: F401

@@ -41,7 +41,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from matric_spark.checks.drift import counts_sketch, drift_by_partition, opaque_eq
-from matric_spark.checks.referential import domain_violations
 from matric_spark.checks.sequence import out_of_order_turns, preceding_max_ts_window
 from matric_spark.checks.uniqueness import uniqueness_violations
 from matric_spark.schema import DEFAULT_ROLE_DOMAIN, DEFAULT_TOOL_DOMAIN, TRANSCRIPT_KEY
@@ -276,13 +275,14 @@ def _extended_rows(
 
 
 def run_violations(df: DataFrame, cfg: SuiteConfig | None = None) -> dict[str, DataFrame]:
-    """Materialized violation rows per check (matric's anti-join rows,
-    R/sim_construct-validate.R:69-78)."""
+    """Materialized violation rows per row check (matric's anti-join
+    rows, R/sim_construct-validate.R:69-78), one set per ROW_CHECKS
+    entry. The four row-local sets are scan filters on the very flags
+    the verdicts count (`row_local_flags`), so each set has exactly as
+    many rows as its verdicts sum to, NULLs included."""
     cfg = cfg or SuiteConfig()
     return {
+        **{c: df.filter(flag) for c, flag in row_local_flags(cfg).items()},
         "uniqueness": uniqueness_violations(df, cfg.key),
-        "ref_role": domain_violations(df, "role", cfg.role_domain, nulls_ok=False),
-        "ref_tool": domain_violations(df, "tool", cfg.tool_domain, nulls_ok=True),
-        "null_text": df.filter(F.col("text").isNull()),
         "seq_order": out_of_order_turns(df),
     }

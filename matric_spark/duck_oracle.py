@@ -49,7 +49,8 @@ def _shingles(toks: str, n: int = 3) -> str:
 
 
 def _token_h_sql(toks: str) -> str:
-    """Per-token 31-bit hash list mirroring functions/hashing.token_hashes."""
+    """Per-token 31-bit hash list mirroring functions/hashing.token_hashes_lo
+    over token_md5s: md5 % HASH_PRIME."""
     return f"list_transform({toks}, t -> {hexbig('t')} % {HASH_PRIME})"
 
 
@@ -266,24 +267,16 @@ jac AS (
 def ngram_jaccard_sql(
     threshold: float = 0.1,
     n: int = 3,
-    max_df_frac: float | None = 0.05,
+    max_df_frac: float = 0.05,
     min_df_floor: int = 100,
     src: str = "documents",
     extra_ctes: str = "",
 ) -> str:
-    """`src` retargets the shingle source to any (doc_id, text)-shaped
-    CTE supplied via `extra_ctes` (e.g. conversation tapes)."""
-    if max_df_frac is None:
-        return f"""
-WITH {extra_ctes}{_shingle_sets_sql(n, src)},
-cand AS (
-  SELECT DISTINCT a.doc_id id1, b.doc_id id2
-  FROM sets a JOIN sets b ON a.h = b.h AND a.doc_id < b.doc_id),
-{_JACCARD_VERIFY}
-SELECT id1, id2, (round(jaccard, 6) + 0) AS jaccard FROM jac WHERE jaccard >= {threshold}"""
-    # stop-shingle cut variant mirroring ngram_jaccard_pairs' default:
-    # shared counts from the CUT sets (hot shingles leave the
-    # intersection), set sizes from the FULL sets
+    """Mirrors ngram_jaccard_pairs' stop-shingle cut: shared counts from
+    the CUT sets (hot shingles leave the intersection), set sizes from
+    the FULL sets. `src` retargets the shingle source to any
+    (doc_id, text)-shaped CTE supplied via `extra_ctes` (e.g.
+    conversation tapes)."""
     return f"""
 WITH {extra_ctes}{_shingle_sets_sql(n, src)},
 hot AS (SELECT h FROM sets GROUP BY h
@@ -301,15 +294,11 @@ jac AS (
 SELECT id1, id2, (round(jaccard, 6) + 0) AS jaccard FROM jac WHERE jaccard >= {threshold}"""
 
 
-def minhash_lsh_sql(
-    threshold: float = 0.1,
-    num_hashes: int = 32,
-    bands: int = 8,
-    n: int = 3,
-    seed: int = 42,
-    src: str = "documents",
-    extra_ctes: str = "",
-) -> str:
+def _minhash_bands_sql(num_hashes: int, bands: int, seed: int) -> str:
+    """`sig`/`banded` CTEs over `sets`: the (doc_id, band_hash) relation
+    of operators/dedup.banded_minhash_arrays — per permutation the min
+    of (a*h + b) % P over the doc's shingle hashes, per band the Horner
+    combine led by the band index."""
     params = minhash_params(num_hashes, seed=seed)
     rows = num_hashes // bands
     mins = ",\n         ".join(
@@ -322,14 +311,26 @@ def minhash_lsh_sql(
         )
         for b in range(bands)
     )
-    return f"""
-WITH {extra_ctes}{_shingle_sets_sql(n, src)},
-sig AS (SELECT doc_id,
+    return f"""sig AS (SELECT doc_id,
          {mins}
         FROM sets GROUP BY doc_id),
 banded AS (
   SELECT doc_id, unnest([{band_cols}]) AS band_hash
-  FROM sig),
+  FROM sig)"""
+
+
+def minhash_lsh_sql(
+    threshold: float = 0.1,
+    num_hashes: int = 32,
+    bands: int = 8,
+    n: int = 3,
+    seed: int = 42,
+    src: str = "documents",
+    extra_ctes: str = "",
+) -> str:
+    return f"""
+WITH {extra_ctes}{_shingle_sets_sql(n, src)},
+{_minhash_bands_sql(num_hashes, bands, seed)},
 cand AS (
   SELECT DISTINCT x.doc_id id1, y.doc_id id2
   FROM banded x JOIN banded y
@@ -352,26 +353,9 @@ def minhash_lsh_cross_sql(
     predicate on doc_id) vs the rest. Mirrors
     operators/dedup.minhash_lsh_pairs_against — same signatures, same
     band hashes, candidates only across the split."""
-    params = minhash_params(num_hashes, seed=seed)
-    rows = num_hashes // bands
-    mins = ",\n         ".join(
-        f"min(({a} * h + {b}) % {HASH_PRIME}) AS mh_{i}"
-        for i, (a, b) in enumerate(params)
-    )
-    band_cols = ", ".join(
-        _horner_sql(
-            [str(b)] + [f"mh_{b * rows + r}" for r in range(rows)]
-        )
-        for b in range(bands)
-    )
     return f"""
 WITH {_shingle_sets_sql(n, src)},
-sig AS (SELECT doc_id,
-         {mins}
-        FROM sets GROUP BY doc_id),
-banded AS (
-  SELECT doc_id, unnest([{band_cols}]) AS band_hash
-  FROM sig),
+{_minhash_bands_sql(num_hashes, bands, seed)},
 cand AS (
   SELECT DISTINCT x.doc_id new_id, y.doc_id ref_id
   FROM banded x JOIN banded y
@@ -910,7 +894,7 @@ FROM cc JOIN sz USING (cluster_id)"""
 def dedup_clusters_sql(
     threshold: float = 0.1,
     n: int = 3,
-    max_df_frac: float | None = 0.05,
+    max_df_frac: float = 0.05,
     min_df_floor: int = 100,
 ) -> str:
     return _cc_over_pairs_sql(

@@ -5,8 +5,8 @@ bit-for-bit: Spark `conv(substr(md5(x),1,15),16,10)::bigint` equals DuckDB
 `CAST('0x'||substr(md5(x),1,15) AS BIGINT)` (15 hex digits < 2^60, so no
 sign issues in either engine). Hot dedup paths md5 each TOKEN once and
 derive shingle/window/band hashes from the token hashes by pure int64
-Horner arithmetic (`shingle_hashes_of` / `horner_hash`) — ~2x cheaper
-than md5-per-shingle at sf0.1 and equally mirrorable
+Horner arithmetic (`shingle_hashes_of`) — ~2x cheaper than
+md5-per-shingle at sf0.1 and equally mirrorable
 (duck_oracle._shingle_hashes_sql/_horner_sql).
 
 Reference lineage: matric fingerprints nothing (its ids are positional,
@@ -69,16 +69,6 @@ def minhash_params(num_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
 SHINGLE_K = 1000003
 
 
-def token_hashes(toks: Column) -> Column:
-    """Array of per-token 31-bit hashes: md5_long(token) % HASH_PRIME.
-
-    Stage the RESULT as its own projected column before feeding it to
-    `shingle_hashes_of` (same rule as `shingles_of`'s token staging) so
-    the per-token md5 runs once per row, not once per shingle reference.
-    """
-    return F.transform(toks, lambda t: md5_long(t) % HASH_PRIME)
-
-
 #: 2^31 — positional weight combining two independent 31-bit Horner
 #: chains into one ~60-bit value: lo*WIDE_SHIFT + hi < (P-1)*2^31 + P
 #: ≈ 4.62e18 < int64 max on both engines.
@@ -87,14 +77,17 @@ WIDE_SHIFT = 2147483648
 
 def token_md5s(toks: Column) -> Column:
     """Array of raw 60-bit per-token md5 hashes — the shared stage for
-    deriving BOTH wide-hash component arrays (`token_hashes_lo`/`_hi`)
-    with one md5 per token. Stage the result as a projected column."""
+    deriving BOTH token-hash component arrays (`token_hashes_lo`/`_hi`)
+    with one md5 per token. Stage the result as a projected column, and
+    stage each component array too before feeding it to
+    `shingle_hashes_of` (same rule as `shingles_of`'s token staging), so
+    the per-token md5 runs once per row, not once per shingle reference."""
     return F.transform(toks, md5_long)
 
 
 def token_hashes_lo(md: Column) -> Column:
-    """Low 31-bit token-hash components from a staged `token_md5s` array
-    (== `token_hashes` values: md5 % HASH_PRIME)."""
+    """Low 31-bit token-hash components from a staged `token_md5s` array:
+    md5 % HASH_PRIME, the token hashes every shingle hash is built from."""
     return F.transform(md, lambda x: x % HASH_PRIME)
 
 
@@ -117,7 +110,7 @@ def wide_combine(lo_hashes: Column, hi_hashes: Column) -> Column:
     )
 
 
-def horner_hash(cols: list[Column]) -> Column:
+def _horner(cols: list[Column]) -> Column:
     """Combine 31-bit hash columns into one value mod HASH_PRIME via the
     Horner polynomial sum(cols[j] * K^(n-1-j)); pure int64 arithmetic,
     mirrored bit-for-bit by duck_oracle._horner_sql."""
@@ -127,12 +120,9 @@ def horner_hash(cols: list[Column]) -> Column:
     return acc
 
 
-_horner = horner_hash
-
-
 def shingle_hashes_of(th: Column, n: int = 3) -> Column:
     """Positional array of n-token shingle hashes from a PRE-STAGED
-    token-hash array (`token_hashes`): element i is the Horner polynomial
+    token-hash array (`token_hashes_lo`/`_hi`): element i is the Horner polynomial
     sum(th[i+j] * K^(n-1-j)) mod HASH_PRIME over the n tokens starting at
     i — one hash per shingle position, positions matching `shingles_of`,
     including its whole-text fallback (a doc with k < n tokens yields ONE

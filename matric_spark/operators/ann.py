@@ -1,22 +1,28 @@
 """Similarity search over embedding columns (`array<float>`).
 
-Two tiers, per the standard scale playbook:
+Exact and blocked tiers, per the standard scale playbook:
 - **brute-force cosine** — exact, O(N·Q) (top-k) or O(N²) (near-dup):
   the correctness baseline and the oracle-checked path. All math is
   Column expressions (codegen; no Python).
-- **hyperplane LSH** — the 100 TB path: n_bands·band_bits deterministic
-  random hyperplanes (default 12×16 = 192) → per-band sign-bit values
-  (vectorized Arrow UDF, one numpy matmul per batch) → equi-join on
-  (band_idx, band_val) carrying IDS ONLY (vectors re-join for
-  verification) → exact cosine on the candidate set. Bucket cardinality
-  per band is 2^band_bits (65,536 at the default), so the expected
-  random-pair candidate count is n_bands·N²/2^(band_bits+1) ≈ N²/10,900
-  — the sub-quadratic-in-practice blocking the scale story needs, while
-  12 bands keep recall ≥ 0.9 at cosine 0.95 (per-band collide prob
-  (1−θ/π)^16 ≈ 0.18, 1−(1−0.18)^12 ≈ 0.91; higher cosine → higher
-  recall). Recall is differential-tested against brute force on planted
-  near-dups (tests/test_ops.py); misses are inherent to LSH so this
-  variant is excluded from the exact oracle gate.
+- **blocked near-dup** — the 100 TB path, one pipeline whatever the
+  blocks: unit rows (`_unit_rows`) → block keys → ONE ids-only
+  candidate equi-join (dedup.candidate_pairs, shared with MinHash) →
+  ONE verify that re-joins the unit vectors and keeps the exact cosine
+  (`_verified`). The block keys are either
+  - hyperplane LSH: n_bands·band_bits deterministic random hyperplanes
+    (default 12×16 = 192) → per-band sign-bit values (vectorized Arrow
+    UDF, one numpy matmul per batch), keyed on (band_idx, band_val).
+    Bucket cardinality per band is 2^band_bits (65,536 at the default),
+    so the expected random-pair candidate count is
+    n_bands·N²/2^(band_bits+1) ≈ N²/10,900, while 12 bands keep recall
+    ≥ 0.9 at cosine 0.95 (per-band collide prob (1−θ/π)^16 ≈ 0.18,
+    1−(1−0.18)^12 ≈ 0.91; higher cosine → higher recall); or
+  - IVF cells: spherical k-means centroids, multi-probe cell ids
+    (SemDeDup), self or cross-set.
+  Recall is differential-tested against brute force on planted
+  near-dups (tests/test_ops.py); precision is exact by construction and
+  soundness-gated, and the deterministic LSH pipeline is also
+  value-gated against its DuckDB replay.
 
 Reference lineage: matric's cosine kernel is row-normalize + tcrossprod
 (R/sim_calculate.R:126-128, R/sparse.R:186-190); its blocked sparse
@@ -30,6 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from matric_spark.functions.vector import dot
+from matric_spark.operators.dedup import candidate_pairs
 
 
 def _lcg_planes(n_planes: int, dim: int, seed: int = 42) -> list[list[float]]:
@@ -74,6 +81,39 @@ def _normalized(
             ),
         )
         .drop("_nrm")
+    )
+
+
+def _unit_rows(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(vec_id, v) unit rows of the vectors that can score at all: a
+    NULL, zero, NaN or inf norm leaves v NULL in `_normalized`, and such
+    a row could never verify above any threshold — and the probe/assign
+    UDFs' np.stack would crash on its None."""
+    return _normalized(emb, id_col, vec_col, "vec_id", "v").filter(
+        F.col("v").isNotNull()
+    )
+
+
+def _verified(
+    cand: DataFrame,
+    x: DataFrame,
+    y: DataFrame | None,
+    names: tuple[str, str],
+    threshold: float,
+) -> DataFrame:
+    """The verify every blocked near-dup shares: re-join the normalized
+    (vec_id, v) rows of `x` and `y` (`y=None`: `x`) to the ids-only
+    candidate list from dedup.candidate_pairs, take the exact cosine
+    (one dot of unit rows) and keep cosine >= threshold. Blocking can
+    only drop pairs, never invent one or change a cosine, so precision
+    is exact and only recall is probabilistic."""
+    a, b = names
+    y = x if y is None else y
+    return (
+        cand.join(x.select(F.col("vec_id").alias(a), F.col("v").alias("v1")), a)
+        .join(y.select(F.col("vec_id").alias(b), F.col("v").alias("v2")), b)
+        .select(a, b, dot("v1", "v2").alias("cosine"))
+        .filter(F.col("cosine") >= threshold)
     )
 
 
@@ -174,46 +214,6 @@ def embedding_near_dup(
     )
 
 
-def lsh_candidate_pairs(
-    emb: DataFrame,
-    dim: int,
-    n_bands: int = 12,
-    band_bits: int = 16,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Candidate id pairs agreeing on ≥1 sign-bit band: DataFrame[id1, id2].
-
-    The exchange before the self-join carries ONLY (vec_id, band_idx,
-    band_val) — never the embedding (vector bytes would otherwise be
-    shuffled n_bands× before any pruning; tests/test_plans.py pins this).
-    Bucket skew on real (clustered) data is handled by AQE skew-join
-    (session.py); raising band_bits is the structural lever.
-    """
-    import numpy as np
-
-    from matric_spark.functions.udfs import make_hyperplane_bands_udf
-
-    planes = np.array(
-        _lcg_planes(n_bands * band_bits, dim, seed=seed), dtype=np.float64
-    )
-    bands_udf = make_hyperplane_bands_udf(planes, n_bands, band_bits)
-    banded = emb.select(
-        F.col(id_col).alias("vec_id"),
-        F.posexplode(bands_udf(F.col(vec_col))).alias("band_idx", "band_val"),
-    )
-    return (
-        banded.alias("x")
-        .join(banded.alias("y"), ["band_idx", "band_val"])
-        .filter(F.col("x.vec_id") < F.col("y.vec_id"))
-        .select(
-            F.col("x.vec_id").alias("id1"), F.col("y.vec_id").alias("id2")
-        )
-        .dropDuplicates(["id1", "id2"])
-    )
-
-
 def ivf_centroids(
     emb: DataFrame,
     n_centroids: int = 64,
@@ -231,9 +231,7 @@ def ivf_centroids(
     """
     import numpy as np
 
-    normed = _normalized(emb, id_col, vec_col, "vec_id", "v").filter(
-        F.col("v").isNotNull()
-    )
+    normed = _unit_rows(emb, id_col, vec_col)
     w_seed = F.xxhash64(F.col("vec_id").cast("string"))
     seeds = (
         normed.withColumn("_h", w_seed)
@@ -328,14 +326,9 @@ def ann_topk_ivf(
     assign = make_centroid_assign_udf(cent)
     probe = make_centroid_probe_udf(cent, nprobe)
 
-    # isNotNull guards: _normalized leaves v NULL for zero-norm or NULL
-    # embeddings — such rows can never score and must not reach the
-    # assign/probe UDFs (which map NULL→NULL but then join nothing)
-    e = (
-        _normalized(emb, id_col, vec_col, "vec_id", "v")
-        .filter(F.col("v").isNotNull())
-        .withColumn("cell", assign(F.col("v")))
-    )
+    # rows that cannot score never reach the assign/probe UDFs
+    # (`_unit_rows`)
+    e = _unit_rows(emb, id_col, vec_col).withColumn("cell", assign(F.col("v")))
     q = (
         _normalized(queries, id_col, vec_col, "qid", "qv")
         .filter(F.col("qv").isNotNull())
@@ -374,29 +367,27 @@ def embedding_near_dup_lsh(
     normalized vectors to the id-only candidate list and keeps exact
     cosine ≥ threshold, so precision is always exact; only recall is
     probabilistic.
+
+    Candidates are the ids-only equi-join on (band_idx, band_val)
+    (dedup.candidate_pairs): the exchange never carries the embedding,
+    which would otherwise be shuffled n_bands× before any pruning.
     """
-    # isNotNull guard: see ann_topk_ivf — NULL/zero-norm rows can never
-    # verify above any threshold, so they are dropped before the
-    # signature UDF rather than carried as NULL bands
-    normed = _normalized(emb, id_col, vec_col, "vec_id", "v").filter(
-        F.col("v").isNotNull()
+    import numpy as np
+
+    from matric_spark.functions.udfs import make_hyperplane_bands_udf
+
+    planes = np.array(
+        _lcg_planes(n_bands * band_bits, dim, seed=seed), dtype=np.float64
     )
-    cand = lsh_candidate_pairs(
-        normed,
-        dim,
-        n_bands=n_bands,
-        band_bits=band_bits,
-        seed=seed,
-        id_col="vec_id",
-        vec_col="v",
+    bands_udf = make_hyperplane_bands_udf(planes, n_bands, band_bits)
+    unit = _unit_rows(emb, id_col, vec_col)
+    banded = unit.select(
+        "vec_id",
+        F.posexplode(bands_udf(F.col("v"))).alias("band_idx", "band_val"),
     )
-    feats = normed.select("vec_id", "v")
-    return (
-        cand.join(feats.withColumnsRenamed({"vec_id": "id1", "v": "v1"}), "id1")
-        .join(feats.withColumnsRenamed({"vec_id": "id2", "v": "v2"}), "id2")
-        .select("id1", "id2", dot("v1", "v2").alias("cosine"))
-        .filter(F.col("cosine") >= threshold)
-    )
+    names = ("id1", "id2")
+    cand = candidate_pairs(banded, None, ["band_idx", "band_val"], names, "vec_id")
+    return _verified(cand, unit, None, names, threshold)
 
 
 def embedding_near_dup_ivf(
@@ -431,12 +422,6 @@ def embedding_near_dup_ivf(
     scanned, never collected. Skewed (dense) cells fall to AQE
     skew-join; raising n_centroids is the structural lever.
     """
-    # isNotNull guard: _normalized leaves v NULL for zero-norm or NULL
-    # embeddings, and the probe UDF's np.stack would crash on a None —
-    # same guard ivf_centroids applies before its assign UDF.
-    normed = _normalized(emb, id_col, vec_col, "vec_id", "v").filter(
-        F.col("v").isNotNull()
-    )
     # `centroids` shares one fit across related queries (see ann_topk_ivf)
     cent = (
         centroids
@@ -452,25 +437,11 @@ def embedding_near_dup_ivf(
     from matric_spark.functions.udfs import make_centroid_probe_udf
 
     probe = make_centroid_probe_udf(cent, nprobe)
-    cells = normed.select(
-        "vec_id", F.explode(probe(F.col("v"))).alias("cell")
-    )
-    cand = (
-        cells.alias("x")
-        .join(cells.alias("y"), "cell")
-        .filter(F.col("x.vec_id") < F.col("y.vec_id"))
-        .select(
-            F.col("x.vec_id").alias("id1"), F.col("y.vec_id").alias("id2")
-        )
-        .dropDuplicates(["id1", "id2"])
-    )
-    feats = normed.select("vec_id", "v")
-    return (
-        cand.join(feats.withColumnsRenamed({"vec_id": "id1", "v": "v1"}), "id1")
-        .join(feats.withColumnsRenamed({"vec_id": "id2", "v": "v2"}), "id2")
-        .select("id1", "id2", dot("v1", "v2").alias("cosine"))
-        .filter(F.col("cosine") >= threshold)
-    )
+    unit = _unit_rows(emb, id_col, vec_col)
+    cells = unit.select("vec_id", F.explode(probe(F.col("v"))).alias("cell"))
+    names = ("id1", "id2")
+    cand = candidate_pairs(cells, None, ["cell"], names, "vec_id")
+    return _verified(cand, unit, None, names, threshold)
 
 
 def embedding_near_dup_against(
@@ -539,28 +510,17 @@ def embedding_near_dup_against_ivf(
     )
     assign = make_centroid_assign_udf(cent)
     probe = make_centroid_probe_udf(cent, nprobe)
-    r = (
-        _normalized(ref_emb, id_col, vec_col, "ref_id", "rv")
-        .filter(F.col("rv").isNotNull())
-        .withColumn("cell", assign(F.col("rv")))
+    new = _unit_rows(new_emb, id_col, vec_col)
+    ref = _unit_rows(ref_emb, id_col, vec_col)
+    names = ("new_id", "ref_id")
+    cand = candidate_pairs(
+        new.select("vec_id", F.explode(probe(F.col("v"))).alias("cell")),
+        ref.select("vec_id", assign(F.col("v")).alias("cell")),
+        ["cell"],
+        names,
+        "vec_id",
     )
-    n = (
-        _normalized(new_emb, id_col, vec_col, "new_id", "nv")
-        .filter(F.col("nv").isNotNull())
-        .select("new_id", "nv", F.explode(probe(F.col("nv"))).alias("cell"))
-    )
-    cand = (
-        n.select("new_id", "cell")
-        .join(r.select("ref_id", "cell"), "cell")
-        .select("new_id", "ref_id")
-        .dropDuplicates(["new_id", "ref_id"])
-    )
-    return (
-        cand.join(n.select("new_id", "nv").dropDuplicates(["new_id"]), "new_id")
-        .join(r.select("ref_id", "rv"), "ref_id")
-        .select("new_id", "ref_id", dot("nv", "rv").alias("cosine"))
-        .filter(F.col("cosine") >= threshold)
-    )
+    return _verified(cand, new, ref, names, threshold)
 
 
 # ------------------------------------------------------- soundness gates

@@ -205,11 +205,11 @@ def ingest_gate(
     from pyspark import StorageLevel
 
     from matric_spark.operators.dedup import (
+        _cached,
         _staged_md,
         minhash_lsh_pairs_against,
+        shingle_hash_arrays,
         shingle_novelty,
-        shingle_sets,
-        shingle_sets_wide,
     )
 
     def r6(c: F.Column) -> F.Column:
@@ -221,29 +221,24 @@ def ingest_gate(
     )
     nd = new_docs.filter(F.col(text_col).isNotNull())
     rd = ref_docs.filter(F.col(text_col).isNotNull())
-    # ONE md5-per-token stage per side, shared by the near-dup
-    # signatures + exact-Jaccard verify (31-bit shingle_sets — the
-    # minhash permutation space) AND the novelty anti-join (wide
+    # ONE md5-per-token stage per side, shared by the near-dup band pass
+    # + exact-Jaccard verify (31-bit shingle arrays — the minhash
+    # permutation space) AND the novelty anti-join (wide
     # shingle_sets_wide — membership needs the ~60-bit envelope). The
-    # persisted stage holds token-hash arrays; both exploded relations
-    # are pure arithmetic over it, so neither re-scans the text.
+    # persisted stage holds token-hash arrays; both relations are pure
+    # arithmetic over it, so neither re-scans the text.
     staged_new = _staged_md(nd, id_col, text_col).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     staged_ref = _staged_md(rd, id_col, text_col).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    sets_new = shingle_sets(staged=staged_new, n=n).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    sets_ref = shingle_sets(staged=staged_ref, n=n).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
     tj = (
         minhash_lsh_pairs_against(
             nd, rd, threshold=jaccard_candidate,
             num_hashes=num_hashes, bands=bands, n=n,
-            sets_new=sets_new, sets_ref=sets_ref,
+            sets_new=_cached(shingle_hash_arrays(staged=staged_new, n=n)),
+            sets_ref=_cached(shingle_hash_arrays(staged=staged_ref, n=n)),
         )
         .groupBy(F.col("new_id").alias("doc_id"))
         .agg(r6(F.max("jaccard")).alias("max_jaccard"))

@@ -5,27 +5,27 @@ Scale design (the part that matters at 100 TB):
 - exact: one salted two-phase hash aggregate over a 60-bit content hash —
   never shuffles the text itself, only (hash, count). Identical shape to
   the uniqueness check (checks/uniqueness.py).
-- n-gram Jaccard: candidate generation is an equi-join on shingle hash
-  (shuffle keyed by shingle), NOT an O(N²) cross join; the count of
-  candidate pairs is sum_sh C(df_sh, 2), controlled by dropping ultra-hot
-  shingles (`max_df`) — the classic stop-shingle cut that also kills skew.
-- MinHash+LSH: per-doc signatures + band hashes from ONE vectorized
-  Arrow pass over the staged shingle-hash arrays (banded_minhash_arrays;
-  bounded per-row memory via shingle-axis chunking — the sole Python
-  stage on this hot path, chosen over 125 JVM array_min/transform
-  columns whose CodegenFallback lambdas and plan-compile latency were
-  measured slower); candidates come from equi-joins on band_hash
-  (band_idx folded into the Horner band hash), so the shuffle key is
-  the band bucket — tiny and uniform. Verification joins only the
-  candidate set back to shingle sets.
-- hashing: one md5 per TOKEN, then pure int64 Horner combines for
-  shingle/window/band hashes (functions/hashing.shingle_hashes_of) —
-  mirrored bit-for-bit by the DuckDB oracle; no per-shingle string
-  allocation anywhere in the dedup scans.
+- n-gram Jaccard: candidate pairs come from per-shingle doc lists (one
+  groupBy on shingle hash), NOT an O(N²) cross join; the count of
+  candidate pairs is sum_sh C(df_sh, 2), bounded by dropping ultra-hot
+  shingles (`max_df_frac`) — the classic stop-shingle cut that also
+  kills skew.
+- one token staging: every shingle/window builder reads `_staged_md`
+  (normalize + split + one md5 per TOKEN, split into its low-31 and
+  high-29 bit halves); shingle/window/band hashes are pure int64 Horner combines
+  over it (functions/hashing.shingle_hashes_of) — mirrored bit-for-bit
+  by the DuckDB oracle; no per-shingle string allocation anywhere in
+  the dedup scans.
+- MinHash+LSH, self and cross-set alike: per-doc signatures + band
+  hashes from ONE vectorized Arrow pass over the cached shingle-hash
+  arrays (banded_minhash_arrays; bounded per-row memory via
+  shingle-axis chunking), candidates from one ids-only equi-join on
+  band_hash (`candidate_pairs`, shared with operators/ann.py), and one
+  array_intersect verify on the candidate set only (_minhash_jaccard).
 - SimHash: per-bit majority vote is a map-side-combinable sum aggregate;
   pair generation joins on 15-bit chunks (Hamming-distance pigeonhole).
-- embedding near-dup: exact variant blocks by a coarse quantization of
-  the first principal dims; LSH variant in operators/ann.py.
+- embedding near-dup: operators/ann.py (exact, hyperplane-LSH and IVF;
+  the blocked variants reuse `candidate_pairs`).
 
 Reference lineage: matric's pair machinery generates within-partition
 pairs by per-group self-joins instead of N² (R/sim_calculate.R:162-301);
@@ -150,77 +150,88 @@ def cross_group_duplicates(
 # ------------------------------------------------------ shingle sets
 
 
-def _staged_toks(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(doc_id, _toks) staging shared by the shingle builders: the
-    normalize+split runs once per row, not once per shingle."""
-    return docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.split(normalized_text(text_col), " ").alias("_toks"),
-    )
-
-
-def _staged_th(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(doc_id, _th) staging for the numeric shingle-hash builders: the
-    per-token md5 runs once per row (own projection), so downstream
-    shingle hashes are pure arithmetic over the staged array."""
-    from matric_spark.functions.hashing import token_hashes
-
-    staged = _staged_toks(docs, id_col, text_col)
-    return staged.select("doc_id", token_hashes(F.col("_toks")).alias("_th"))
-
-
 def _staged_md(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(doc_id, _th, _thh) staging for builders that need BOTH Horner
-    chains (the ~60-bit wide window/membership hashes): one md5 per
-    token, split into the independent low-31/high-29 bit halves. A
-    consumer that reads only `_th` gets `_thh`'s transform pruned by
-    Catalyst, so this can serve as the shared stage for a lo-only and a
-    wide relation derived from one persisted frame (ingest_gate)."""
+    """(doc_id, _th, _thh) token-hash staging, the one stage every
+    shingle builder reads: the normalize+split and one md5 per token
+    run once per row (own projections), split into the independent
+    low-31/high-29 bit halves, so shingle/window hashes downstream are
+    pure arithmetic over the staged arrays. A consumer that reads only
+    `_th` (the 31-bit `shingle_hash_arrays`) gets `_thh`'s transform
+    pruned by Catalyst (one md5, no shiftright: plan-pinned), so one
+    persisted frame can serve a lo-only and a wide relation
+    (ingest_gate)."""
     from matric_spark.functions.hashing import (
         token_hashes_hi,
         token_hashes_lo,
         token_md5s,
     )
 
-    staged = _staged_toks(docs, id_col, text_col)
-    return staged.select(
-        "doc_id", token_md5s(F.col("_toks")).alias("_md")
-    ).select(
-        "doc_id",
-        token_hashes_lo(F.col("_md")).alias("_th"),
-        token_hashes_hi(F.col("_md")).alias("_thh"),
+    return (
+        docs.select(
+            F.col(id_col).alias("doc_id"),
+            F.split(normalized_text(text_col), " ").alias("_toks"),
+        )
+        .select("doc_id", token_md5s(F.col("_toks")).alias("_md"))
+        .select(
+            "doc_id",
+            token_hashes_lo(F.col("_md")).alias("_th"),
+            token_hashes_hi(F.col("_md")).alias("_thh"),
+        )
     )
 
 
-def shingle_sets(
+def shingle_hash_arrays(
     docs: DataFrame | None = None,
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 3,
     staged: DataFrame | None = None,
 ) -> DataFrame:
-    """Exploded distinct (id, shingle-hash) pairs; hash < HASH_PRIME.
+    """Per-doc ARRAY of distinct 31-bit shingle hashes ->
+    DataFrame[doc_id, harr]; every hash < HASH_PRIME.
 
-    Token hashes are STAGED as their own projection (one md5 per token,
-    once per row) and shingle hashes are the numeric Horner combine —
-    see functions/hashing.shingle_hashes_of for the construction and its
-    DuckDB mirror. The 31-bit space is the DESIGN here: these hashes
-    feed the minhash permutation family ((a*h+b) mod P needs h < 2^31
-    to stay inside int64) and per-pair-verified jaccard, where
-    collisions only perturb one pair's sets. Membership-by-equality
-    consumers must use `shingle_sets_wide` instead.
+    Shingle hashes are the numeric Horner combine over the staged token
+    hashes — see functions/hashing.shingle_hashes_of for the
+    construction and its DuckDB mirror. The 31-bit space is the DESIGN
+    here: these hashes feed the minhash permutation family ((a*h+b) mod
+    P needs h < 2^31 to stay inside int64) and the per-pair Jaccard
+    verify, where collisions only perturb one pair's sets.
+    Membership-by-equality consumers must use `shingle_sets_wide`.
 
-    `staged` (a `_staged_md`/`_staged_th` frame) lets a caller share
-    one md5-per-token pass between this and the wide relation."""
+    Row-per-doc so a persist caches ~|docs| compact array rows instead of
+    ~|shingles| exploded rows — at sf0.1 conversation tapes that is 147k
+    arrays vs 40M rows, and re-reading the cache for the band pass and
+    the Jaccard verify costs ~4x less. Narrow (no shuffle): one
+    projection over the scan. A NULL text gives a NULL harr.
+
+    `staged` (a `_staged_md` frame) lets a caller share one
+    md5-per-token pass between this and the wide relation."""
     from matric_spark.functions.hashing import shingle_hashes_of
 
     if staged is None:
-        staged = _staged_th(docs, id_col, text_col)
+        staged = _staged_md(docs, id_col, text_col)
     return staged.select(
         "doc_id",
-        F.explode(
-            F.array_distinct(shingle_hashes_of(F.col("_th"), n))
-        ).alias("h"),
+        F.array_distinct(shingle_hashes_of(F.col("_th"), n)).alias("harr"),
+    )
+
+
+def shingle_sets(
+    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3
+) -> DataFrame:
+    """Exploded distinct (id, shingle-hash) pairs -> DataFrame[doc_id, h]:
+    the elements of `shingle_hash_arrays`, one row each.
+
+    The explode takes the array EXPRESSION, not a projected `harr`
+    column: Catalyst infers `size(x) > 0 AND isnotnull(x)` for an
+    explode of a column and pushes it below the projections, re-inlining
+    the whole shingle build (md5s included) once per token reference in
+    the filter — measured 30x slower on dedup_ngram_jaccard at sf0.01."""
+    from matric_spark.functions.hashing import shingle_hashes_of
+
+    return _staged_md(docs, id_col, text_col).select(
+        "doc_id",
+        F.explode(F.array_distinct(shingle_hashes_of(F.col("_th"), n))).alias("h"),
     )
 
 
@@ -259,106 +270,81 @@ def shingle_sets_wide(
     )
 
 
-def shingle_hash_arrays(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-) -> DataFrame:
-    """Per-doc ARRAY of distinct shingle hashes -> DataFrame[doc_id, harr].
+def _cached(df: DataFrame) -> DataFrame:
+    """Persist and fill EAGERLY. A relation read by several branches of
+    one action must be materialized before that action: AQE submits the
+    branches' exchange jobs concurrently, and with a lazy persist each
+    one races to compute the relation (and its whole tape/shingle
+    upstream) before the cache lands — measured as 4 duplicate ~6 s
+    stages on the 147k-tape near-dup at sf0.1. Long-lived sessions
+    release the cache after materializing (spark.catalog.clearCache();
+    bench.py and tools/check_oracle.py do this between queries)."""
+    from pyspark import StorageLevel
 
-    Identical hash values to `shingle_sets` (explode(harr) == the exploded
-    relation), but kept row-per-doc so a persist caches ~|docs| compact
-    array rows instead of ~|shingles| exploded rows — at sf0.1 conversation
-    tapes that is 147k arrays vs 40M rows, and re-reading the cache for the
-    signature build and the Jaccard verify costs ~4x less. Narrow (no
-    shuffle): the whole relation is one projection over the scan."""
-    from matric_spark.functions.hashing import shingle_hashes_of
-
-    staged = _staged_th(docs, id_col, text_col)
-    return staged.select(
-        "doc_id",
-        F.array_distinct(shingle_hashes_of(F.col("_th"), n)).alias("harr"),
-    )
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    df.count()
+    return df
 
 
 def ngram_jaccard_pairs(
     docs: DataFrame,
     threshold: float = 0.1,
     n: int = 3,
-    max_df: int | None = None,
-    max_df_frac: float | None = 0.05,
+    max_df_frac: float = 0.05,
     min_df_floor: int = 100,
 ) -> DataFrame:
     """All pairs with shingle-set Jaccard >= threshold.
 
-    Candidates = docs sharing ≥1 shingle (equi-join on shingle hash).
-    A shingle present in k docs yields C(k,2) candidate rows, so ONE
-    boilerplate shingle in a crawl corpus is a quadratic blowup — the
-    stop-shingle cut is therefore ON BY DEFAULT: shingles appearing in
-    more than max(`max_df_frac` · n_docs, `min_df_floor`) docs are
-    dropped before the join (the relative form survives a scale-up; the
-    floor keeps small corpora exact — C(100,2) candidate rows per
-    shingle is harmless, so only genuinely hot shingles are cut).
-    `max_df` (absolute) overrides both. Dropped shingles also leave the
+    Candidates = docs sharing ≥1 shingle. A shingle present in k docs
+    yields C(k,2) candidate rows, so ONE boilerplate shingle in a crawl
+    corpus is a quadratic blowup — the stop-shingle cut is therefore
+    always on: shingles appearing in more than max(`max_df_frac` ·
+    n_docs, `min_df_floor`) docs are dropped before pairing (the
+    relative form survives a scale-up; the floor keeps small corpora
+    exact — C(100,2) candidate rows per shingle is harmless, so only
+    genuinely hot shingles are cut). Dropped shingles also leave the
     intersection counts, so jaccard is a (slightly low) approximation
-    for affected pairs; pass max_df=None, max_df_frac=None for the
-    exact unbounded join. tests/test_skew.py stress-tests the
+    for affected pairs. tests/test_skew.py stress-tests the
     50%-boilerplate case.
+
+    Candidate pairs come straight from per-shingle doc LISTS: one
+    groupBy(h) shuffle instead of a two-sided self-join + separate df
+    count (3 shuffles of the shingle relation → 1). The collect_list is
+    bounded by the cutoff, the pair fan-out (C(k,2) structs) is
+    generated JVM-side from the sorted list, and df==1 shingles — the
+    vast majority of a real corpus — never leave the aggregate.
+    Dropping them is EXACT (a shingle in one doc shares nothing); only
+    the df>cutoff cut approximates.
     """
-    # `sets` feeds two consumers (candidate build + sizes); persist so
-    # the shingle explode + md5 runs once, not per branch. Long-lived
-    # sessions: release after materializing (spark.catalog.clearCache();
-    # bench.py and tools/check_oracle.py do this between queries).
     from pyspark import StorageLevel
 
+    # `sets` feeds two consumers (candidate build + sizes); persist so
+    # the shingle explode + md5 runs once, not per branch
     sets = shingle_sets(docs, n=n).persist(StorageLevel.MEMORY_AND_DISK)
-    bounded = max_df is not None or max_df_frac is not None
-    if bounded:
-        # Candidate pairs straight from per-shingle doc LISTS: one
-        # groupBy(h) shuffle replaces the two-sided self-join + separate
-        # df count (3 shuffles of the shingle relation → 1). The
-        # collect_list is bounded by the cutoff, the pair fan-out
-        # (C(k,2) structs) is generated JVM-side from the sorted list,
-        # and df==1 shingles — the vast majority of a real corpus —
-        # never leave the aggregate. Dropping them is EXACT (a shingle
-        # in one doc shares nothing); only the df>cutoff cut
-        # approximates.
-        grouped = sets.groupBy("h").agg(
-            F.array_sort(F.collect_list("doc_id")).alias("ds")
-        )
-        if max_df is not None:
-            cutoff = F.lit(float(max_df))
-        else:
-            n_docs = docs.agg(F.count(F.lit(1)).alias("_n"))
-            cutoff = F.greatest(
-                F.lit(max_df_frac) * F.col("_n"),
-                F.lit(float(min_df_floor)),
-            )
-            grouped = grouped.crossJoin(F.broadcast(n_docs))
-        grouped = grouped.filter(
-            (F.size("ds") >= 2) & (F.size("ds") <= cutoff)
-        )
-        # two chained explodes, NOT one flattened O(k²) struct array: a
-        # shingle at the df cutoff (k=737 on templated transcript tapes)
-        # would otherwise materialize C(k,2) ≈ 271k structs as a single
-        # row value before exploding — GC-heavy and memory-spiky. Each
-        # chained step only ever holds an O(k) slice per row, streams
-        # through codegen, and yields the identical (ds[i], ds[j]) i<j
-        # pair set. (Measured 29 s → 3 s on the conv-tape workload.)
-        e1 = grouped.select("ds", F.posexplode("ds").alias("i", "id1"))
-        cand = e1.select(
-            "id1",
-            F.explode(
-                F.slice(F.col("ds"), F.col("i") + 2, F.size("ds"))
-            ).alias("id2"),
-        )
-    else:
-        # exact unbounded mode: self-equi-join (collect_list would be
-        # unbounded on a hot shingle)
-        a = sets.select(F.col("doc_id").alias("id1"), "h")
-        b = sets.select(F.col("doc_id").alias("id2"), "h")
-        cand = a.join(b, "h").filter(F.col("id1") < F.col("id2"))
+    n_docs = docs.agg(F.count(F.lit(1)).alias("_n"))
+    cutoff = F.greatest(
+        F.lit(max_df_frac) * F.col("_n"), F.lit(float(min_df_floor))
+    )
+    grouped = (
+        sets.groupBy("h")
+        .agg(F.array_sort(F.collect_list("doc_id")).alias("ds"))
+        .crossJoin(F.broadcast(n_docs))
+        .filter((F.size("ds") >= 2) & (F.size("ds") <= cutoff))
+    )
+    # two chained explodes, NOT one flattened O(k²) struct array: a
+    # shingle at the df cutoff (k=737 on templated transcript tapes)
+    # would otherwise materialize C(k,2) ≈ 271k structs as a single
+    # row value before exploding — GC-heavy and memory-spiky. Each
+    # chained step only ever holds an O(k) slice per row, streams
+    # through codegen, and yields the identical (ds[i], ds[j]) i<j
+    # pair set. (Measured 29 s → 3 s on the conv-tape workload.)
+    e1 = grouped.select("ds", F.posexplode("ds").alias("i", "id1"))
+    cand = e1.select(
+        "id1",
+        F.explode(F.slice(F.col("ds"), F.col("i") + 2, F.size("ds"))).alias(
+            "id2"
+        ),
+    )
     # shared-shingle counts fall straight out of the candidate rows — one
     # aggregation, no distinct, no re-join of the shingle sets (which
     # would cost |candidates| × |shingles per doc| intermediate rows)
@@ -495,15 +481,7 @@ def duplicated_spans(
     corpus-prep engineering following its distinct-before-fanout
     discipline (R/sim_calculate.R:293-299).
     """
-    from pyspark import StorageLevel
-
-    from matric_spark.functions.hashing import (
-        shingle_hashes_of,
-        token_hashes_hi,
-        token_hashes_lo,
-        token_md5s,
-        wide_combine,
-    )
+    from matric_spark.functions.hashing import shingle_hashes_of, wide_combine
 
     # window hashes must be ~60-bit: duplication is decided by hash
     # EQUALITY alone (no verify step), and a single 31-bit Horner chain
@@ -512,45 +490,29 @@ def duplicated_spans(
     # chains over independent md5 bit-halves (one md5 per token, staged)
     # combine to lo*2^31 + hi, restoring the md5_long(window) envelope
     # this operator shipped with before the token-Horner rewrite.
-    staged = (
-        docs.filter(F.col(text_col).isNotNull())
-        .select(
-            F.col(id_col).alias("doc_id"),
-            F.split(normalized_text(text_col), " ").alias("_toks"),
-        )
-        .select("doc_id", token_md5s(F.col("_toks")).alias("_md"))
-        .select(
-            "doc_id",
-            token_hashes_lo(F.col("_md")).alias("_th"),
-            token_hashes_hi(F.col("_md")).alias("_thh"),
-        )
-    )
+    staged = _staged_md(docs.filter(F.col(text_col).isNotNull()), id_col, text_col)
+    # `wins` feeds three consumers (dup-hash counts, position flagging,
+    # doc sizes), so it is cached eagerly (`_cached`) and the upstream —
+    # potentially an expensive derived relation like conversation tapes
+    # — is built ONCE. Every doc has >= 1 window (whole-text fallback),
+    # so per-doc sizes come from wins itself and the upstream is never
+    # re-scanned. (The eager fill buys back 2x duplicate CPU; interleaved
+    # A/B at sf0.1 was wall-neutral: 22.0/20.6 s eager vs 21.4/19.7 s lazy.)
     base = staged.select(
         "doc_id", F.size("_th").cast("long").alias("n_tokens"), "_th", "_thh"
     )
-    # `wins` feeds three consumers (dup-hash counts, position flagging,
-    # doc sizes); persist so the upstream — potentially an expensive
-    # derived relation like conversation tapes — is built ONCE. Every
-    # doc has >= 1 window (whole-text fallback), so per-doc sizes come
-    # from wins itself and the upstream is never re-scanned.
-    wins = base.select(
-        "doc_id",
-        "n_tokens",
-        F.posexplode(
-            wide_combine(
-                shingle_hashes_of(F.col("_th"), window),
-                shingle_hashes_of(F.col("_thh"), window),
-            )
-        ).alias("pos", "h"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    # eager fill: the three consumer branches below land in ONE action,
-    # and AQE submits their exchange jobs concurrently — with a lazy
-    # persist each branch races to compute `wins` (and its whole tape/
-    # shingle upstream) before the cache lands. Same fix as
-    # minhash_lsh_pairs; one serialized pass buys back 2x duplicate CPU
-    # (interleaved A/B at sf0.1: wall-neutral, 22.0/20.6 s eager vs
-    # 21.4/19.7 s lazy under 0.65-0.78 ceilings).
-    wins.count()
+    wins = _cached(
+        base.select(
+            "doc_id",
+            "n_tokens",
+            F.posexplode(
+                wide_combine(
+                    shingle_hashes_of(F.col("_th"), window),
+                    shingle_hashes_of(F.col("_thh"), window),
+                )
+            ).alias("pos", "h"),
+        )
+    )
     sizes = wins.groupBy("doc_id").agg(F.max("n_tokens").alias("n_tokens"))
     dup_h = (
         wins.groupBy("h")
@@ -617,40 +579,18 @@ def duplicated_spans(
 # ----------------------------------------------------------- MinHash
 
 
-def minhash_signatures(
-    docs: DataFrame,
-    num_hashes: int = 32,
-    n: int = 3,
-    seed: int = 42,
-    sets: DataFrame | None = None,
-) -> DataFrame:
-    """DataFrame[doc_id, mh_0..mh_{k-1}]: classic Broder signatures.
-
-    One aggregation computes every permutation's min — the shingle explode
-    is shuffled once, grouped by doc, with map-side partial mins.
-    `sets` lets callers share a persisted shingle relation.
-    """
-    if sets is None:
-        sets = shingle_sets(docs, n=n)
-    params = minhash_params(num_hashes, seed=seed)
-    aggs = [
-        F.min((F.lit(a) * F.col("h") + F.lit(b)) % HASH_PRIME).alias(f"mh_{i}")
-        for i, (a, b) in enumerate(params)
-    ]
-    return sets.groupBy("doc_id").agg(*aggs)
-
-
 def banded_minhash_arrays(
     harr_df: DataFrame, num_hashes: int = 32, bands: int = 8, seed: int = 42
 ) -> DataFrame:
     """DataFrame[doc_id, band_hash] in ONE vectorized Arrow pass over the
-    shingle-hash arrays — value-identical to
-    ``_banded(minhash_signatures(...))`` over the same shingle sets
-    (differential-tested, and byte-equal to the DuckDB mirror in
-    duck_oracle.minhash_lsh_sql):
-    per permutation i, mh_i = min((a_i*h + b_i) % P) over the row's
-    distinct shingle hashes; per band b, band_hash = Horner(b, mh_{b*r}..
-    mh_{b*r+r-1}) mod P.
+    shingle-hash arrays — byte-equal to the DuckDB mirror
+    (duck_oracle._minhash_bands_sql, differential-tested): per
+    permutation i, mh_i = min((a_i*h + b_i) % P) over the row's distinct
+    shingle hashes; per band b, band_hash = Horner(b, mh_{b*r}..
+    mh_{b*r+r-1}) mod P. band_idx leads the polynomial, so the SAME row
+    values in DIFFERENT bands hash apart and the candidate join keys on
+    band_hash alone (a cross-band collision mod 2^31 merely adds one
+    exact-verified candidate, identically on both engines).
 
     Why a pandas UDF and not 125 JVM ``array_min(transform(...))``
     columns: higher-order functions are CodegenFallback, so the column
@@ -663,8 +603,8 @@ def banded_minhash_arrays(
     values are unchanged because the arithmetic is the same
     ((a*h+b) < 2^62 and acc*K + mh < 2^52: no int64 overflow).
 
-    A row with an empty hash array emits no bands (the exploded groupBy
-    path emits no signature row for a shingle-less doc; parity)."""
+    A NULL or empty hash array emits no bands (a shingle-less doc has no
+    signature on either engine)."""
     assert num_hashes % bands == 0
     rows = num_hashes // bands
     from pyspark.sql.functions import pandas_udf
@@ -683,8 +623,6 @@ def banded_minhash_arrays(
         out: list = []
         for arr in col:
             # NULL harr (a NULL-text row: split/transform propagate NULL)
-            # emits no bands, matching the exploded path where a NULL
-            # array explodes to zero rows
             if arr is None:
                 out.append([])
                 continue
@@ -712,79 +650,80 @@ def banded_minhash_arrays(
     )
 
 
-def minhash_lsh_pairs(
-    docs: DataFrame,
-    threshold: float = 0.1,
-    num_hashes: int = 32,
-    bands: int = 8,
-    n: int = 3,
-    seed: int = 42,
+def candidate_pairs(
+    x: DataFrame,
+    y: DataFrame | None,
+    key: list[str],
+    names: tuple[str, str],
+    id_col: str = "doc_id",
 ) -> DataFrame:
-    """LSH-banded candidate generation + exact-Jaccard verification.
+    """The blocked candidate join every near-dup operator shares
+    (MinHash bands here, hyperplane bands and IVF cells in
+    operators/ann.py) -> DataFrame[names[0], names[1]], distinct.
 
-    bands=8 × rows=4 over 32 hashes → collision prob ≈ 1-(1-j^4)^8; at
-    j=0.5 that's 0.46, at j=0.9 it's 1.0 — tuned for near-dup recall.
-    Pair shuffle is keyed on band_hash: uniform tiny buckets (band_idx
-    is folded into the Horner band hash, see banded_minhash_arrays).
+    `x`/`y` carry (id_col, *key) — ids and block keys ONLY, so the
+    exchange before the join never moves the text or vector payload
+    (tests/test_plans.py pins this); verification re-joins the payload
+    to the deduplicated candidate list. `y=None` is the self-join of
+    `x`, which keeps id1 < id2; a cross-set join keeps every (x, y)
+    pair, so an id present on both sides reports itself. The shuffle
+    key is the block bucket; bucket skew on real (clustered) data falls
+    to AQE skew-join (session.py)."""
+    a, b = names
+    cand = x.alias("x").join((x if y is None else y).alias("y"), key)
+    if y is None:
+        cand = cand.filter(F.col(f"x.{id_col}") < F.col(f"y.{id_col}"))
+    return cand.select(
+        F.col(f"x.{id_col}").alias(a), F.col(f"y.{id_col}").alias(b)
+    ).distinct()
 
-    The shingle relation is persisted in ARRAY form (one row per doc) and
-    shared by the signature+banding pass and the verification join; the
-    banded relation (doc_id, band_hash — tiny rows) is persisted too, so
-    the x/y candidate self-join reads one materialization instead of
-    computing the signatures twice. Both persists are filled EAGERLY
-    (count()): the final plan fans the cached relations into four
-    branches (x, y, h1, h2), and lazily-filled caches race there — each
-    branch recomputes the tape/shingle pipeline concurrently before the
-    cache lands (measured: 4 duplicate ~6 s stages on the 147k-tape
-    near-dup at sf0.1, plus the same work again on the verify sides).
-    Signatures+bands come from one vectorized Arrow pass
-    (banded_minhash_arrays — see its docstring for why not 125 JVM
-    array_min/transform columns). The verify joins each candidate pair
-    to its two cached arrays and takes size(array_intersect(h1, h2))
-    JVM-side — value-identical to counting shared exploded hashes
-    (arrays are distinct by construction), but with no 40M-row explode
-    and no count shuffle.
-    Per-candidate memory is two shingle arrays (~8 B × tokens/doc);
-    candidates are near-dup-banded, so no hot row fans out. The `i >= 1`
-    filter reproduces the exploded path's inner-join semantics (a
-    zero-overlap band collision emits nothing, not jaccard=0) so any
-    threshold, including 0, gives identical output.
-    """
-    assert num_hashes % bands == 0
-    from pyspark import StorageLevel
 
-    # shared by the signature build AND the verification join
-    harr = shingle_hash_arrays(docs, n=n).persist(StorageLevel.MEMORY_AND_DISK)
-    harr.count()
-    banded = banded_minhash_arrays(
-        harr, num_hashes=num_hashes, bands=bands, seed=seed
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    banded.count()
-    cand = (
-        banded.alias("x")
-        .join(banded.alias("y"), ["band_hash"])
-        .filter(F.col("x.doc_id") < F.col("y.doc_id"))
-        .select(
-            F.col("x.doc_id").alias("id1"), F.col("y.doc_id").alias("id2")
-        )
-        .distinct()
-    )
-    h1 = harr.select(F.col("doc_id").alias("id1"), F.col("harr").alias("h1"))
-    h2 = harr.select(F.col("doc_id").alias("id2"), F.col("harr").alias("h2"))
+def _minhash_jaccard(
+    x: DataFrame,
+    y: DataFrame | None,
+    names: tuple[str, str],
+    threshold: float,
+    num_hashes: int,
+    bands: int,
+    seed: int,
+) -> DataFrame:
+    """Band-hash candidates + exact-Jaccard verify over cached
+    shingle-array relations (`y=None`: pairs within `x`). The verify joins
+    each candidate pair to its two arrays and takes
+    size(array_intersect(h1, h2)) JVM-side — arrays are distinct by
+    construction, so that IS the shared-shingle count, with no
+    |shingles|-row explode and no count shuffle. Per-candidate memory is
+    two shingle arrays (~8 B × tokens/doc); candidates are
+    near-dup-banded, so no hot row fans out. `i >= 1` keeps inner-join
+    semantics (a zero-overlap band collision emits nothing, not
+    jaccard=0), so any threshold, including 0, is exact."""
+    a, b = names
+
+    def bands_of(harr: DataFrame) -> DataFrame:
+        return banded_minhash_arrays(harr, num_hashes, bands, seed)
+
+    if y is None:
+        # both sides of the self-join read one materialization
+        cand = candidate_pairs(_cached(bands_of(x)), None, ["band_hash"], names)
+        y = x
+    else:
+        cand = candidate_pairs(bands_of(x), bands_of(y), ["band_hash"], names)
+    h1 = x.select(F.col("doc_id").alias(a), F.col("harr").alias("h1"))
+    h2 = y.select(F.col("doc_id").alias(b), F.col("harr").alias("h2"))
     return (
-        cand.join(h1, "id1")
-        .join(h2, "id2")
+        cand.join(h1, a)
+        .join(h2, b)
         .select(
-            "id1",
-            "id2",
+            a,
+            b,
             F.size(F.array_intersect("h1", "h2")).cast("long").alias("i"),
             F.size("h1").cast("long").alias("n1"),
             F.size("h2").cast("long").alias("n2"),
         )
         .filter(F.col("i") >= 1)
         .select(
-            "id1",
-            "id2",
+            a,
+            b,
             (F.col("i") / (F.col("n1") + F.col("n2") - F.col("i"))).alias(
                 "jaccard"
             ),
@@ -793,28 +732,31 @@ def minhash_lsh_pairs(
     )
 
 
-def _banded(sig: DataFrame, rows: int, bands: int) -> DataFrame:
-    """DataFrame[doc_id, band_idx, band_hash] from an mh_* signature.
+def minhash_lsh_pairs(
+    docs: DataFrame,
+    threshold: float = 0.1,
+    num_hashes: int = 32,
+    bands: int = 8,
+    n: int = 3,
+    seed: int = 42,
+) -> DataFrame:
+    """LSH-banded candidate generation + exact-Jaccard verification →
+    DataFrame[id1, id2, jaccard], id1 < id2.
 
-    band_hash is the numeric Horner combine of (band_idx, that band's
-    mh values) — band_idx leads the polynomial so the SAME row values in
-    DIFFERENT bands hash apart, letting callers key the candidate join
-    on band_hash alone (one join column, no per-band md5/concat; a
-    cross-band collision mod 2^31 merely adds one exact-verified
-    candidate, identically on both engines)."""
-    from matric_spark.functions.hashing import horner_hash
+    bands=8 × rows=4 over 32 hashes → collision prob ≈ 1-(1-j^4)^8; at
+    j=0.5 that's 0.46, at j=0.9 it's 1.0 — tuned for near-dup recall.
+    Pair shuffle is keyed on band_hash: uniform tiny buckets.
 
-    band_hashes = F.array(
-        *[
-            horner_hash(
-                [F.lit(b)]
-                + [F.col(f"mh_{b * rows + r}") for r in range(rows)]
-            )
-            for b in range(bands)
-        ]
-    )
-    return sig.select(
-        "doc_id", F.posexplode(band_hashes).alias("band_idx", "band_hash")
+    The shingle relation is cached in ARRAY form (one row per doc) and
+    shared by the band pass and the verify join; the banded relation
+    (doc_id, band_hash — tiny rows) is cached too, so both sides of the
+    candidate self-join read one materialization instead of computing
+    the signatures twice (`_cached` for why both fill eagerly).
+    """
+    assert num_hashes % bands == 0
+    harr = _cached(shingle_hash_arrays(docs, n=n))
+    return _minhash_jaccard(
+        harr, None, ("id1", "id2"), threshold, num_hashes, bands, seed
     )
 
 
@@ -831,6 +773,7 @@ def minhash_lsh_pairs_against(
 ) -> DataFrame:
     """Incremental (cross-set) near-dup: for each NEW doc, the REFERENCE
     docs with shingle Jaccard >= threshold → [new_id, ref_id, jaccard].
+    The same pipeline as `minhash_lsh_pairs`, joined across the split.
 
     The op a crawl pipeline runs on every ingest batch: drop fresh
     documents that near-duplicate the existing training corpus. Exact
@@ -842,64 +785,23 @@ def minhash_lsh_pairs_against(
     band_hash, and every ingest batch equi-joins its (small)
     banded signatures against it; candidates exchange only id pairs, and
     the exact-Jaccard verify joins just the candidate set back to the
-    two shingle relations. Nothing is O(|new| x |ref|).
+    two shingle-array relations. Nothing is O(|new| x |ref|).
 
     Id spaces are the caller's concern: a doc present on both sides
     under the same id will be reported as its own near-dup.
+
+    `sets_new`/`sets_ref`: (doc_id, harr) relations
+    (`shingle_hash_arrays`) a caller already holds cached — ingest_gate
+    shares one staged md5 pass across all its text signals and owns
+    those caches.
     """
     assert num_hashes % bands == 0
-    rows = num_hashes // bands
-    from pyspark import StorageLevel
-
-    # callers sharing one shingle build across signals (ingest_gate)
-    # pass sets_new/sets_ref and own the persist
     if sets_new is None:
-        sets_new = shingle_sets(new_docs, n=n).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
+        sets_new = _cached(shingle_hash_arrays(new_docs, n=n))
     if sets_ref is None:
-        sets_ref = shingle_sets(ref_docs, n=n).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-    sig_new = minhash_signatures(
-        new_docs, num_hashes=num_hashes, n=n, seed=seed, sets=sets_new
-    )
-    sig_ref = minhash_signatures(
-        ref_docs, num_hashes=num_hashes, n=n, seed=seed, sets=sets_ref
-    )
-    cand = (
-        _banded(sig_new, rows, bands)
-        .withColumnRenamed("doc_id", "new_id")
-        .join(
-            _banded(sig_ref, rows, bands).withColumnRenamed("doc_id", "ref_id"),
-            ["band_hash"],
-        )
-        .select("new_id", "ref_id")
-        .distinct()
-    )
-    sizes_new = sets_new.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n1"))
-    sizes_ref = sets_ref.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n2"))
-    shared = (
-        cand.join(sets_new.withColumnsRenamed({"doc_id": "new_id"}), "new_id")
-        .join(
-            sets_ref.withColumnsRenamed({"doc_id": "ref_id"}),
-            ["ref_id", "h"],
-        )
-        .groupBy("new_id", "ref_id")
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    return (
-        shared.join(sizes_new.withColumnRenamed("doc_id", "new_id"), "new_id")
-        .join(sizes_ref.withColumnRenamed("doc_id", "ref_id"), "ref_id")
-        .select(
-            "new_id",
-            "ref_id",
-            (
-                F.col("shared")
-                / (F.col("n1") + F.col("n2") - F.col("shared"))
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
+        sets_ref = _cached(shingle_hash_arrays(ref_docs, n=n))
+    return _minhash_jaccard(
+        sets_new, sets_ref, ("new_id", "ref_id"), threshold, num_hashes, bands, seed
     )
 
 

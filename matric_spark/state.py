@@ -68,6 +68,7 @@ from pyspark.sql import functions as F
 from matric_spark.checks.constraints import default_transcript_rules
 from matric_spark.checks.drift import counts_sketch
 from matric_spark.checks.suite import (
+    ROW_CHECKS,
     SuiteConfig,
     check_counts,
     core_rows,
@@ -504,7 +505,9 @@ def metric_history_drift(
     schema is the upstream bug this catches. No data re-scan: both
     sides are completed-run state reads.
     """
-    checks = ["ref_role", "ref_tool", "null_text", "null_ts", "seq_order"]
+    # uniqueness is a global check, folded at assembly: the `local`
+    # state has no column for it
+    checks = [c for c in ROW_CHECKS if c != "uniqueness"]
 
     def rates(fp: str, tag: str) -> DataFrame:
         commits = store._for("log", fp)

@@ -9,11 +9,9 @@ from pyspark.sql import functions as F
 
 from matric_spark.checks.column_stats import column_stats
 from matric_spark.checks.drift import counts_sketch, drift_by_partition, entropy_by_partition
-from matric_spark.checks.referential import _domain_df, domain_violations
 from matric_spark.checks.sequence import conversation_shape, out_of_order_turns, text_parity
-from matric_spark.checks.suite import SuiteConfig, run_verdicts
+from matric_spark.checks.suite import SuiteConfig, run_verdicts, run_violations
 from matric_spark.checks.uniqueness import duplicate_keys, uniqueness_violations
-from matric_spark.schema import DEFAULT_ROLE_DOMAIN, DEFAULT_TOOL_DOMAIN
 
 
 def test_column_stats(tiny_transcripts):
@@ -73,20 +71,19 @@ def test_uniqueness_null_keys_excluded(spark):
 
 
 def test_referential(tiny_transcripts):
-    bad_role = domain_violations(tiny_transcripts, "role", DEFAULT_ROLE_DOMAIN, nulls_ok=False).collect()
+    viol = run_violations(tiny_transcripts)
+    bad_role = viol["ref_role"].collect()
     assert [(r["conv_id"], r["turn_idx"]) for r in bad_role] == [("C", 0)]
-    bad_tool = domain_violations(tiny_transcripts, "tool", DEFAULT_TOOL_DOMAIN, nulls_ok=True).collect()
+    bad_tool = viol["ref_tool"].collect()
     assert [(r["conv_id"], r["turn_idx"]) for r in bad_tool] == [("C", 2)]
-    # nulls_ok=False also reports every NULL tool
-    n_null_tool = tiny_transcripts.filter(F.col("tool").isNull()).count()
+    # an empty domain: every role violates (a NULL one too), while a
+    # NULL tool is 'no tool' and never does
+    empty = run_violations(tiny_transcripts, SuiteConfig(role_domain=[], tool_domain=[]))
+    assert empty["ref_role"].count() == tiny_transcripts.count()
     assert (
-        len(domain_violations(tiny_transcripts, "tool", DEFAULT_TOOL_DOMAIN, nulls_ok=False).collect())
-        == 1 + n_null_tool
+        empty["ref_tool"].count()
+        == tiny_transcripts.filter(F.col("tool").isNotNull()).count()
     )
-    # an empty domain is still a string column: every non-NULL role violates
-    empty = domain_violations(tiny_transcripts, "role", [], nulls_ok=True)
-    assert empty.count() == tiny_transcripts.filter(F.col("role").isNotNull()).count()
-    assert _domain_df(tiny_transcripts.sparkSession, "role", []).dtypes == [("role", "string")]
 
 
 def test_conversation_shape(tiny_transcripts):

@@ -144,19 +144,32 @@ def test_minhash_lsh_jaccard_matches_set_algebra(spark, tiny_docs):
         assert jac == inter / len(sets[i] | sets[j]) and inter >= 1
 
 
+def _duck_bands(docs, num_hashes, bands):
+    """Sorted (doc_id, band_hash) rows of the DuckDB MinHash mirror
+    (duck_oracle._minhash_bands_sql) over the (doc_id, text) of `docs`."""
+    import duckdb
+
+    from matric_spark.duck_oracle import _minhash_bands_sql, _shingle_sets_sql
+
+    con = duckdb.connect()
+    con.register("documents", docs.select("doc_id", "text").toPandas())
+    return sorted(
+        con.execute(
+            f"WITH {_shingle_sets_sql(3)}, "
+            f"{_minhash_bands_sql(num_hashes, bands, 42)} "
+            "SELECT doc_id, band_hash FROM banded"
+        ).fetchall()
+    )
+
+
 def test_banded_minhash_arrow_matches_column_path(spark, tiny_docs):
     """Differential: the vectorized Arrow band-hash pass
-    (banded_minhash_arrays — the hot path inside minhash_lsh_pairs)
-    must emit exactly the (doc_id, band_hash) multiset of the JVM
-    column construction _banded(minhash_signatures(...)) over the same
-    shingle sets, which is itself pinned to the DuckDB oracle mirror.
-    Covers both a 32-hash/8-band and a 10-hash/5-band parametrization."""
-    from matric_spark.operators.dedup import (
-        _banded,
-        banded_minhash_arrays,
-        minhash_signatures,
-        shingle_hash_arrays,
-    )
+    (banded_minhash_arrays — the one MinHash inside minhash_lsh_pairs and
+    minhash_lsh_pairs_against) must emit exactly the (doc_id, band_hash)
+    multiset of the DuckDB column construction over the same shingle
+    sets (per-permutation min, then a Horner combine per band). Covers
+    both a 32-hash/8-band and a 10-hash/5-band parametrization."""
+    from matric_spark.operators.dedup import banded_minhash_arrays, shingle_hash_arrays
 
     harr = shingle_hash_arrays(tiny_docs, n=3)
     for num_hashes, bands in ((32, 8), (10, 5)):
@@ -164,29 +177,27 @@ def test_banded_minhash_arrow_matches_column_path(spark, tiny_docs):
             (r.doc_id, r.band_hash)
             for r in banded_minhash_arrays(harr, num_hashes, bands).collect()
         )
-        want = sorted(
-            (r.doc_id, r.band_hash)
-            for r in _banded(
-                minhash_signatures(tiny_docs, num_hashes),
-                num_hashes // bands,
-                bands,
-            ).collect()
-        )
-        assert got == want and len(got) == 5 * bands
+        assert got == _duck_bands(tiny_docs, num_hashes, bands)
+        assert len(got) == 5 * bands
 
 
 def test_minhash_lsh_null_text_and_long_docs(spark, tiny_docs):
-    """Regressions for the Arrow band-hash pass: (a) a NULL-text row
-    (split/transform propagate NULL into a NULL harr) must emit no bands
-    and no pairs instead of crashing the Python worker; (b) a document
-    whose shingle array spans multiple chunk slices must hash identically
-    to the unchunked JVM column path (the chunked running-min is
-    value-identical, not just approximately so)."""
+    """Regressions for the Arrow band-hash pass, on the self and the
+    cross-set op: (a) a NULL-text row (split/transform propagate NULL
+    into a NULL harr) must emit no bands and no pairs instead of
+    crashing the Python worker — also when the same id sits on both
+    sides of the cross-set join; (b) a document whose shingle array
+    spans multiple chunk slices must hash identically to the unchunked
+    DuckDB mirror (the chunked running-min is value-identical, not just
+    approximately so), and the cross-set pairs must equal the DuckDB
+    cross-set twin."""
+    import duckdb
+
+    from matric_spark.duck_oracle import minhash_lsh_cross_sql
     from matric_spark.operators.dedup import (
-        _banded,
         banded_minhash_arrays,
         minhash_lsh_pairs,
-        minhash_signatures,
+        minhash_lsh_pairs_against,
         shingle_hash_arrays,
     )
 
@@ -200,6 +211,12 @@ def test_minhash_lsh_null_text_and_long_docs(spark, tiny_docs):
     assert {(r.id1, r.id2) for r in pairs} and not any(
         9 in (r.id1, r.id2) for r in pairs
     )
+    cross = minhash_lsh_pairs_against(
+        with_null.filter(F.col("doc_id").isin(2, 9)),
+        with_null.filter(F.col("doc_id").isin(0, 9)),
+        0.5,
+    ).collect()
+    assert {(r.new_id, r.ref_id) for r in cross} == {(2, 0)}
 
     # ~12k tokens → ~12k distinct 3-shingles: several 4096-wide slices
     long_text = " ".join(f"w{i}" for i in range(12000))
@@ -212,11 +229,18 @@ def test_minhash_lsh_null_text_and_long_docs(spark, tiny_docs):
         (r.doc_id, r.band_hash)
         for r in banded_minhash_arrays(harr, 32, 8).collect()
     )
-    want = sorted(
-        (r.doc_id, r.band_hash)
-        for r in _banded(minhash_signatures(long_docs, 32), 4, 8).collect()
-    )
-    assert got == want and len(got) == 16
+    assert got == _duck_bands(long_docs, 32, 8) and len(got) == 16
+
+    sp = {
+        (r.new_id, r.ref_id, round(r.jaccard, 6))
+        for r in minhash_lsh_pairs_against(
+            long_docs.filter("doc_id = 1"), long_docs.filter("doc_id = 0"), 0.5
+        ).collect()
+    }
+    con = duckdb.connect()
+    con.register("documents", long_docs.toPandas())
+    duck = set(con.execute(minhash_lsh_cross_sql(0.5, "doc_id = 1")).fetchall())
+    assert sp == duck and len(sp) == 1
 
 
 def test_minhash_lsh_against_cross_set(spark, tiny_docs):
@@ -1082,15 +1106,24 @@ def test_funnel_empty_input_returns_zero_counts(spark):
 
 def test_exact_embedding_ops_degenerate_norms_match_oracle(spark, tmp_path):
     """A zero-norm and a NaN embedding are dropped by both engines, in
-    the exact near-dup join and the brute-force top-k: the DuckDB oracle
-    neither errors on x/0 nor emits NaN-cosine pairs, and Spark drops the
-    NaN row instead of matching it."""
+    the exact near-dup join, the hyperplane-LSH near-dup and the
+    brute-force top-k: the DuckDB oracle neither errors on x/0 nor emits
+    NaN-cosine pairs, and Spark drops the NaN row instead of matching
+    it."""
     import duckdb
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from matric_spark.duck_oracle import ann_topk_sql, embedding_near_dup_sql
-    from matric_spark.operators.ann import ann_topk_bruteforce, embedding_near_dup
+    from matric_spark.duck_oracle import (
+        ann_topk_sql,
+        embedding_near_dup_lsh_sql,
+        embedding_near_dup_sql,
+    )
+    from matric_spark.operators.ann import (
+        ann_topk_bruteforce,
+        embedding_near_dup,
+        embedding_near_dup_lsh,
+    )
 
     rows = [
         (0, [1.0, 0.0, 0.0, 0.0]),
@@ -1118,6 +1151,17 @@ def test_exact_embedding_ops_degenerate_norms_match_oracle(spark, tmp_path):
     duck = set(con.execute(embedding_near_dup_sql(0.4)).fetchall())
     assert sp == duck
     assert {(a, b) for a, b, _ in sp} == {(0, 1), (2, 3)}
+
+    sp_lsh = {
+        (r.id1, r.id2, round(r.cosine, 6))
+        for r in embedding_near_dup_lsh(
+            emb, 4, 0.4, n_bands=16, band_bits=8
+        ).collect()
+    }
+    duck_lsh = set(
+        con.execute(embedding_near_dup_lsh_sql(4, 0.4, 16, 8)).fetchall()
+    )
+    assert sp_lsh == duck_lsh == sp
 
     sp_topk = {
         (r.qid, r.vec_id, round(r.cosine, 6), r.rank)

@@ -52,30 +52,18 @@ def test_predicate_pushdown_to_scan(spark, transcripts_parquet):
     assert "text" not in read_schema
 
 
-def test_referential_check_broadcasts_domain_no_shuffle(spark, transcripts_parquet):
-    """The standalone domain check is a broadcast anti-join: the big
-    side must never shuffle (no hashpartitioning exchange). The fused
-    suite path compiles domains to IN-list filters instead
-    (test below)."""
-    from matric_spark.checks.referential import domain_violations
-    from matric_spark.schema import DEFAULT_ROLE_DOMAIN
+def test_ref_violations_are_scan_filters(spark, transcripts_parquet):
+    """The ref_role/ref_tool violation rows are the verdict flags as a
+    scan filter (suite.row_local_flags): no join of any kind (the
+    domain is an IN-list, so the table side never shuffles and nothing
+    is broadcast) and no Python RDD scan."""
+    from matric_spark.checks.suite import run_violations
 
     t = spark.read.parquet(transcripts_parquet)
-    p = plan(domain_violations(t, "role", DEFAULT_ROLE_DOMAIN, nulls_ok=False))
-    assert "BroadcastHashJoin" in p
-    assert "hashpartitioning" not in p  # zero shuffle of the table side
-
-
-def test_referential_domain_needs_no_python_worker(spark, transcripts_parquet):
-    """A list domain is built on the JVM: no Python RDD scan (one
-    Python-worker job per check run), and still a broadcast anti-join."""
-    from matric_spark.checks.referential import domain_violations
-    from matric_spark.schema import DEFAULT_TOOL_DOMAIN
-
-    t = spark.read.parquet(transcripts_parquet)
-    p = plan(domain_violations(t, "tool", DEFAULT_TOOL_DOMAIN))
-    assert "ExistingRDD" not in p
-    assert "BroadcastHashJoin" in p
+    for check in ("ref_role", "ref_tool"):
+        p = plan(run_violations(t)[check])
+        assert "Join" not in p and "ExistingRDD" not in p, check
+        assert "Exchange" not in p and " IN (" in p, check
 
 
 def test_suite_scalar_domains_are_inlist_no_join(spark, transcripts_parquet):
@@ -188,29 +176,48 @@ def test_assemble_population_has_no_single_partition_exchange(spark):
 
 
 def test_lsh_candidate_exchange_carries_ids_only(spark):
-    """The ANN LSH candidate join must shuffle (vec_id, band_idx,
-    band_val) only — never the embedding vector (which is n_bands× the
-    bytes after the posexplode). The vectors re-join AFTER candidate
-    dedup, for verification."""
+    """The shared candidate join (dedup.candidate_pairs) inside the ANN
+    LSH near-dup must shuffle (vec_id, band_idx, band_val) only — never
+    the embedding vector (which is n_bands× the bytes after the
+    posexplode). The vectors re-join AFTER candidate dedup, for
+    verification."""
     import re
 
-    from matric_spark.operators.ann import lsh_candidate_pairs
+    from matric_spark.operators.ann import embedding_near_dup_lsh
 
     emb = spark.createDataFrame(
         [(i, [float(i), 1.0, 0.0, 0.5]) for i in range(50)],
         "vec_id long, embedding array<double>",
     )
-    p = plan(lsh_candidate_pairs(emb, dim=4))
-    # formatted plan: each node block has "Output [k]: [cols]"; every
-    # Exchange node's output must be free of array-typed vector columns
+    p = plan(embedding_near_dup_lsh(emb, dim=4))
+    # formatted plan: an Exchange node block lists its columns as
+    # "Input [k]: [cols]" above "Arguments: hashpartitioning(...)";
+    # every Exchange keyed on the band columns must be free of
+    # array-typed vector columns
     blocks = re.split(r"\n\(\d+\) ", p)
-    exchanges = [b for b in blocks if b.startswith("Exchange")]
-    assert exchanges, "expected at least one exchange in the candidate join"
+    exchanges = [
+        b for b in blocks if b.startswith("Exchange") and "band_val" in b
+    ]
+    assert exchanges, "expected a band-keyed exchange in the candidate join"
     for b in exchanges:
-        out_line = next(
-            (ln for ln in b.splitlines() if ln.strip().startswith("Output")), ""
-        )
-        assert "embedding" not in out_line and " v#" not in out_line, out_line
+        cols = next(ln for ln in b.splitlines() if ln.startswith("Input"))
+        assert "vec_id" in cols, cols
+        assert "embedding" not in cols and " v#" not in cols, cols
+
+
+def test_shingle_arrays_one_md5_chain(spark):
+    """shingle_hash_arrays reads only the low token-hash chain of the
+    shared staging (`_staged_md`): Catalyst prunes the high chain, so
+    the plan holds one md5 and no shiftright."""
+    from matric_spark.operators.dedup import shingle_hash_arrays
+
+    docs = spark.createDataFrame(
+        [(0, "alpha beta gamma delta")], "doc_id long, text string"
+    )
+    p = plan(shingle_hash_arrays(docs), "extended").split(
+        "== Physical Plan ==", 1
+    )[1]
+    assert p.count("md5(") == 1 and "shiftright" not in p, p
 
 
 def test_ngram_bounded_candidates_single_shuffle_no_self_join(spark):
