@@ -52,18 +52,29 @@ def test_predicate_pushdown_to_scan(spark, transcripts_parquet):
     assert "text" not in read_schema
 
 
-def test_ref_violations_are_scan_filters(spark, transcripts_parquet):
+def test_referential_check_broadcasts_domain_no_shuffle(spark, transcripts_parquet):
     """The ref_role/ref_tool violation rows are the verdict flags as a
-    scan filter (suite.row_local_flags): no join of any kind (the
-    domain is an IN-list, so the table side never shuffles and nothing
-    is broadcast) and no Python RDD scan."""
+    scan filter (suite.row_local_flags). The domain ships to every task
+    inside the plan as an IN-list literal, so the table side never
+    shuffles and no join is needed to bring the domain to it."""
     from matric_spark.checks.suite import run_violations
 
     t = spark.read.parquet(transcripts_parquet)
     for check in ("ref_role", "ref_tool"):
         p = plan(run_violations(t)[check])
-        assert "Join" not in p and "ExistingRDD" not in p, check
-        assert "Exchange" not in p and " IN (" in p, check
+        assert " IN (" in p, check
+        assert "Exchange" not in p and "hashpartitioning" not in p, check
+
+
+def test_referential_domain_needs_no_python_worker(spark, transcripts_parquet):
+    """A list domain is built on the JVM: no Python RDD scan (one
+    Python-worker job per check run) and no join of any kind."""
+    from matric_spark.checks.suite import run_violations
+
+    t = spark.read.parquet(transcripts_parquet)
+    for check in ("ref_role", "ref_tool"):
+        p = plan(run_violations(t)[check])
+        assert "ExistingRDD" not in p and "Join" not in p, check
 
 
 def test_suite_scalar_domains_are_inlist_no_join(spark, transcripts_parquet):
