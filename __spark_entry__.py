@@ -669,43 +669,51 @@ def _collated_sims(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DRIFT_SKETCH_CACHE: dict[str, str] = {}
+_MATERIALIZED: dict[tuple[str, str], str] = {}
+
+
+def _materialized(
+    spark: SparkSession, sf_dir: str, name: str, build: Callable[[], DataFrame]
+) -> DataFrame:
+    """`build()` written ONCE per (process, name, sf_dir) to a parquet
+    under `_scratch`, then read back by every caller: first caller
+    computes, so each queries() entry stays self-contained for the
+    driver. Per CLAUDE.md the reuse is parquet, not .cache(); it pays
+    only for small outputs of expensive plans (see `_tapes`)."""
+    key = (name, sf_dir)
+    path = _MATERIALIZED.get(key)
+    if path is None:
+        path = f"{_scratch(f'graft_{name}_')}/{name}.parquet"
+        build().write.parquet(path)
+        _MATERIALIZED[key] = path
+    return spark.read.parquet(path)
 
 
 def _drift_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The (p, v, c) counts sketch over (part_month, length(text)) —
     the shared input of drift_ks / drift_psi / drift_emd /
-    colstats_entropy — materialized ONCE per (process, sf_dir) in the
-    _tapes/_level10 style, so four gated entries cost one table scan."""
-    path = _DRIFT_SKETCH_CACHE.get(sf_dir)
-    if path is None:
-        t = transcript_df(spark, sf_dir)
-        out = counts_sketch(t, "part_month", F.length("text"))
-        path = _scratch("graft_drift_") + "/sketch.parquet"
-        out.write.parquet(path)
-        _DRIFT_SKETCH_CACHE[sf_dir] = path
-    return spark.read.parquet(path)
-
-
-_EVENTS_SKETCH_CACHE: dict[str, str] = {}
+    colstats_entropy, so four gated entries cost one table scan."""
+    return _materialized(
+        spark, sf_dir, "drift_sketch",
+        lambda: counts_sketch(
+            transcript_df(spark, sf_dir), "part_month", F.length("text")
+        ),
+    )
 
 
 def _events_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(p, v, c) counts sketch over (day cohort, floor(value)) of the
-    event stream — shared by events_drift and events_emd, same
-    materialize-once pattern as _drift_sketch."""
-    path = _EVENTS_SKETCH_CACHE.get(sf_dir)
-    if path is None:
+    event stream — shared by events_drift and events_emd."""
+
+    def build() -> DataFrame:
         ev = spark.read.parquet(f"{sf_dir}/events.parquet").withColumn(
             "cohort",
             (F.year("ts") * 10000 + F.month("ts") * 100 + F.dayofmonth("ts"))
             .cast("int"),
         )
-        out = counts_sketch(ev, "cohort", F.floor("value").cast("long"))
-        path = _scratch("graft_evsk_") + "/sketch.parquet"
-        out.write.parquet(path)
-        _EVENTS_SKETCH_CACHE[sf_dir] = path
-    return spark.read.parquet(path)
+        return counts_sketch(ev, "cohort", F.floor("value").cast("long"))
+
+    return _materialized(spark, sf_dir, "events_sketch", build)
 
 
 def _tapes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -725,34 +733,25 @@ def _tapes(spark: SparkSession, sf_dir: str) -> DataFrame:
     return conversation_tapes(transcript_df(spark, sf_dir))
 
 
-_LEVEL10_CACHE: dict[str, str] = {}
-
-
 def _level10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Level-1_0 metrics, materialized ONCE per (process, sf_dir) to a
-    temp parquet and re-read by every consumer (sim_metrics_level10,
-    sim_metrics_level1, sim_bh, sim_signif). Each queries() entry stays
-    self-contained for the driver — first caller computes, later callers
-    read — and per CLAUDE.md the reuse is parquet materialization, not
-    .cache(): the output is tiny (one row per (id1, label1)) while the
+    """Level-1_0 metrics, materialized once and re-read by every consumer
+    (sim_metrics_level10, sim_metrics_level1, sim_bh, sim_signif): the
+    output is tiny (one row per (id1, label1)) while the
     collate→attach_sim→annotate→metrics pipeline it summarizes is the
     expensive part."""
-    path = _LEVEL10_CACHE.get(sf_dir)
-    if path is not None:
-        return spark.read.parquet(path)
 
-    from matric_spark.operators.metrics import sim_annotate, sim_metrics
+    def build() -> DataFrame:
+        from matric_spark.operators.metrics import sim_annotate, sim_metrics
 
-    sims = _collated_sims(spark, sf_dir)
-    # both-side annotate (the reference default); sim_metrics projects
-    # to its summary cols, so label2 rides along only until then
-    ann = sim_annotate(sims, _population(spark, sf_dir), ["label"], side="both")
-    out = sim_metrics(ann, ["id1", "label1"])
+        # both-side annotate (the reference default); sim_metrics projects
+        # to its summary cols, so label2 rides along only until then
+        ann = sim_annotate(
+            _collated_sims(spark, sf_dir), _population(spark, sf_dir),
+            ["label"], side="both",
+        )
+        return sim_metrics(ann, ["id1", "label1"])
 
-    path = _scratch("graft_l10_") + "/level10.parquet"
-    out.write.parquet(path)
-    _LEVEL10_CACHE[sf_dir] = path
-    return spark.read.parquet(path)
+    return _materialized(spark, sf_dir, "level10", build)
 
 
 def _q_sim_strata(kernel: str) -> Callable[[SparkSession, str], DataFrame]:

@@ -715,7 +715,7 @@ _METRICS_TAIL = """
 sc AS (SELECT *,
               sum(is_sig) OVER g AS m,
               sum(1 - is_sig) OVER g AS nbg,
-              sum(1 - is_sig) OVER (PARTITION BY id1 ORDER BY sim
+              sum(1 - is_sig) OVER (PARTITION BY id1 ORDER BY sim NULLS FIRST
                 RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cle
        FROM u WINDOW g AS (PARTITION BY id1)),
 scf AS (SELECT * FROM sc WHERE m > 0 AND nbg > 0),
@@ -741,13 +741,13 @@ byval AS (SELECT id1, sim, sum(is_sig) AS sig_v, sum(1 - is_sig) AS bg_v,
                  max(m) AS m
           FROM scf GROUP BY id1, sim),
 curve AS (SELECT *, sum(sig_v) OVER w AS tp, sum(bg_v) OVER w AS fp
-          FROM byval WINDOW w AS (PARTITION BY id1 ORDER BY sim DESC
+          FROM byval WINDOW w AS (PARTITION BY id1 ORDER BY sim DESC NULLS LAST
             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
 ap AS (SELECT id1, sum((sig_v / CAST(m AS DOUBLE)) * (tp / CAST(tp + fp AS DOUBLE))) AS v_ap
        FROM curve GROUP BY id1),
 rp AS (SELECT id1, sum(is_sig) / CAST(max(m) AS DOUBLE) AS v_rp
        FROM (SELECT *, row_number() OVER (PARTITION BY id1
-               ORDER BY sim DESC, is_sig DESC) AS rn FROM scf) x
+               ORDER BY sim DESC NULLS LAST, is_sig DESC) AS rn FROM scf) x
        WHERE rn <= m GROUP BY id1),
 level10 AS (
   SELECT a.id1, a.label1 AS {a1},

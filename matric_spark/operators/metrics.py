@@ -1,24 +1,28 @@
 """`sim_metrics` (R/sim_metrics.R:154-304) — scaled / rank / retrieval
 metrics of a signal cohort vs a background cohort, per group.
 
-Every metric is computed with windows + hash aggregates over the UNION of
-signal and background rows — no nested list-columns, no driver loops:
+matric derives every level-1_0 metric from one collated signal ∪
+background list per group; so does `sim_metrics`: ONE window pass over
+the union, partitioned once by the summary columns, then ONE groupBy on
+the same partitioning — one exchange, no join, nothing persisted:
 
-- background stats (R/sim_metrics.R:391-404): groupBy(summary).agg(mean,
-  stddev_samp)  [stddev_samp == R's n−1 `sd`; Spark aggregates skip
-  nulls, matching na.rm=TRUE].
+- background stats (R/sim_metrics.R:391-404): unordered group windows of
+  mean / stddev_samp over `when(background, sim)` [stddev_samp == R's
+  n−1 `sd`; aggregates skip nulls, matching na.rm=TRUE].
 - sim_scaled (R/sim_metrics.R:406-411): (sim − mean_bg) / sd_bg.
 - relrank (R/sim_metrics.R:623-625, NA→1 at :424-427): matric computes
   `which(sim >= bg_desc)[1] / n_bg` = (1 + #{bg > sim}) / n_bg, clamped
-  to 1 when sim < all bg. Here: a RANGE window (ORDER BY sim, peers
+  to 1 when sim < all bg. Here: an ascending RANGE window (peers
   included) counts bg ≤ sim, so #{bg > sim} = n_bg − cnt_le.
 - probrank/AP (R/sim_metrics.R:602-643): rank(sim)/n with average ties
-  is monotone in sim, so the PR curve is computed directly over distinct
-  sim values: AP = Σ_v (sig_v/m) · precision_v — yardstick's summation
-  estimator (Σ Δrecall·precision) with ties grouped at thresholds.
-- r_precision (R/sim_metrics.R:653-667): #signal in top-m by sim with
-  signal-first tie-break (bind_rows puts signal first; R's sort is
-  stable), m = #signal.
+  is monotone in sim, so the PR curve is taken over distinct sim values:
+  AP = Σ_v (sig_v/m) · tp_v/(tp_v + fp_v) — yardstick's summation
+  estimator (Σ Δrecall·precision) with ties grouped at thresholds. A
+  descending RANGE window gives tp_v/fp_v; the term sits on the first
+  row of each distinct value, with sig_v = tp_v − tp of the value above.
+- r_precision (R/sim_metrics.R:653-667): #signal among the top-m rows by
+  (sim desc, signal first on ties — bind_rows puts signal first and R's
+  sort is stable), m = #signal.
 - metric grammar (vignettes/taxonomy.Rmd:40-153, rename at
   R/sim_metrics.R:533-554): `sim_{transform}_{stat}_{background}_{id}`.
 """
@@ -27,8 +31,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-TRANSFORM_COLS = ["sim_scaled", "sim_ranked_relrank", "sim"]
 
 
 def sim_annotate(
@@ -62,7 +64,6 @@ def sim_metrics(
     signal_type: str = "rep",
     background_type: str = "non_rep",
     identifier: str = "i",
-    persist: bool = True,
 ) -> DataFrame:
     """Level-1_0 metrics table, grouped by `summary_cols` (must include
     id1 for the per-row level; pass group keys only for coarser levels).
@@ -77,109 +78,82 @@ def sim_metrics(
         "sim",
         (F.col("type") == sig).cast("int").alias("_is_sig"),
     )
+    is_sig = F.col("_is_sig") == 1
+    is_bg = 1 - F.col("_is_sig")
+    bg_sim = F.when(~is_sig, F.col("sim"))
 
     grp = Window.partitionBy(*summary_cols)
-    w_le = grp.orderBy("sim").rangeBetween(Window.unboundedPreceding, Window.currentRow)
-
-    n_sig = F.sum("_is_sig").over(grp)
-    n_bg = F.sum(1 - F.col("_is_sig")).over(grp)
-    cnt_le_bg = F.sum(1 - F.col("_is_sig")).over(w_le)
+    upto = (Window.unboundedPreceding, Window.currentRow)
+    w_asc = grp.orderBy("sim").rangeBetween(*upto)
+    w_desc = grp.orderBy(F.desc("sim")).rangeBetween(*upto)
+    # (sim desc, signal first on ties): the R-precision order; its lag
+    # finds the first row of each distinct sim value for the AP curve
+    w_rank = grp.orderBy(F.desc("sim"), F.desc("_is_sig"))
 
     scored = (
-        u.withColumn("_m", n_sig)
-        .withColumn("_n_bg", n_bg)
-        .withColumn("_cnt_le_bg", cnt_le_bg)
-    )
-
-    # groups lacking either cohort drop out (matric inner joins,
-    # R/sim_metrics.R:406-428)
-    scored = scored.filter((F.col("_m") > 0) & (F.col("_n_bg") > 0))
-
-    # `scored` feeds FOUR consumers (bg stats, per-group agg, AP curve,
-    # R-precision); without persistence each branch re-runs the whole
-    # upstream pair computation. matric materializes collated_sim the
-    # same way. MEMORY_AND_DISK: spills instead of OOM at scale.
-    if persist:
-        from pyspark import StorageLevel
-
-        scored = scored.persist(StorageLevel.MEMORY_AND_DISK)
-
-    relrank = F.coalesce(
-        F.least(
-            F.lit(1.0),
-            (1 + F.col("_n_bg") - F.col("_cnt_le_bg")) / F.col("_n_bg"),
-        ),
-        F.lit(1.0),
-    )
-    signal = scored.filter(F.col("_is_sig") == 1).withColumn(
-        "sim_ranked_relrank", relrank
-    )
-
-    # ---- background stats + z-scaling --------------------------------
-    bg_stats = (
-        scored.filter(F.col("_is_sig") == 0)
-        .groupBy(*summary_cols)
-        .agg(
-            F.mean("sim").alias("sim_mean_stat"),
-            F.stddev_samp("sim").alias("sim_sd_stat"),
+        u.select(
+            "*",
+            F.sum("_is_sig").over(grp).alias("_m"),
+            F.sum(is_bg).over(grp).alias("_n_bg"),
+            F.mean(bg_sim).over(grp).alias("_mean_bg"),
+            F.stddev_samp(bg_sim).over(grp).alias("_sd_bg"),
+            F.sum(is_bg).over(w_asc).alias("_cnt_le_bg"),
+            F.sum("_is_sig").over(w_desc).alias("_tp"),
+            F.sum(is_bg).over(w_desc).alias("_fp"),
+            F.row_number().over(w_rank).alias("_rn"),
         )
+        # groups lacking either cohort drop out (matric inner joins,
+        # R/sim_metrics.R:406-428)
+        .filter((F.col("_m") > 0) & (F.col("_n_bg") > 0))
+        .select(
+            "*",
+            F.lag("sim").over(w_rank).alias("_prev_sim"),
+            F.lag("_tp", default=0).over(w_rank).alias("_prev_tp"),
+        )
+    )
+
+    m, n_bg = F.col("_m"), F.col("_n_bg")
+    relrank = F.coalesce(
+        F.least(F.lit(1.0), (1 + n_bg - F.col("_cnt_le_bg")) / n_bg),
+        F.lit(1.0),
     )
     # sd == 0 (constant background) → NULL, matching R's NaN from
     # (x-m)/0 semantically; under ANSI mode a bare division would throw
-    signal = signal.join(bg_stats, summary_cols).withColumn(
-        "sim_scaled",
-        F.when(
-            F.col("sim_sd_stat") != 0,
-            (F.col("sim") - F.col("sim_mean_stat")) / F.col("sim_sd_stat"),
-        ),
+    scaled = F.when(
+        F.col("_sd_bg") != 0,
+        (F.col("sim") - F.col("_mean_bg")) / F.col("_sd_bg"),
+    )
+    # per-signal-row values; the output keeps this column order
+    signal_vals = {
+        "sim_scaled": scaled, "sim_ranked_relrank": relrank, "sim": F.col("sim")
+    }
+    first_of_value = (F.col("_rn") == 1) | ~F.col("sim").eqNullSafe(
+        F.col("_prev_sim")
+    )
+    sig_v = F.col("_tp") - F.col("_prev_tp")
+    ap_term = F.when(
+        first_of_value,
+        (sig_v / m) * (F.col("_tp") / (F.col("_tp") + F.col("_fp"))),
     )
 
-    per_group = signal.groupBy(*summary_cols).agg(
+    out = scored.groupBy(*summary_cols).agg(
         *[
             a
-            for c in TRANSFORM_COLS
+            for c, v in signal_vals.items()
             for a in (
-                F.mean(c).alias(f"{c}_mean"),
-                F.expr(f"percentile({c}, 0.5)").alias(f"{c}_median"),
+                F.mean(F.when(is_sig, v)).alias(f"{c}_mean"),
+                F.percentile(F.when(is_sig, v), 0.5).alias(f"{c}_median"),
             )
         ],
-        F.first("sim_mean_stat").alias("sim_mean_stat"),
-        F.first("sim_sd_stat").alias("sim_sd_stat"),
+        F.first("_mean_bg").alias("sim_mean_stat"),
+        F.first("_sd_bg").alias("sim_sd_stat"),
         F.first("_m").cast("long").alias("sim_stat_signal_n"),
         F.first("_n_bg").cast("long").alias("sim_stat_background_n"),
+        F.sum(ap_term).alias("sim_retrieval_average_precision"),
+        (F.sum(F.when(F.col("_rn") <= m, F.col("_is_sig"))) / F.first("_m")).alias(
+            "sim_retrieval_r_precision"
+        ),
     )
-
-    # ---- retrieval: AP + R-precision over the union ------------------
-    # PR curve over distinct sim thresholds (ties grouped, desc order)
-    by_val = scored.groupBy(*summary_cols, "sim").agg(
-        F.sum("_is_sig").alias("_sig_v"),
-        F.sum(1 - F.col("_is_sig")).alias("_bg_v"),
-        F.first("_m").alias("_m"),
-    )
-    w_desc = Window.partitionBy(*summary_cols).orderBy(F.desc("sim")).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    curve = by_val.withColumn("_tp", F.sum("_sig_v").over(w_desc)).withColumn(
-        "_fp", F.sum("_bg_v").over(w_desc)
-    )
-    ap = curve.groupBy(*summary_cols).agg(
-        F.sum(
-            (F.col("_sig_v") / F.col("_m"))
-            * (F.col("_tp") / (F.col("_tp") + F.col("_fp")))
-        ).alias("sim_retrieval_average_precision")
-    )
-    # R-precision: top-m rows by (sim desc, signal first on ties)
-    w_rp = Window.partitionBy(*summary_cols).orderBy(
-        F.desc("sim"), F.desc("_is_sig")
-    )
-    rp = (
-        scored.withColumn("_rn", F.row_number().over(w_rp))
-        .filter(F.col("_rn") <= F.col("_m"))
-        .groupBy(*summary_cols)
-        .agg((F.sum("_is_sig") / F.first("_m")).alias("sim_retrieval_r_precision"))
-    )
-
-    out = per_group.join(ap, summary_cols).join(rp, summary_cols)
 
     # ---- rename to the metric grammar (R/sim_metrics.R:533-554) ------
     renames: dict[str, str] = {}
@@ -226,19 +200,20 @@ def bh_adjust(df: DataFrame, p_col: str, q_col: str = "q_value") -> DataFrame:
     table through ONE task. Its only callers are metric-level tables
     (level-1_0 has one row per (row, group)), never raw-data scale."""
     n = Window.partitionBy()
-    w_rank = Window.orderBy(p_col)
+    # rank = #{j: p_j <= p_i}: the max row_number among ties = R's
+    # p.adjust behavior (it sorts and divides by the index; ties get the
+    # same q after the cummin)
+    w_rank = Window.orderBy(p_col).rangeBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
     w_rev = Window.orderBy(F.desc(p_col)).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
-    # max row_number among ties = R's p.adjust behavior (it sorts and
-    # divides by the index; ties get the same q after the cummin)
-    with_rank = (
-        df.withColumn("_rn", F.row_number().over(w_rank))
-        .withColumn("_rank", F.max("_rn").over(Window.partitionBy(p_col)))
-        .withColumn("_n", F.count(F.lit(1)).over(n))
+    with_rank = df.withColumn("_rank", F.count(F.lit(1)).over(w_rank)).withColumn(
+        "_n", F.count(F.lit(1)).over(n)
     )
     q = F.least(
         F.lit(1.0),
         F.min(F.col(p_col) * F.col("_n") / F.col("_rank")).over(w_rev),
     )
-    return with_rank.withColumn(q_col, q).drop("_rn", "_n", "_rank")
+    return with_rank.withColumn(q_col, q).drop("_n", "_rank")

@@ -287,15 +287,20 @@ def test_kendall_pair_join_is_keyed_not_cartesian(spark):
 
 
 def test_metrics_reuses_exchange_across_branches(spark):
-    """sim_metrics' four consumers must reuse the persisted/exchanged
-    scored relation, not recompute the pair pipeline per branch."""
+    """sim_metrics is ONE window pass and ONE groupBy over a single
+    hash partitioning on the summary columns: every metric reads the
+    same exchange, so no branch can recompute the pair pipeline, and
+    nothing is joined back or held in a cache."""
     from matric_spark.operators.metrics import sim_metrics
 
     rows = [(1, i, "rep" if i % 3 else "non_rep", float(i % 7)) for i in range(60)]
     df = spark.createDataFrame(rows, "id1 int, id2 int, type string, sim double")
     out = sim_metrics(df, ["id1"])
     p = plan(out)
-    assert ("InMemoryTableScan" in p) or ("ReusedExchange" in p)
+    assert p.count("(Exchange") + p.count("- Exchange") == 1
+    assert "hashpartitioning(id1#" in p
+    assert "Join" not in p
+    assert "InMemoryTableScan" not in p
 
 
 def test_asof_join_is_single_shuffle_no_join(spark):

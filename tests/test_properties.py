@@ -27,7 +27,7 @@ def test_metric_invariants(spark, sig, bg):
         (1, 1000 + i, "non_rep", float(b)) for i, b in enumerate(bg)
     ]
     df = spark.createDataFrame(rows, "id1 int, id2 int, type string, sim double")
-    out = sim_metrics(df, ["id1"], persist=False).collect()
+    out = sim_metrics(df, ["id1"]).collect()
     assert len(out) == 1
     r = out[0]
     rel = r["sim_ranked_relrank_mean_non_rep_i"]

@@ -409,6 +409,90 @@ def test_relrank_below_background_clamps_to_one(spark):
     assert r["sim_ranked_relrank_mean_non_rep_i"] == pytest.approx(1.0)
 
 
+def test_sim_metrics_degenerate_groups_match_oracle(spark):
+    """Level-1_0 metrics on Spark and in the DuckDB CTE chain
+    (`duck_oracle._metrics_core`) agree bit-for-bit after 6-dp rounding
+    on one fixture of degenerate groups. Group 1 is the only check of
+    AP's per-value grouping with sig_v > 1 against the oracle. Group 5
+    pins the null order of the relrank window: `attach_sim` leaves sim
+    NULL for a zero-norm vector, Spark's ascending window puts it FIRST
+    (relrank mean 0.833333), DuckDB's default would put it last
+    (0.666667)."""
+    import struct
+
+    import duckdb
+
+    from matric_spark.duck_oracle import LEVEL10_METRIC_COLS, _metrics_core
+    from matric_spark.operators.metrics import sim_annotate, sim_metrics
+
+    groups = {
+        # tied signal sims (0.9 twice) and a signal/background tie (0.5);
+        # the 'ref' row is outside both cohorts
+        1: [("rep", 0.9), ("rep", 0.9), ("rep", 0.5), ("non_rep", 0.5),
+            ("non_rep", 0.3), ("non_rep", 0.1), ("ref", 0.95)],
+        # constant background: sd 0, so sim_scaled is NULL
+        2: [("rep", 0.7), ("rep", 0.4), ("non_rep", 0.2), ("non_rep", 0.2)],
+        # a single background row: sd NULL
+        3: [("rep", 0.6), ("rep", 0.1), ("non_rep", 0.3)],
+        # no background: the group drops out
+        4: [("rep", 0.8), ("rep", 0.2)],
+        # NULL sims in both cohorts
+        5: [("rep", None), ("rep", 0.5), ("non_rep", None),
+            ("non_rep", 0.2), ("non_rep", 0.7)],
+    }
+    sims = [
+        (id1, 100 + i, t, s)
+        for i, (id1, (t, s)) in enumerate(
+            (g, r) for g, rows in groups.items() for r in rows
+        )
+    ]
+    pop = [(i, i % 3) for i in [*groups, *(r[1] for r in sims)]]
+
+    dbl = [c for c in LEVEL10_METRIC_COLS if not c.startswith("sim_stat_")]
+    out = sim_metrics(
+        sim_annotate(
+            spark.createDataFrame(sims, "id1 long, id2 long, type string, sim double"),
+            spark.createDataFrame(pop, "id long, label long"),
+            ["label"],
+        ),
+        ["id1", "label1"],
+    )
+    got = sorted(
+        out.select(
+            "id1",
+            "label1",
+            *[(F.round(c, 6) + F.lit(0.0)).alias(c) if c in dbl else c
+              for c in LEVEL10_METRIC_COLS],
+        ).collect()
+    )
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE sims (id1 BIGINT, id2 BIGINT, type VARCHAR, sim DOUBLE)")
+    con.executemany("INSERT INTO sims VALUES (?, ?, ?, ?)", sims)
+    con.execute("CREATE TABLE pop (id BIGINT, label BIGINT)")
+    con.executemany("INSERT INTO pop VALUES (?, ?)", pop)
+    rounded = ", ".join(
+        f"(round({c}, 6) + 0) AS {c}" if c in dbl else c for c in LEVEL10_METRIC_COLS
+    )
+    want = sorted(
+        con.execute(
+            f"WITH {_metrics_core()}\nSELECT id1, label1, {rounded} FROM level10"
+        ).fetchall()
+    )
+
+    def bits(v):
+        return struct.pack("<d", v) if isinstance(v, float) else v
+
+    assert [r[0] for r in got] == [r[0] for r in want] == [1, 2, 3, 5]
+    for g, w in zip(got, want):
+        for c, a, b in zip(["id1", "label1", *LEVEL10_METRIC_COLS], g, w):
+            assert bits(a) == bits(b), (g[0], c, a, b)
+    by_id = {r.id1: r for r in got}
+    assert by_id[2]["sim_scaled_mean_non_rep_i"] is None
+    assert by_id[3]["sim_sd_stat_non_rep_i"] is None
+    assert by_id[5]["sim_ranked_relrank_mean_non_rep_i"] == pytest.approx(5 / 6)
+
+
 def test_bh_adjust(spark):
     from matric_spark.operators.metrics import bh_adjust
 

@@ -209,25 +209,31 @@ def check_one(name: str, fn, spark, con, sf_dir: str, oracle: str | None) -> boo
     """Run one queries() entry on Spark and check it: with its SPECIAL
     oracle if it has one, else against `oracle` (its oracle_sql() twin)
     on DuckDB; a rows-only entry (oracle None) only has to execute.
-    Prints one report line; returns False on a failed check."""
+    Prints one report line, which carries the first 16 hex digits of the
+    Spark rows' `frame_hash` (so two runs diff row-for-row); returns
+    False on a failed check."""
     t0 = time.time()
     sp = fn(spark, sf_dir).toPandas()
     spark.catalog.clearCache()  # release per-query persist()s
     t1 = time.time()
+    h = f"spark#{frame_hash(canon(sp))[:16]}"
     if name in SPECIAL:
         kind, fn_check = SPECIAL[name]
         good = fn_check(sp, con)
         print(
             f"{'PASS' if good else 'FAIL'} {name} ({kind}): "
-            f"{len(sp)} rows, {t1-t0:.1f}s"
+            f"{len(sp)} rows {h}, {t1-t0:.1f}s"
         )
         return good
     if oracle is None:
-        print(f"  [{name}] no oracle (rows-only): {len(sp)} rows, {t1-t0:.1f}s")
+        print(f"  [{name}] no oracle (rows-only): {len(sp)} rows {h}, {t1-t0:.1f}s")
         return True
     dk = con.execute(oracle).fetch_df()
     good = compare(name, sp, dk)
-    print(f"{'PASS' if good else 'FAIL'} {name}: {len(sp)} rows  spark={t1-t0:.1f}s duck={time.time()-t1:.1f}s")
+    print(
+        f"{'PASS' if good else 'FAIL'} {name}: {len(sp)} rows {h}  "
+        f"spark={t1-t0:.1f}s duck={time.time()-t1:.1f}s"
+    )
     return good
 
 
