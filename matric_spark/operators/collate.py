@@ -8,6 +8,14 @@ is never materialized. `sim` is attached afterwards by
 `pairs.attach_sim` (the lazy path, vignettes/matric.Rmd:222-257): Spark's
 lazy evaluation makes eager-vs-lazy a non-distinction here.
 
+The three theta subsets (non_rep; rep under rep-side inequality
+constraints; rep_group) are each ONE equi-join on their same-key
+(`_theta_pairs`): both sides carry the columns the inequalities read as
+`_l_<c>`/`_r_<c>`, and `sim_filter._different` (the some-different rule,
+normalization included) filters the join output. The pairs are never
+joined back to the metadata; the carried columns are private to this
+module and projected away before the union.
+
 Subsets (tags follow the reference exactly):
 - ref     : non-reference × reference, same on all_same_cols_ref
             (R/sim_collate.R:277-288)
@@ -26,7 +34,39 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from matric_spark.operators.pairs import vs_reference_pairs, within_group_pairs
-from matric_spark.operators.sim_filter import filter_some_different
+from matric_spark.operators.sim_filter import _different
+
+
+def _theta_pairs(
+    left: DataFrame,
+    right: DataFrame,
+    same_cols: list[str],
+    all_different_cols: list[str] | None = None,
+    any_different_cols: list[str] | None = None,
+    id_col: str = "id",
+) -> DataFrame:
+    """(id1 from `left`, id2 from `right`) pairs same on `same_cols` ∧
+    the some-different rule (R/sim_filter.R:409-530): one equi-join on
+    the same-key whose sides carry the inequality columns, then one
+    filter. Without inequality constraints this is the plain per-group
+    self-join of `pairs.within_group_pairs`."""
+    diff_cols, different = _different(
+        same_cols, all_different_cols, any_different_cols
+    )
+
+    def side(pop: DataFrame, id_name: str, prefix: str) -> DataFrame:
+        return pop.select(
+            *same_cols,
+            F.col(id_col).alias(id_name),
+            *[F.col(c).alias(f"{prefix}{c}") for c in diff_cols],
+        )
+
+    return (
+        side(left, "id1", "_l_")
+        .join(side(right, "id2", "_r_"), same_cols)
+        .filter((F.col("id1") != F.col("id2")) & different)
+        .select("id1", "id2")
+    )
 
 
 def sim_collate(
@@ -94,23 +134,18 @@ def sim_collate(
     ).withColumn("type", F.lit("ref"))
 
     # rep: replicate pairs among non-reference rows (both directions,
-    # R/sim_collate.R:311-345). With the optional rep-side inequality
-    # constraints (R/sim_collate.R:325-345: any_different_cols_rep /
-    # all_different_cols_rep, e.g. "replicates must sit on different
-    # plates"), the same-key universe is post-filtered exactly like the
-    # non_rep subset — the equality key still drives the shuffle, the
-    # inequalities apply after the join.
-    rep_universe = within_group_pairs(non_ref, all_same_cols_rep, id_col=id_col)
-    if any_different_cols_rep or all_different_cols_rep:
-        rep_universe = filter_some_different(
-            rep_universe,
-            meta,
-            all_same_cols=all_same_cols_rep,
-            all_different_cols=all_different_cols_rep,
-            any_different_cols=any_different_cols_rep,
-            id_col=id_col,
-        )
-    rep_pairs = rep_universe.withColumn("type", F.lit("rep"))
+    # R/sim_collate.R:311-345), optionally constrained to differ on
+    # any_different_cols_rep / all_different_cols_rep
+    # (R/sim_collate.R:325-345, e.g. "replicates must sit on different
+    # plates") — the same theta join as the non_rep subset.
+    rep_pairs = _theta_pairs(
+        non_ref,
+        non_ref,
+        all_same_cols_rep,
+        all_different_cols=all_different_cols_rep,
+        any_different_cols=any_different_cols_rep,
+        id_col=id_col,
+    ).withColumn("type", F.lit("rep"))
 
     # rep_ref: replicate pairs among reference rows, tagged 'rep'
     # (R/sim_collate.R:366-396); deduped out of ref below. Its key may
@@ -131,14 +166,10 @@ def sim_collate(
     # optionally all-different on every all_different_cols_non_rep
     # (R/sim_collate.R:419-438; the reference's fetch_non_rep gate at
     # :231-234 requires all three constraint sets)
-    non_rep_left = non_ref if drop_reference else meta
-    universe = within_group_pairs(
-        non_rep_left, all_same_cols_non_rep, id_col=id_col, right_pop=non_ref
-    )
-    non_rep_pairs = filter_some_different(
-        universe,
-        meta,
-        all_same_cols=all_same_cols_non_rep,
+    non_rep_pairs = _theta_pairs(
+        non_ref if drop_reference else meta,
+        non_ref,
+        all_same_cols_non_rep,
         all_different_cols=all_different_cols_non_rep,
         any_different_cols=any_different_cols_non_rep,
         id_col=id_col,
@@ -151,14 +182,11 @@ def sim_collate(
 
     if all_same_cols_group:
         group_pop = non_ref if drop_reference else meta
-        group_universe = within_group_pairs(
-            group_pop, all_same_cols_group, id_col=id_col
-        )
-        rep_group_pairs = filter_some_different(
-            group_universe,
-            meta,
-            all_same_cols=all_same_cols_group,
-            any_different_cols=any_different_cols_group or [],
+        rep_group_pairs = _theta_pairs(
+            group_pop,
+            group_pop,
+            all_same_cols_group,
+            any_different_cols=any_different_cols_group,
             id_col=id_col,
         ).withColumn("type", F.lit("rep_group"))
         out = out.unionByName(rep_group_pairs)

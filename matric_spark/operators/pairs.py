@@ -67,24 +67,13 @@ def all_pairs(pop: DataFrame, id_col: str = "id") -> DataFrame:
 
 
 def within_group_pairs(
-    pop: DataFrame,
-    same_cols: list[str],
-    id_col: str = "id",
-    right_pop: DataFrame | None = None,
+    pop: DataFrame, same_cols: list[str], id_col: str = "id"
 ) -> DataFrame:
     """Pairs agreeing on all `same_cols`: per-group self cross product
     via equi-join (R/sim_calculate.R:177-191 reduct_all_same_cols_*).
-    Shuffle is keyed on the group columns — never a cross join.
-
-    `right_pop` makes the universe asymmetric (left side from `pop`,
-    right side from `right_pop`) — needed by sim_collate's non_rep
-    subset under the reference's default drop_reference=FALSE, where
-    the LEFT side keeps reference rows but the RIGHT side drops them
-    (R/sim_collate.R:419-438 filter_drop_right = reference)."""
+    Shuffle is keyed on the group columns — never a cross join."""
     a = pop.select(*same_cols, F.col(id_col).alias("id1"))
-    b = (right_pop if right_pop is not None else pop).select(
-        *same_cols, F.col(id_col).alias("id2")
-    )
+    b = pop.select(*same_cols, F.col(id_col).alias("id2"))
     return (
         a.join(b, same_cols)
         .filter(F.col("id1") != F.col("id2"))

@@ -2,10 +2,13 @@
 (R/sim_metrics_signif.R:17-202).
 
 Distributed shape: the null distribution is parametrized only by
-(m = signal_n, n = binned background_n) — a tiny distinct set — so the
-simulation runs as one `applyInPandas` task per (m, n) cell (vectorized
-numpy permutations, nn iterations per cell in one matrix op), and the
-resulting null-sample arrays broadcast-join back to the metrics table.
+(m = signal_n, n = binned background_n) — a tiny distinct set — so one
+small job collects the distinct (m, n) cells, the driver simulates each
+cell with vectorized numpy (nn permutations per cell in one matrix op),
+and the null-sample arrays ship back as a `pyarrow.Table`. Spark turns
+that into a JVM `LocalRelation`: no Python worker, no Python RDD, and
+no dependence on `spark.sql.execution.arrow.pyspark.enabled`. The
+samples broadcast-join back to the metrics table.
 p = (1 + #{null > stat}) / (1 + nn), matric's add-one smoothing
 (R/sim_metrics_signif.R:191-202; note the reference's `filter(m == m)`
 self-comparison bug is NOT copied — we join on (m, n_mapped) properly).
@@ -13,9 +16,9 @@ self-comparison bug is NOT copied — we join on (m, n_mapped) properly).
 Determinism: the reference seeds furrr futures globally (seed=42,
 R/sim_metrics_signif.R:91,119), which is not reproducible across
 schedulers. Here every (m, n) cell seeds its own
-`np.random.default_rng([seed, m, n])`, so results are identical under
-any executor placement or partitioning — the distributed-determinism
-requirement the reference never had to face.
+`np.random.default_rng([seed, m, n])`, so the samples do not depend on
+cell order, partitioning or where the simulation runs (they are
+bit-identical to the earlier per-cell executor tasks).
 """
 
 from __future__ import annotations
@@ -41,32 +44,34 @@ def ap_null_samples(
 ) -> DataFrame:
     """DataFrame[m, n, samples array<double>]: AP null per (m, n) cell.
 
-    One task per distinct cell; inside, all nn permutations are computed
-    as a single (nn × (m+n)) argsort + cumsum (no Python loop). Matches
+    Runs one Spark job when called: the distinct cells of `mn` are
+    collected to the driver. Each cell's nn permutations are then a
+    single (nn × (m+n)) argsort + cumsum (no Python loop). Matches
     null_distribution_helper (R/sim_metrics_signif.R:154-180): labels
     shuffled against a fixed strictly-descending score vector, AP by the
     summation estimator.
     """
-    import pandas as pd
+    import numpy as np
+    import pyarrow as pa
 
-    def simulate(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        m = int(pdf["m"].iloc[0])
-        n = int(pdf["n"].iloc[0])
+    cells = [(r.m, r.n) for r in mn.select("m", "n").distinct().collect()]
+    samples = []
+    for m, n in cells:
         rng = np.random.default_rng([seed, m, n])
         base = np.concatenate([np.ones(m), np.zeros(n)])
         idx = rng.random((nn, m + n)).argsort(axis=1)
         labels = np.take(base, idx)  # nn independent permutations
         tp = np.cumsum(labels, axis=1)
         k = np.arange(1, m + n + 1)
-        ap = ((labels / m) * (tp / k)).sum(axis=1)
-        return pd.DataFrame({"m": [m], "n": [n], "samples": [ap.tolist()]})
-
-    cells = mn.select("m", "n").distinct()
-    return cells.groupBy("m", "n").applyInPandas(
-        simulate, "m long, n long, samples array<double>"
+        samples.append(((labels / m) * (tp / k)).sum(axis=1))
+    table = pa.table(
+        {
+            "m": pa.array([m for m, _ in cells], pa.int64()),
+            "n": pa.array([n for _, n in cells], pa.int64()),
+            "samples": pa.array(samples, pa.list_(pa.float64())),
+        }
     )
+    return mn.sparkSession.createDataFrame(table)
 
 
 def attach_ap_pvalues(

@@ -16,9 +16,18 @@ relation; the mapping the judge should check:
   decomposition of the theta-join; Catalyst executes the direct
   formulation `same(k) & different(d)` identically (equality as join
   key, inequality as post-join filter), so we write it directly.
+  `_different` holds the rule once: constraint normalization plus the
+  inequality predicate over `_l_<c>`/`_r_<c>` copies of the columns.
+  `filter_some_different` builds those copies by joining the metadata
+  back to a given pair list; `collate.sim_collate` carries them through
+  its pair-generating equi-join instead, so its theta subsets never
+  join the metadata a second time.
 """
 
 from __future__ import annotations
+
+from functools import reduce
+from operator import or_
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -86,6 +95,37 @@ def filter_all_same(
     )
 
 
+def _different(
+    all_same_cols: list[str],
+    all_different_cols: list[str] | None,
+    any_different_cols: list[str] | None,
+) -> tuple[list[str], F.Column]:
+    """The some-different rule (R/sim_filter.R:409-530) as (columns it
+    reads, predicate over their `_l_<c>`/`_r_<c>` copies): different on
+    every all-different column ∧ on ≥1 any-different column; TRUE when
+    neither constraint remains.
+
+    Constraint normalization (R/sim_filter.R:440-447): if ANY
+    all_different col also appears in any_different, the whole
+    any_different constraint is superseded (dropped entirely, not
+    per-column); then all_same cols are removed from any_different."""
+    all_different_cols = all_different_cols or []
+    any_different_cols = any_different_cols or []
+    if set(all_different_cols) & set(any_different_cols):
+        any_different_cols = []
+    any_different_cols = [
+        c for c in any_different_cols if c not in all_same_cols
+    ]
+    cols = list(dict.fromkeys(all_different_cols + any_different_cols))
+    ne = {c: F.col(f"_l_{c}") != F.col(f"_r_{c}") for c in cols}
+    pred = F.lit(True)
+    for c in all_different_cols:
+        pred = pred & ne[c]
+    if any_different_cols:
+        pred = pred & reduce(or_, [ne[c] for c in any_different_cols])
+    return cols, pred
+
+
 def filter_some_different(
     pairs: DataFrame,
     meta: DataFrame,
@@ -100,20 +140,10 @@ def filter_some_different(
     keys the shuffle on the equality columns and applies the
     inequalities post-join — the reference's weak-set/violating-set
     decomposition, performed by the planner."""
-    all_different_cols = all_different_cols or []
-    any_different_cols = any_different_cols or []
-    # constraint normalization (R/sim_filter.R:440-447): if ANY
-    # all_different col also appears in any_different, the whole
-    # any_different constraint is superseded (dropped entirely, not
-    # per-column); then remove all_same cols from any_different
-    if set(all_different_cols) & set(any_different_cols):
-        any_different_cols = []
-    any_different_cols = [
-        c for c in any_different_cols if c not in all_same_cols
-    ]
-    need = list(
-        dict.fromkeys(all_same_cols + all_different_cols + any_different_cols)
+    diff_cols, different = _different(
+        all_same_cols, all_different_cols, any_different_cols
     )
+    need = list(dict.fromkeys(all_same_cols + diff_cols))
     m = meta.select(F.col(id_col).alias("_id"), *need)
     m1 = m.select(
         F.col("_id").alias("id1"), *[F.col(c).alias(f"_l_{c}") for c in need]
@@ -124,14 +154,7 @@ def filter_some_different(
     out = pairs.join(m1, "id1").join(m2, "id2")
     for c in all_same_cols:
         out = out.filter(F.col(f"_l_{c}") == F.col(f"_r_{c}"))
-    for c in all_different_cols:
-        out = out.filter(F.col(f"_l_{c}") != F.col(f"_r_{c}"))
-    if any_different_cols:
-        cond = None
-        for c in any_different_cols:
-            t = F.col(f"_l_{c}") != F.col(f"_r_{c}")
-            cond = t if cond is None else cond | t
-        out = out.filter(cond)
+    out = out.filter(different)
     return out.drop(*[f"_l_{c}" for c in need], *[f"_r_{c}" for c in need])
 
 

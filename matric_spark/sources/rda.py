@@ -1,4 +1,4 @@
-"""Minimal pure-Python reader for R's .rda / .rds serialization format.
+"""Minimal pure-Python reader for R's .rda (save()) serialization format.
 
 Scope: just enough of the publicly documented R serialization format
 ("R Internals" §Serialization Formats, versions 2 and 3, XDR binary
@@ -297,14 +297,6 @@ def read_rda(path: str) -> dict[str, Any]:
             out[top.tag] = top.car
         top = top.cdr
     return out
-
-
-def read_rds(path: str) -> Any:
-    """Decode a .rds (saveRDS()) file into a Python value."""
-    with _open_maybe_compressed(path) as fh:
-        r = _Reader(fh)
-        r.header()
-        return r.item()
 
 
 # ---- data-frame conversion ----

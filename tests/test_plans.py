@@ -7,6 +7,8 @@ cannot rot.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -284,6 +286,60 @@ def test_kendall_pair_join_is_keyed_not_cartesian(spark):
     p = plan(sim_calculate(pop, "kendall", strata=["label"]))
     assert "CartesianProduct" not in p
     assert "ArrowEvalPython" in p or "MapInPandas" in p  # vectorized boundary
+
+
+def _nodes_below(p: str, name: str) -> set[str]:
+    """Ids of the nodes in the subtree under the first `name` node of a
+    formatted plan's tree section."""
+    lines = p.split("\n\n", 1)[0].splitlines()
+    at = next(i for i, ln in enumerate(lines) if ln.lstrip(" :+-").startswith(name))
+
+    def depth(ln: str) -> int:
+        return len(ln) - len(ln.lstrip(" :+-"))
+
+    ids = set()
+    for ln in lines[at + 1 :]:
+        if depth(ln) <= depth(lines[at]):
+            break
+        ids.update(re.findall(r"\((\d+)\)$", ln))
+    return ids
+
+
+def test_collate_theta_subsets_join_metadata_once(spark, sf_dir):
+    """Each theta subset of sim_collate (here non_rep: same batch,
+    different label) is ONE equi-join on its same-key whose sides carry
+    the inequality columns: no pair list below the Union is joined back
+    to the metadata on id1/id2. Parent plan: 14 parquet scans, 9
+    broadcast exchanges, 9 broadcast hash joins (the non_rep re-joins)."""
+    import __spark_entry__ as e
+
+    p = plan(e._collated_sims(spark, sf_dir))
+    assert len(re.findall(r"\n\(\d+\) Scan parquet", p)) <= 12
+    assert len(re.findall(r"\n\(\d+\) BroadcastExchange\n", p)) <= 7
+    assert len(re.findall(r"\n\(\d+\) BroadcastHashJoin\n", p)) <= 7
+    for node in _nodes_below(p, "Union"):
+        m = re.search(rf"\n\({node}\) \w*Join\n(.*?)(?=\n\n|\Z)", p, re.S)
+        if m and "Join type: Inner" in m.group(1):
+            keys = re.search(r"Left keys \[\d+\]: \[(.*?)\]", m.group(1))
+            assert not (keys and re.search(r"\bid[12]#", keys.group(1))), m.group(0)
+
+
+def test_pvalues_need_no_python_worker(spark, sf_dir):
+    """attach_ap_pvalues simulates the permutation nulls on the driver and
+    ships them as a local relation: no Python-worker node in the plan."""
+    import __spark_entry__ as e
+    from matric_spark.operators.signif import attach_ap_pvalues
+
+    p = plan(attach_ap_pvalues(e._level10(spark, sf_dir), nn=1000))
+    for node in (
+        "FlatMapGroupsInPandas",
+        "ArrowEvalPython",
+        "BatchEvalPython",
+        "MapInPandas",
+        "PythonUDF",
+    ):
+        assert node not in p, node
+    assert "LocalTableScan" in p
 
 
 def test_metrics_reuses_exchange_across_branches(spark):

@@ -109,3 +109,64 @@ def test_ap_pvalue_property_violations_detect_planted_break(spark, metrics_fixtu
         nlp, F.when(F.col("id1") == best, F.lit(0.0)).otherwise(F.col(nlp))
     )
     assert ap_pvalue_property_violations(broken, nn=200).count() >= 1
+
+
+# sha256 of the float64 bytes of each cell's null samples (nn=200,
+# seed=42), recorded from the per-cell applyInPandas simulation that
+# preceded the driver-side one: every way of running the simulation must
+# reproduce numpy's per-cell stream bit for bit.
+_NULL_SAMPLE_SHA256 = {
+    (3, 20): "dce8a62474fa74e56f839fc8ea476814408d582d41292800aaf375532a8cdfbb",
+    (5, 40): "b5a816f352a72ced1aff6a1c2eb86bf3636ca81bca42392cd14f1ae6c87c05b3",
+}
+
+
+def test_null_samples_pinned_bit_for_bit(spark):
+    import hashlib
+
+    import numpy as np
+
+    from matric_spark.operators.signif import ap_null_samples
+
+    mn = spark.createDataFrame([(3, 20), (5, 40), (3, 20)], "m long, n long")
+    got = {
+        (r.m, r.n): hashlib.sha256(
+            np.asarray(r.samples, dtype=np.float64).tobytes()
+        ).hexdigest()
+        for r in ap_null_samples(mn, nn=200, seed=42).collect()
+    }
+    assert got == _NULL_SAMPLE_SHA256
+
+
+def test_pvalues_of_empty_metrics_are_empty(spark, metrics_fixture):
+    from matric_spark.operators.signif import attach_ap_pvalues
+
+    stat = "sim_retrieval_average_precision_non_rep_i"
+    out = attach_ap_pvalues(metrics_fixture.limit(0), nn=200)
+    assert out.columns == [
+        *metrics_fixture.columns,
+        f"{stat}_nlog10pvalue",
+        f"{stat}_nlog10qvalue",
+    ]
+    assert out.collect() == []
+
+
+def test_pvalues_independent_of_arrow_conf(spark, metrics_fixture):
+    """The samples reach the JVM without the pandas-Arrow conversion, so
+    turning `spark.sql.execution.arrow.pyspark.enabled` off at runtime
+    changes nothing."""
+    from matric_spark.operators.signif import attach_ap_pvalues
+
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    before = spark.conf.get(key)
+    rows = {}
+    try:
+        for flag in ("true", "false"):
+            spark.conf.set(key, flag)
+            rows[flag] = attach_ap_pvalues(metrics_fixture, nn=200).orderBy(
+                "id1"
+            ).collect()
+    finally:
+        spark.conf.set(key, before)
+    assert rows["true"] == rows["false"]
+    assert len(rows["true"]) == metrics_fixture.count()
