@@ -21,6 +21,6 @@ Semantics lineage (reference, cited per function):
 """
 
 from matric_spark.checks.column_stats import column_stats  # noqa: F401
-from matric_spark.checks.uniqueness import duplicate_keys, uniqueness_violations  # noqa: F401
+from matric_spark.checks.uniqueness import duplicate_keys  # noqa: F401
 from matric_spark.checks.sequence import conversation_shape, out_of_order_turns  # noqa: F401
 from matric_spark.checks.drift import drift_by_partition  # noqa: F401

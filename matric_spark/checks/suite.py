@@ -41,8 +41,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from matric_spark.checks.drift import counts_sketch, drift_by_partition, opaque_eq
-from matric_spark.checks.sequence import out_of_order_turns, preceding_max_ts_window
-from matric_spark.checks.uniqueness import uniqueness_violations
+from matric_spark.checks.sequence import preceding_max_ts_window
 from matric_spark.schema import DEFAULT_ROLE_DOMAIN, DEFAULT_TOOL_DOMAIN, TRANSCRIPT_KEY
 
 VERDICT_COLUMNS = ["part", "check_id", "metric", "status"]
@@ -277,12 +276,14 @@ def _extended_rows(
 def run_violations(df: DataFrame, cfg: SuiteConfig | None = None) -> dict[str, DataFrame]:
     """Materialized violation rows per row check (matric's anti-join
     rows, R/sim_construct-validate.R:69-78), one set per ROW_CHECKS
-    entry. The four row-local sets are scan filters on the very flags
-    the verdicts count (`row_local_flags`), so each set has exactly as
-    many rows as its verdicts sum to, NULLs included."""
+    entry, each a filter on the very flag the verdicts count, so each set
+    has exactly as many rows as its verdicts sum to, NULLs included. The
+    four row-local sets are scan filters (`row_local_flags`); uniqueness
+    and seq_order filter the flag pass (`check_flags`), whose one conv_id
+    exchange serves both."""
     cfg = cfg or SuiteConfig()
+    flags = check_flags(df, cfg, df.columns)
     return {
         **{c: df.filter(flag) for c, flag in row_local_flags(cfg).items()},
-        "uniqueness": uniqueness_violations(df, cfg.key),
-        "seq_order": out_of_order_turns(df),
+        **{c: flags.filter(c).select(*df.columns) for c in ("uniqueness", "seq_order")},
     }

@@ -3,14 +3,20 @@
 Reference lineage: matric deduplicates pairs before fan-out joins
 (``distinct`` at R/sim_calculate.R:293-299 and :396-399) because duplicate
 keys multiply downstream inner joins. Here uniqueness on
-``(conv_id, turn_idx)`` is a first-class constraint with materialized
-violation rows.
+``(conv_id, turn_idx)`` is a first-class constraint with two outputs:
+
+- the duplicate KEYS with their counts (``duplicate_keys``, the
+  ``uniqueness_keys`` query): hash-first, because almost every key is
+  unique and an 8-byte hash aggregates faster than the string key;
+- the violating ROWS (``suite.run_violations["uniqueness"]``): a filter on
+  the uniqueness flag of the verdicts' own flag pass (``suite.check_flags``),
+  so the rows are the ones the verdict counts, with no hash and no join.
 
 Skew: Spark's hash aggregate is two-phase, so a hot key reaches its final
 reducer as at most one partial count per input split (tests/test_skew.py
 pins a 500× hot key).
 
-NULL-key semantics (uniform across every function here, pinned by
+NULL-key semantics (uniform across both outputs, pinned by
 tests/test_checks.py::test_uniqueness_null_keys_excluded): rows with a
 NULL in ANY key column are EXCLUDED from uniqueness accounting. Rationale:
 SQL equality never matches NULLs (the verdict oracle's ``JOIN dupk
@@ -62,12 +68,3 @@ def duplicate_keys(df: DataFrame, key: list[str]) -> DataFrame:
     counts = hits.groupBy(*key).agg(F.count(F.lit(1)).alias("n_dup"))
     return counts.filter(F.col("n_dup") > 1)
 
-
-def uniqueness_violations(df: DataFrame, key: list[str]) -> DataFrame:
-    """Materialized violating rows: every input row whose key collides.
-
-    left_semi join against the duplicate-key set; with few violations AQE
-    converts this to a broadcast semi-join at runtime.
-    """
-    dups = duplicate_keys(df, key)
-    return df.join(dups.select(*key), on=key, how="left_semi")

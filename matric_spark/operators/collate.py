@@ -2,19 +2,25 @@
 and union them with a `type` discriminator.
 
 Spark formulation: each subset is generated directly as a per-group
-self-join / broadcast-reference join over the METADATA relation (the
-optimized pair-gen path, R/sim_calculate.R:162-301) — the N² pair space
-is never materialized. `sim` is attached afterwards by
-`pairs.attach_sim` (the lazy path, vignettes/matric.Rmd:222-257): Spark's
-lazy evaluation makes eager-vs-lazy a non-distinction here.
+join over the METADATA relation (the optimized pair-gen path,
+R/sim_calculate.R:162-301) — the N² pair space is never materialized.
+`sim` is attached afterwards by `pairs.attach_sim` (the lazy path,
+vignettes/matric.Rmd:222-257): Spark's lazy evaluation makes
+eager-vs-lazy a non-distinction here.
 
-The three theta subsets (non_rep; rep under rep-side inequality
-constraints; rep_group) are each ONE equi-join on their same-key
-(`_theta_pairs`): both sides carry the columns the inequalities read as
-`_l_<c>`/`_r_<c>`, and `sim_filter._different` (the some-different rule,
-normalization included) filters the join output. The pairs are never
-joined back to the metadata; the carried columns are private to this
-module and projected away before the union.
+Every subset comes from ONE pair builder, `pairs.within_group_pairs`:
+one equi-join on the subset's same-key whose sides carry, as
+`_l_<c>`/`_r_<c>`, the columns its pair rule reads, then one filter. The
+pairs are never joined back to the metadata or to each other.
+- The theta subsets (non_rep; rep under rep-side inequality
+  constraints; rep_group) filter by `sim_filter._different`, the
+  some-different rule with its normalization.
+- `ref` joins the broadcast reference side and drops its `rep_ref`
+  pairs in the same filter: keep a pair unless its left row is a
+  reference row (`coalesce(reference, false)`) AND every rep_ref key
+  column has `coalesce(l = r, false)`. That is the set matric's
+  anti-join keeps (R/sim_collate.R:387-395), NULLs included: a NULL key
+  or a NULL reference flag never made a rep_ref pair.
 
 Subsets (tags follow the reference exactly):
 - ref     : non-reference × reference, same on all_same_cols_ref
@@ -30,43 +36,14 @@ Subsets (tags follow the reference exactly):
 
 from __future__ import annotations
 
+from functools import reduce
+from operator import and_
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from matric_spark.operators.pairs import vs_reference_pairs, within_group_pairs
+from matric_spark.operators.pairs import within_group_pairs
 from matric_spark.operators.sim_filter import _different
-
-
-def _theta_pairs(
-    left: DataFrame,
-    right: DataFrame,
-    same_cols: list[str],
-    all_different_cols: list[str] | None = None,
-    any_different_cols: list[str] | None = None,
-    id_col: str = "id",
-) -> DataFrame:
-    """(id1 from `left`, id2 from `right`) pairs same on `same_cols` ∧
-    the some-different rule (R/sim_filter.R:409-530): one equi-join on
-    the same-key whose sides carry the inequality columns, then one
-    filter. Without inequality constraints this is the plain per-group
-    self-join of `pairs.within_group_pairs`."""
-    diff_cols, different = _different(
-        same_cols, all_different_cols, any_different_cols
-    )
-
-    def side(pop: DataFrame, id_name: str, prefix: str) -> DataFrame:
-        return pop.select(
-            *same_cols,
-            F.col(id_col).alias(id_name),
-            *[F.col(c).alias(f"{prefix}{c}") for c in diff_cols],
-        )
-
-    return (
-        side(left, "id1", "_l_")
-        .join(side(right, "id2", "_r_"), same_cols)
-        .filter((F.col("id1") != F.col("id2")) & different)
-        .select("id1", "id2")
-    )
 
 
 def sim_collate(
@@ -103,7 +80,7 @@ def sim_collate(
     reference rows stay on specific pair sides:
     - ref      : LEFT side keeps reference rows, so ref×ref pairs that
                  are NOT rep_ref pairs (e.g. same plate, different
-                 perturbation) remain typed 'ref' after the anti-join
+                 perturbation) remain typed 'ref' under the rep_ref rule
                  (R/sim_collate.R:281-287 keep_some with
                  drop_reference=FALSE; anti-join at :388-395).
     - non_rep  : LEFT keeps reference rows, RIGHT drops them — the
@@ -120,58 +97,70 @@ def sim_collate(
         meta = meta.join(
             F.broadcast(drop_group_spec), on=drop_group_spec.columns, how="left_anti"
         )
+    # the ref rule's flag: a NULL reference flag is not a reference row
+    meta = meta.withColumn("_ref", F.coalesce(reference, F.lit(False)))
     non_ref = meta.filter(~reference)
     refs = meta.filter(reference)
 
+    # rep_ref: replicate pairs among reference rows, tagged 'rep'
+    # (R/sim_collate.R:366-396). Its key may legitimately be FINER than
+    # the rep key (the reference's cellhealthmetrics pipeline adds
+    # Metadata_Plate, data-raw/cellhealthmetrics.R:47-52); defaults to the
+    # rep key.
+    rep_ref_key = all_same_cols_rep_ref or all_same_cols_rep
+    rep_ref_pairs = within_group_pairs(
+        refs, rep_ref_key, id_col=id_col
+    ).withColumn("type", F.lit("rep"))
+
     # ref: (all | non-ref) side × reference side, same partition key;
-    # reference side is tiny → broadcast (R/sim_collate.R:277-288)
-    ref_pairs = vs_reference_pairs(
-        meta,
-        reference,
-        same_cols=all_same_cols_ref,
+    # the reference side is tiny → broadcast (R/sim_collate.R:277-288).
+    # The rep_ref rule (module docstring) drops the rep_ref pairs; each
+    # comparison is coalesced to false BEFORE the negation.
+    is_rep_ref = reduce(
+        and_,
+        [
+            F.coalesce(F.col(f"_l_{c}") == F.col(f"_r_{c}"), F.lit(False))
+            for c in rep_ref_key
+        ],
+        F.col("_l__ref"),
+    )
+    ref_pairs = within_group_pairs(
+        non_ref if drop_reference else meta,
+        all_same_cols_ref,
+        F.broadcast(refs),
+        ["_ref", *rep_ref_key],
+        ~is_rep_ref,
         id_col=id_col,
-        include_ref_left=not drop_reference,
     ).withColumn("type", F.lit("ref"))
 
     # rep: replicate pairs among non-reference rows (both directions,
     # R/sim_collate.R:311-345), optionally constrained to differ on
     # any_different_cols_rep / all_different_cols_rep
     # (R/sim_collate.R:325-345, e.g. "replicates must sit on different
-    # plates") — the same theta join as the non_rep subset.
-    rep_pairs = _theta_pairs(
-        non_ref,
+    # plates"). `_different` supplies the (carry, keep) of the theta rule.
+    rep_pairs = within_group_pairs(
         non_ref,
         all_same_cols_rep,
-        all_different_cols=all_different_cols_rep,
-        any_different_cols=any_different_cols_rep,
+        non_ref,
+        *_different(
+            all_same_cols_rep, all_different_cols_rep, any_different_cols_rep
+        ),
         id_col=id_col,
     ).withColumn("type", F.lit("rep"))
-
-    # rep_ref: replicate pairs among reference rows, tagged 'rep'
-    # (R/sim_collate.R:366-396); deduped out of ref below. Its key may
-    # legitimately be FINER than the rep key (the reference's
-    # cellhealthmetrics pipeline adds Metadata_Plate,
-    # data-raw/cellhealthmetrics.R:47-52); defaults to the rep key.
-    rep_ref_pairs = within_group_pairs(
-        refs, all_same_cols_rep_ref or all_same_cols_rep, id_col=id_col
-    ).withColumn("type", F.lit("rep"))
-
-    # dedup overlap: ref pairs that are also rep_ref pairs are dropped
-    # from ref so they are not double-counted (R/sim_collate.R:387-395)
-    ref_pairs = ref_pairs.join(
-        rep_ref_pairs.select("id1", "id2"), ["id1", "id2"], "left_anti"
-    )
 
     # non_rep: background — same partition, different perturbation,
     # optionally all-different on every all_different_cols_non_rep
     # (R/sim_collate.R:419-438; the reference's fetch_non_rep gate at
     # :231-234 requires all three constraint sets)
-    non_rep_pairs = _theta_pairs(
+    non_rep_pairs = within_group_pairs(
         non_ref if drop_reference else meta,
-        non_ref,
         all_same_cols_non_rep,
-        all_different_cols=all_different_cols_non_rep,
-        any_different_cols=any_different_cols_non_rep,
+        non_ref,
+        *_different(
+            all_same_cols_non_rep,
+            all_different_cols_non_rep,
+            any_different_cols_non_rep,
+        ),
         id_col=id_col,
     ).withColumn("type", F.lit("non_rep"))
 
@@ -182,11 +171,11 @@ def sim_collate(
 
     if all_same_cols_group:
         group_pop = non_ref if drop_reference else meta
-        rep_group_pairs = _theta_pairs(
-            group_pop,
+        rep_group_pairs = within_group_pairs(
             group_pop,
             all_same_cols_group,
-            any_different_cols=any_different_cols_group,
+            group_pop,
+            *_different(all_same_cols_group, None, any_different_cols_group),
             id_col=id_col,
         ).withColumn("type", F.lit("rep_group"))
         out = out.unionByName(rep_group_pairs)

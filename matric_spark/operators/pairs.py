@@ -4,9 +4,11 @@ The reference's three execution strategies map to Spark like this:
 - eager all-pairs (R/sim_calculate.R:80-161): `all_pairs` = crossJoin
   minus diagonal. O(N²) — correctness baseline only.
 - optimized pair-gen (R/sim_calculate.R:162-301): never materialize N²;
-  `within_group_pairs` is a self-equi-join on the partition key (the
-  single most important pattern per SURVEY §2.3), `vs_reference_pairs`
-  broadcasts the small reference side. These are the 100 TB paths.
+  `within_group_pairs` is an equi-join on the partition key (the single
+  most important pattern per SURVEY §2.3). It is the one pair builder:
+  `sim_calculate`'s strata and every `collate.sim_collate` subset
+  (a broadcast reference side for `ref`) go through it. These are the
+  100 TB paths.
 - lazy (R/sim_calculate.R:150,296-298): Spark is lazy by construction —
   a pair DataFrame without `sim` *is* the lazy index; `attach_sim`
   plays `sim_calculate_ij` (R/sim_calculate.R:362-426): join the pair
@@ -67,39 +69,35 @@ def all_pairs(pop: DataFrame, id_col: str = "id") -> DataFrame:
 
 
 def within_group_pairs(
-    pop: DataFrame, same_cols: list[str], id_col: str = "id"
-) -> DataFrame:
-    """Pairs agreeing on all `same_cols`: per-group self cross product
-    via equi-join (R/sim_calculate.R:177-191 reduct_all_same_cols_*).
-    Shuffle is keyed on the group columns — never a cross join."""
-    a = pop.select(*same_cols, F.col(id_col).alias("id1"))
-    b = pop.select(*same_cols, F.col(id_col).alias("id2"))
-    return (
-        a.join(b, same_cols)
-        .filter(F.col("id1") != F.col("id2"))
-        .select("id1", "id2")
-    )
-
-
-def vs_reference_pairs(
     pop: DataFrame,
-    reference: F.Column,
-    same_cols: list[str] | None = None,
+    same_cols: list[str] | None,
+    right: DataFrame | None = None,
+    carry: list[str] | None = None,
+    keep: F.Column | None = None,
     id_col: str = "id",
-    include_ref_left: bool = False,
 ) -> DataFrame:
-    """(non-reference | all) × reference pairs, optionally constrained to
-    agree on `same_cols` (R/sim_calculate.R:193-233). The reference side
-    is small by construction → broadcast join."""
-    refs = pop.filter(reference)
-    left = pop if include_ref_left else pop.filter(~reference)
-    same_cols = same_cols or []
-    a = left.select(*same_cols, F.col(id_col).alias("id1"))
-    b = refs.select(*same_cols, F.col(id_col).alias("id2"))
-    joined = a.join(F.broadcast(b), same_cols) if same_cols else a.crossJoin(
-        F.broadcast(b)
-    )
-    return joined.filter(F.col("id1") != F.col("id2")).select("id1", "id2")
+    """(id1 from `pop`, id2 from `right`, default `pop`) pairs agreeing on
+    every `same_cols`: ONE equi-join on the group key
+    (R/sim_calculate.R:177-191 reduct_all_same_cols_*), so the shuffle is
+    keyed on the group columns; without a key, a cross join (wrap a small
+    `right` in F.broadcast). Both sides carry each `carry` column as
+    `_l_<c>`/`_r_<c>`, and `keep`, a predicate over those copies, filters
+    the join output, so a pair rule never joins the pairs back to the
+    metadata (sim_filter._different, collate's ref rule)."""
+    right = pop if right is None else right
+    same_cols, carry = same_cols or [], carry or []
+
+    def side(df: DataFrame, id_name: str, prefix: str) -> DataFrame:
+        return df.select(
+            *same_cols,
+            F.col(id_col).alias(id_name),
+            *[F.col(c).alias(f"{prefix}{c}") for c in carry],
+        )
+
+    a, b = side(pop, "id1", "_l_"), side(right, "id2", "_r_")
+    joined = a.join(b, same_cols) if same_cols else a.crossJoin(b)
+    pred = F.col("id1") != F.col("id2")
+    return joined.filter(pred if keep is None else pred & keep).select("id1", "id2")
 
 
 def _preprocess_features(

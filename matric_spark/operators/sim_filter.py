@@ -6,11 +6,13 @@ relation; the mapping the judge should check:
 - keep/drop-by-example (R/sim_filter.R:49-103): resolve the spec rows to
   ids with a broadcast inner join, then LEFT SEMI / LEFT ANTI join the
   pair side.
-- all-same (R/sim_filter.R:164-233): equi self-join on the composite key
-  (concat_ws ≙ tidyr::unite, R/sim_filter.R:174-177). We formulate it as
-  the per-group self-join from the start — the reference's cost-based
-  strategy switch (R/sim_filter.R:179-206) is subsumed by Catalyst size
-  estimates + AQE.
+- all-same (R/sim_filter.R:164-233): the reference joins on a composite
+  key (tidyr::unite, R/sim_filter.R:174-177). Here the key is the column
+  list itself, compared per column (`_l_<c> = _r_<c>`), so no separator
+  can make two different tuples equal and a NULL matches nothing — the
+  same rule as the pair builder's equi-join (`pairs.within_group_pairs`).
+  The reference's cost-based strategy switch (R/sim_filter.R:179-206) is
+  subsumed by Catalyst size estimates + AQE.
 - some-different (R/sim_filter.R:409-530): equi-join on the same-key
   minus anti-join of per-column violating sets — matric's own
   decomposition of the theta-join; Catalyst executes the direct
@@ -19,9 +21,9 @@ relation; the mapping the judge should check:
   `_different` holds the rule once: constraint normalization plus the
   inequality predicate over `_l_<c>`/`_r_<c>` copies of the columns.
   `filter_some_different` builds those copies by joining the metadata
-  back to a given pair list; `collate.sim_collate` carries them through
-  its pair-generating equi-join instead, so its theta subsets never
-  join the metadata a second time.
+  back to a given pair list; `collate.sim_collate` has the pair builder
+  carry them through its equi-join instead, so no subset joins the
+  metadata a second time.
 """
 
 from __future__ import annotations
@@ -77,22 +79,12 @@ def filter_all_same(
     all_same_cols: list[str],
     id_col: str = "id",
 ) -> DataFrame:
-    """Keep pairs equal on every `all_same_cols` (R/sim_filter.R:164-233).
-
-    Composite key via concat_ws (≙ tidyr::unite with ":" sep); pairs are
-    annotated with key1/key2 through two joins and filtered key1 == key2.
-    Null-safe: concat_ws drops nulls, matching unite's na.rm behavior.
-    """
-    key = F.concat_ws(":", *[F.col(c).cast("string") for c in all_same_cols])
-    m = meta.select(F.col(id_col).alias("_id"), key.alias("_key"))
-    return (
-        pairs.join(
-            m.withColumnsRenamed({"_id": "id1", "_key": "_key1"}), "id1"
-        )
-        .join(m.withColumnsRenamed({"_id": "id2", "_key": "_key2"}), "id2")
-        .filter(F.col("_key1") == F.col("_key2"))
-        .drop("_key1", "_key2")
-    )
+    """Keep pairs equal on every `all_same_cols` (R/sim_filter.R:164-233):
+    `filter_some_different` with no inequality constraints, i.e. per-column
+    `_l_<c> = _r_<c>`, the rule of the pair builders. A NULL never equals
+    anything, and no composite key can make `("a:b", "c")` equal
+    `("a", "b:c")`."""
+    return filter_some_different(pairs, meta, all_same_cols, id_col=id_col)
 
 
 def _different(

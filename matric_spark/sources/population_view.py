@@ -19,16 +19,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-POPULATION_SQL = """
-SELECT vec_id AS id,
-       embedding,
-       label,
-       label % 5 AS gene,
-       vec_id % 4 AS batch,
-       label = 0 AS is_ref
-FROM embeddings
-"""
-
 
 def population_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     # deliberately NOT rebalance_small_scan'd: the population is consumed

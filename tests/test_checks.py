@@ -11,7 +11,7 @@ from matric_spark.checks.column_stats import column_stats
 from matric_spark.checks.drift import counts_sketch, drift_by_partition, entropy_by_partition
 from matric_spark.checks.sequence import conversation_shape, out_of_order_turns, text_parity
 from matric_spark.checks.suite import SuiteConfig, run_verdicts, run_violations
-from matric_spark.checks.uniqueness import duplicate_keys, uniqueness_violations
+from matric_spark.checks.uniqueness import duplicate_keys
 
 
 def test_column_stats(tiny_transcripts):
@@ -35,7 +35,7 @@ def test_duplicate_keys_and_violation_rows(tiny_transcripts):
     key = ["conv_id", "turn_idx"]
     got = sorted(map(tuple, duplicate_keys(tiny_transcripts, key).collect()))
     assert got == [("B", 1, 2)]
-    rows = uniqueness_violations(tiny_transcripts, key).collect()
+    rows = run_violations(tiny_transcripts)["uniqueness"].collect()
     assert len(rows) == 2 and all(r["conv_id"] == "B" and r["turn_idx"] == 1 for r in rows)
 
 
@@ -43,8 +43,9 @@ def test_uniqueness_null_keys_excluded(spark):
     """NULL-containing key tuples are excluded from uniqueness accounting
     in EVERY formulation (module-docstring contract): Window.partitionBy
     groups NULLs together, so without the null-key mask the window-based
-    verdict path would report NULL-key 'duplicates' the join-based path
-    (and the DuckDB oracle's JOIN USING) can never match."""
+    verdict path and the violation rows would report NULL-key 'duplicates'
+    that the hash-first key count (and the DuckDB oracle's JOIN USING)
+    can never match."""
     from matric_spark.checks.suite import SuiteConfig, check_counts
 
     rows = [
@@ -61,10 +62,10 @@ def test_uniqueness_null_keys_excluded(spark):
     key = ["conv_id", "turn_idx"]
     got = sorted(map(tuple, duplicate_keys(df, key).collect()))
     assert got == [("A", 0, 2)]
-    viol = uniqueness_violations(df, key).collect()
-    assert sorted(r["text"] for r in viol) == ["x", "y"]
-    # window-based verdict path agrees with the join-based path
     with_ts = df.withColumn("ts", F.lit(None).cast("timestamp"))
+    viol = run_violations(with_ts)["uniqueness"].collect()
+    assert sorted(r["text"] for r in viol) == ["x", "y"]
+    # the verdict counts agree with the hash-first key count
     counts = {r["part"]: r["uniqueness"] for r in
               check_counts(with_ts, SuiteConfig()).collect()}
     assert counts == {1: 2}

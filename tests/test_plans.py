@@ -306,22 +306,36 @@ def _nodes_below(p: str, name: str) -> set[str]:
 
 
 def test_collate_theta_subsets_join_metadata_once(spark, sf_dir):
-    """Each theta subset of sim_collate (here non_rep: same batch,
-    different label) is ONE equi-join on its same-key whose sides carry
-    the inequality columns: no pair list below the Union is joined back
-    to the metadata on id1/id2. Parent plan: 14 parquet scans, 9
-    broadcast exchanges, 9 broadcast hash joins (the non_rep re-joins)."""
+    """Every sim_collate subset is ONE equi-join on its same-key whose
+    sides carry the columns its pair rule reads (the theta inequalities,
+    the ref subset's rep_ref rule): no pair list below the Union is
+    joined back to the metadata or to another pair list on id1/id2, by a
+    join of any type. Parent plans: 14 parquet scans / 9 broadcast
+    exchanges / 9 broadcast hash joins with the non_rep re-joins, then
+    12/7/7 plus a sort-merge left_anti join and 3 shuffle exchanges with
+    the ref anti-join."""
     import __spark_entry__ as e
 
     p = plan(e._collated_sims(spark, sf_dir))
-    assert len(re.findall(r"\n\(\d+\) Scan parquet", p)) <= 12
-    assert len(re.findall(r"\n\(\d+\) BroadcastExchange\n", p)) <= 7
-    assert len(re.findall(r"\n\(\d+\) BroadcastHashJoin\n", p)) <= 7
+    assert len(re.findall(r"\n\(\d+\) Scan parquet", p)) <= 10
+    assert len(re.findall(r"\n\(\d+\) BroadcastExchange\n", p)) <= 6
+    assert len(re.findall(r"\n\(\d+\) BroadcastHashJoin\n", p)) <= 6
+    assert "SortMergeJoin" not in p
+    assert len(re.findall(r"\n\(\d+\) Exchange\n", p)) <= 1
     for node in _nodes_below(p, "Union"):
         m = re.search(rf"\n\({node}\) \w*Join\n(.*?)(?=\n\n|\Z)", p, re.S)
-        if m and "Join type: Inner" in m.group(1):
-            keys = re.search(r"Left keys \[\d+\]: \[(.*?)\]", m.group(1))
-            assert not (keys and re.search(r"\bid[12]#", keys.group(1))), m.group(0)
+        keys = m and re.search(r"Left keys \[\d+\]: \[(.*?)\]", m.group(1))
+        assert not (keys and re.search(r"\bid[12]#", keys.group(1))), m.group(0)
+
+
+def test_uniqueness_violation_rows_filter_the_flag_pass(spark, transcripts_parquet):
+    """The uniqueness violation rows are the verdicts' own flag pass,
+    filtered: no key hash and no join."""
+    from matric_spark.checks.suite import run_violations
+
+    p = plan(run_violations(spark.read.parquet(transcripts_parquet))["uniqueness"])
+    assert "xxhash64" not in p and "Join" not in p
+    assert "Window" in p
 
 
 def test_pvalues_need_no_python_worker(spark, sf_dir):

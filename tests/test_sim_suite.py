@@ -206,6 +206,21 @@ def test_optimized_equals_eager_restricted(spark, population):
     assert a == b
 
 
+def test_filter_all_same_compares_per_column(spark):
+    """all-same compares each column (`_l_c = _r_c`), as the pair builder's
+    equi-join does: a ":"-joined composite key would make ("a:b", "c")
+    equal ("a", "b:c") and (NULL, "x") equal ("x", NULL)."""
+    from matric_spark.operators.pairs import all_pairs, within_group_pairs
+    from matric_spark.operators.sim_filter import filter_all_same
+
+    pop = spark.createDataFrame(
+        [(1, "a:b", "c"), (2, "a", "b:c"), (3, None, "x"), (4, "x", None)],
+        "id long, a string, b string",
+    )
+    assert filter_all_same(all_pairs(pop), pop, ["a", "b"]).collect() == []
+    assert within_group_pairs(pop, ["a", "b"]).collect() == []
+
+
 def test_filter_suite(spark, population):
     from matric_spark.operators.pairs import all_pairs
     from matric_spark.operators.sim_filter import (
@@ -357,6 +372,73 @@ def test_collate_types(spark):
     # batch0 non-refs: 2(l1),4(l2),6(l1) → 4 cross-label ordered pairs;
     # batch1 non-refs: 3(l1),5(l2),7(l2) → 4
     assert counts["non_rep"] == 8
+
+
+def test_collate_ref_subset_drops_rep_ref_pairs(spark):
+    """Hand-computed `ref` subset (R/sim_collate.R:277-288, rep_ref pairs
+    dropped at :387-395) under both drop_reference values, with and
+    without all_same_cols_ref. Reference rows carry two labels, so some
+    ref×ref pairs are not rep_ref pairs; a NULL rep_ref key and a NULL
+    reference flag never make a rep_ref pair."""
+    from matric_spark.operators.collate import sim_collate
+
+    rows = [  # (id, label, plate, is_ref)
+        (1, "A", 1, True),
+        (2, "A", 1, True),
+        (3, "B", 1, True),
+        (4, None, 1, True),  # NULL rep_ref key on a reference row
+        (5, "X", 1, False),
+        (6, "X", 2, False),
+        (7, "A", 1, None),  # NULL reference flag, a reference label
+        (8, "A", 2, True),
+    ]
+    meta = spark.createDataFrame(
+        rows, "id long, label string, plate int, is_ref boolean"
+    )
+
+    def typed(drop_reference, ref_key):
+        coll = sim_collate(
+            meta,
+            reference=F.col("is_ref"),
+            all_same_cols_ref=ref_key,
+            all_same_cols_rep=["label"],
+            all_same_cols_non_rep=["plate"],
+            any_different_cols_non_rep=["label"],
+            drop_reference=drop_reference,
+        )
+        out = {"ref": set(), "rep": set(), "non_rep": set()}
+        for r in coll.collect():
+            out[r.type].add((r.id1, r.id2))
+        return out
+
+    refs = {1, 2, 3, 4, 8}
+    rep_ref = {(1, 2), (2, 1), (1, 8), (8, 1), (2, 8), (8, 2)}  # label A
+    rep = {(5, 6), (6, 5)} | rep_ref
+
+    got = typed(False, ["plate"])
+    assert got["ref"] == {
+        (1, 3), (1, 4), (2, 3), (2, 4),  # (1, 2), (2, 1) are rep_ref
+        (3, 1), (3, 2), (3, 4),
+        (4, 1), (4, 2), (4, 3),
+        (5, 1), (5, 2), (5, 3), (5, 4),
+        (7, 1), (7, 2), (7, 3), (7, 4),
+        (6, 8),
+    }
+    assert got["rep"] == rep
+    assert got["non_rep"] == {(1, 5), (2, 5), (3, 5), (7, 5), (8, 6)}
+
+    got = typed(True, ["plate"])
+    assert got["ref"] == {(5, 1), (5, 2), (5, 3), (5, 4), (6, 8)}
+    assert got["rep"] == rep
+
+    # all_same_cols_ref=None: every left row × every reference row
+    got = typed(False, None)
+    assert got["ref"] == {
+        (i, j) for i in range(1, 9) for j in refs if i != j
+    } - rep_ref
+    assert len(got["ref"]) == 29
+    got = typed(True, None)
+    assert got["ref"] == {(i, j) for i in (5, 6) for j in refs}
 
 
 def test_r_precision_edges(spark):
